@@ -8,7 +8,7 @@ Env: ``SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1),
 ``SPARK_GRAFT_CPUS`` (default 32).
 
 The suite mirrors the reference's batch stage shape (BASELINE.md): the
-max-zoom aggregation, the full cascade rollup, buffer fan-out + MVT
+max-zoom aggregation, the full span rollup, buffer fan-out + MVT
 encode, then the serving/adhoc query family and the training-data ops.
 """
 
@@ -189,16 +189,10 @@ def run() -> None:
 
     @timed("mvt_encode_z6")
     def _4():
-        # the default (flat streaming) encoder
+        # the engine's one (flat streaming) encoder over one zoom
         pix = PY.pixel_table(keyed, "EPSG:3857", 6)
-        PY.build_zoom(pix, "EPSG:3857", 6).count()
-
-    @timed("mvt_encode_z6_collect_list")
-    def _4b():
-        # the collect_list variant, kept in the bench so encoder
-        # regressions stay visible round over round
-        pix = PY.pixel_table(keyed, "EPSG:3857", 6)
-        PY.encode_mvt(PY.tile_rows(pix, "EPSG:3857", 6), 6).count()
+        PY.encode_mvt(PY.tile_rows(pix, "EPSG:3857", 6)
+                      .withColumn("z", F.lit(6))).count()
 
     @timed("backfill_z0_10_3857", n=2)
     def _4c():
@@ -373,7 +367,7 @@ def run() -> None:
             large, small = PY.split_views(k4, 10_000)
             tile_store.write_points(PY.point_blobs(small), out)
             tiles = PY.build_pyramid(large, "EPSG:3857", 10)
-            tile_store.write_tiles(tiles, out)
+            tile_store.write_tiles(tiles, out, "EPSG:3857")
             PY.unpersist_pyramid(tiles)
         finally:
             shutil.rmtree(out, ignore_errors=True)
@@ -406,7 +400,7 @@ def run() -> None:
             tile_store.write_points(PY.point_blobs(small), out)
             tiles = PY.build_pyramid(large, "EPSG:3857", 10,
                                      rss_log=rss)
-            tile_store.write_tiles(tiles, out)
+            tile_store.write_tiles(tiles, out, "EPSG:3857")
             PY.unpersist_pyramid(tiles)
             _record_span_rss("backfill_z10_8x", rss)
         finally:
@@ -442,7 +436,7 @@ def run() -> None:
             tile_store.write_points(PY.point_blobs(small), out)
             tiles = PY.build_pyramid(large, "EPSG:3857", 10,
                                      rss_log=rss)
-            tile_store.write_tiles(tiles, out)
+            tile_store.write_tiles(tiles, out, "EPSG:3857")
             PY.unpersist_pyramid(tiles)
             _record_span_rss("backfill_z10_16x", rss)
         finally:
@@ -474,7 +468,7 @@ def run() -> None:
             large, small = PY.split_views(ks, 10_000)
             tile_store.write_points(PY.point_blobs(small), out)
             tiles = PY.build_pyramid(large, "EPSG:3857", 10)
-            tile_store.write_tiles(tiles, out)
+            tile_store.write_tiles(tiles, out, "EPSG:3857")
             PY.unpersist_pyramid(tiles)
         finally:
             shutil.rmtree(out, ignore_errors=True)

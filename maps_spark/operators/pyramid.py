@@ -6,23 +6,30 @@ Spark's execution model):
 1. ``keyed_occurrence`` — one explode of the map-key array (the only
    row-multiplying op) + borYear packing. Catalyst prunes all unused
    occurrence columns past this point.
-2. ``pixel_table`` — project to global pixels at max zoom, then
-   ``groupBy(mapKey, px, py, borYear).count()``. This is the big shuffle;
-   the group key is high-cardinality (pixels), so there is no skew even
-   though map key ``0:0`` contains every record.
-3. ``rollup`` — zoom z from zoom z+1 by halving pixel addresses and
-   summing counts. **Scale note:** the reference re-aggregates every zoom
-   from the staged max-zoom table (17 full scans at z16..z0;
-   TileMapBuilder.java:173-204). Because ``sum`` is associative, we
-   cascade each zoom from the previous zoom's (much smaller) result —
-   shuffle volume decays geometrically instead of staying O(input) per
-   zoom. Results are identical; invariant parent == sum(children) holds
-   by construction.
-4. ``tile_rows`` — explode each pixel to its <= 4 target tiles (buffer
-   duplication, TileXYUDF semantics) — integer Column expressions only.
-5. ``encode_mvt`` — Arrow-batched grouped encode to MVT bytes, the one
-   deliberate Python boundary (mirrors the reference's own SQL->RDD
-   boundary at TileMapBuilder.java:216-229).
+2. ``pyramid_span_parents`` — project to global pixels at max zoom and
+   hash-partition by the ancestor pixel ``span`` zooms up: every
+   (mapKey, pixel, borYear) group of the span's levels lands in one
+   partition, so one Arrow pass counts the max-zoom pixels and halves +
+   re-sums them down ``span`` levels with no further shuffle; the next
+   span starts from this one's deepest level. **Scale note:** the
+   reference re-aggregates every zoom from the staged max-zoom table
+   (17 full scans at z16..z0; TileMapBuilder.java:173-204); here a z16
+   pyramid costs 3 shuffles. ``sum`` is associative, so the levels equal
+   the per-zoom cascade of ``rollup`` exactly, and parent ==
+   sum(children) holds by construction. The partition key is
+   high-cardinality (pixels), so there is no skew even though map key
+   ``0:0`` contains every record.
+3. tile fan-out — each span parent is scanned once and every pixel
+   explodes to its <= 4 target tiles (buffer duplication, TileXYUDF
+   semantics) — integer Column expressions only.
+4. ``encode_mvt`` — the tile rows of ALL zooms encode to MVT bytes in
+   one shuffle + one Arrow pass, the one deliberate Python boundary
+   (mirrors the reference's own SQL->RDD boundary at
+   TileMapBuilder.java:216-229).
+
+``pixel_table``, ``rollup`` and ``tile_rows`` are the single-zoom forms
+of steps 2-3, used where one zoom is all that is needed (the streaming
+refresh, the correctness gates).
 
 The pyramid/point split (MapBuilder.java:205-229) is a broadcast
 semi/anti join against the per-view counts instead of a driver-side
@@ -148,77 +155,22 @@ def tile_rows(pixels: DataFrame, srs: str, z: int,
     return T.explode_to_tiles(pixels, srs, z, tile_size, buffer)
 
 
-def encode_mvt(trows: DataFrame, z: int,
-               tile_size: int = P.TILE_SIZE) -> DataFrame:
-    """MVT encode: assemble per-tile feature arrays JVM-side
-    (``collect_list`` — the reference's A4/A5 stage), then stream tiles
-    through ``mapInPandas`` with many tiles per Arrow batch.
+def encode_mvt(trows_z: DataFrame,
+                tile_size: int = P.TILE_SIZE,
+                partitions: int | None = None) -> DataFrame:
+    """MVT encode of tile rows that carry a ``z`` column (one zoom or
+    many): hash-partition + sort by (z, mapKey, tileX, tileY), stream
+    flat Arrow batches through ``mapInPandas`` and cut tile groups at
+    key-change boundaries (carrying split groups across batches). A
+    whole pyramid encodes in one shuffle + one Arrow pass — the one
+    deliberate Python boundary (the reference's own SQL->RDD boundary,
+    TileMapBuilder.java:216-229).
 
-    Deliberately NOT ``applyInPandas`` per tile group: a pyramid zoom
-    has millions of small tiles and per-group pandas overhead dwarfs the
-    encode (measured 20x slower at bench scale).
-    """
-    bor_names = {c: b for b, c in dual.BOR_CODE.items()}
-    # column-aligned collect_lists (all evaluated over the same input
-    # row order within a group): Arrow delivers plain int lists, never
-    # materializing a python dict per feature like array<struct> would
-    assembled = (trows.groupBy("mapKey", "tileX", "tileY")
-                 .agg(F.collect_list("pixelX").alias("fx"),
-                      F.collect_list("pixelY").alias("fy"),
-                      F.collect_list("borYear").alias("fb"),
-                      F.collect_list("cnt").alias("fc")))
-
-    def enc_batches(batches):
-        for pdf in batches:
-            out_bytes = []
-            for fx, fy, fb, fc in zip(pdf["fx"], pdf["fy"], pdf["fb"],
-                                      pdf["fc"]):
-                layers: dict[str, dict[tuple[int, int], dict[str, int]]] = {}
-                for px_, py_, by, cnt in zip(fx.tolist(), fy.tolist(),
-                                             fb.tolist(), fc.tolist()):
-                    pix = layers.setdefault(
-                        bor_names.get(by % 100, "UNKNOWN"), {}).setdefault(
-                        (px_, py_), {})
-                    year = str(by // 100)
-                    pix[year] = pix.get(year, 0) + cnt
-                out_bytes.append(mvt.encode_tile(
-                    {bor: [(x, y, attrs) for (x, y), attrs in pix.items()]
-                     for bor, pix in layers.items()},
-                    extent=tile_size))
-            yield pd.DataFrame({"mapKey": pdf["mapKey"],
-                                "z": z, "x": pdf["tileX"],
-                                "y": pdf["tileY"], "tile": out_bytes})
-
-    return assembled.mapInPandas(enc_batches, TILE_SCHEMA)
-
-
-def encode_mvt_flat(trows: DataFrame, z: int,
-                    tile_size: int = P.TILE_SIZE,
-                    partitions: int | None = None) -> DataFrame:
-    """MVT encode without nested assembly: hash-partition by tile key,
-    sort within partitions, stream flat Arrow batches and cut tile
-    groups at key-change boundaries (carrying split groups across
-    batches). Skips the JVM ``collect_list`` array build and the
-    per-feature dict access on nested rows — columns arrive as flat
-    numpy arrays.
-
-    Same single shuffle as :func:`encode_mvt`; the shuffle payload is
-    flat columns instead of array<struct> blobs. Delegates to
-    :func:`encode_mvt_flat_multi` with a constant ``z`` (the constant
-    key neither changes the hash distribution nor the sort).
-    """
-    return encode_mvt_flat_multi(trows.withColumn("z", F.lit(z)),
-                                 tile_size, partitions)
-
-
-def encode_mvt_flat_multi(trows_z: DataFrame,
-                          tile_size: int = P.TILE_SIZE,
-                          partitions: int | None = None) -> DataFrame:
-    """Flat streaming MVT encode over MULTI-ZOOM tile rows (input
-    carries a ``z`` column): one hash-partition + sort keyed by
-    (z, mapKey, tileX, tileY) encodes the entire pyramid in a single
-    shuffle + single Arrow pass, instead of one shuffle and one Python
-    stage per zoom. Same per-tile bytes as :func:`encode_mvt_flat`.
+    Flat columns, not per-tile ``collect_list`` arrays (1.5-1.8x faster
+    at sf0.1, and the z16 ``0:0`` hot view cannot blow an executor on
+    one giant array row); many tiles per Arrow batch, not
+    ``applyInPandas`` per tile group (per-group pandas overhead dwarfs
+    the encode at millions of small tiles).
     """
     bor_names = {c: b for b, c in dual.BOR_CODE.items()}
     n_parts = (partitions or
@@ -293,32 +245,6 @@ def encode_mvt_flat_multi(trows_z: DataFrame,
             yield emit(carry.reset_index(drop=True))
 
     return arranged.mapInPandas(enc_stream, out_schema)
-
-
-def build_zoom(pixels_at_z: DataFrame, srs: str, z: int,
-               tile_size: int = P.TILE_SIZE,
-               buffer: int = T.DEFAULT_BUFFER) -> DataFrame:
-    """Pixel table at z -> encoded MVT tiles at z.
-
-    Uses the flat streaming encoder: benchmarked 1.5-1.8x faster than
-    the ``collect_list`` variant at 1.5M tile-rows (sf0.1, z8/z11 —
-    2.7s vs 4.1s and 2.3s vs 4.0s), and it never materializes per-tile
-    arrays, so the z16 ``0:0`` hot view cannot blow an executor on one
-    giant array row."""
-    return encode_mvt_flat(tile_rows(pixels_at_z, srs, z, tile_size, buffer),
-                           z, tile_size)
-
-
-def pyramid_pixels(keyed: DataFrame, srs: str, max_zoom: int,
-                   min_zoom: int = 0, tile_size: int = P.TILE_SIZE
-                   ) -> Iterator[tuple[int, DataFrame]]:
-    """Yield (z, pixel_table_at_z) from max_zoom down to min_zoom,
-    cascading each level from the previous."""
-    pixels = pixel_table(keyed, srs, max_zoom, tile_size)
-    yield max_zoom, pixels
-    for z in range(max_zoom - 1, min_zoom - 1, -1):
-        pixels = rollup(pixels, 1)
-        yield z, pixels
 
 
 PIXEL_Z_SCHEMA = ("mapKey string, px long, py long, borYear int, "
@@ -542,85 +468,62 @@ def pyramid_span_parents(keyed: DataFrame, srs: str, max_zoom: int,
 def build_pyramid(keyed: DataFrame, srs: str, max_zoom: int,
                   min_zoom: int = 0, tile_size: int = P.TILE_SIZE,
                   buffer: int = T.DEFAULT_BUFFER,
-                  strategy: str = "spans_multi",
                   dictionary: bool = False,
                   stage_dir: str | None = None,
                   rss_log: str | None = None) -> DataFrame:
     """Full pyramid as one DataFrame of (srs, mapKey, z, x, y, tile).
 
-    ``strategy="spans_multi"`` (default) builds all pixel levels with
-    ~3 shuffles via :func:`pyramid_pixels_spans` AND encodes every
-    zoom's tiles in one further shuffle + one Arrow pass
-    (:func:`encode_mvt_flat_multi`) — measured 15-20% faster than
-    per-zoom encodes at sf0.1/z10 and, at cluster scale, one stage
-    barrier instead of ``max_zoom+1``. ``"spans"`` keeps the per-zoom
-    encode; ``"cascade"`` is the one-shuffle-per-zoom reference shape
-    (TileMapBuilder.java:173-204) kept for comparison. Span parents are
+    Builds all pixel levels with ~3 shuffles
+    (:func:`pyramid_span_parents`), fans each span parent out to its
+    tiles in one scan, and encodes every zoom's tiles in one further
+    shuffle + one Arrow pass (:func:`encode_mvt`) — measured 15-20%
+    faster than per-zoom encodes at sf0.1/z10 and, at cluster scale,
+    one stage barrier instead of ``max_zoom+1``. Span parents are
     persisted; ``stage_dir`` swaps that for RELIABLE staged Parquet
     tables (the reference's TileMapBuilder.java:164-169 barrier) —
     the mode a cluster deployment should run, since persisted blocks
-    die with their executor (see :func:`pyramid_span_parents`).
+    die with their executor.
 
-    ``dictionary=True`` (spans_multi only) applies the reference's A15
-    pre-shuffle dictionary encode (TileMapBuilder.java:56-61) across
-    the WHOLE pipeline: map keys travel every shuffle — the span
-    repartitions AND the pyramid-wide encode shuffle — as ints, and
-    the strings come back via one broadcast join over the (far
-    smaller) encoded-tile rows. ~12-20 bytes/key becomes 4 at billions
-    of fan-out rows; locally it is noise, which is why it is opt-in.
+    ``dictionary=True`` applies the reference's A15 pre-shuffle
+    dictionary encode (TileMapBuilder.java:56-61) across the WHOLE
+    pipeline: map keys travel every shuffle — the span repartitions
+    AND the pyramid-wide encode shuffle — as ints, and the strings come
+    back via one broadcast join over the (far smaller) encoded-tile
+    rows. ~12-20 bytes/key becomes 4 at billions of fan-out rows;
+    locally it is noise, which is why it is opt-in.
     """
-    persisted: list[DataFrame] = []
-    if dictionary and strategy == "spans_multi":
+    if dictionary:
         dict_df, keyed = dictionary_encode(keyed)
         inner = build_pyramid(keyed, srs, max_zoom, min_zoom, tile_size,
-                              buffer, strategy, dictionary=False,
-                              stage_dir=stage_dir)
+                              buffer, stage_dir=stage_dir, rss_log=rss_log)
         result = (inner.withColumnRenamed("mapKey", "mapKeyId")
                   .join(F.broadcast(dict_df), "mapKeyId")
                   .select("srs", "mapKey", "z", "x", "y", "tile"))
         result._maps_spark_persisted = inner._maps_spark_persisted
         return result
-    if strategy == "spans_multi":
-        # One fan-out scan per span parent (z >= 2 via the z-column
-        # form), instead of one scan per zoom: a z10 pyramid reads its
-        # two persisted span tables 3 times total, not 11.
-        rows: DataFrame | None = None
-        for z_top, k, levels in pyramid_span_parents(
-                keyed, srs, max_zoom, min_zoom, tile_size=tile_size,
-                persisted_out=persisted, stage_dir=stage_dir,
-                rss_log=rss_log):
-            z_lo = z_top - k
-            parts: list[DataFrame] = []
-            if z_top >= 2:
-                big = levels if z_lo >= 2 else levels.where(F.col("z") >= 2)
-                parts.append(T.explode_to_tiles_multi(
-                    big, srs, tile_size, buffer))
-            for z in range(min(z_top, 1), z_lo - 1, -1):
-                small = levels.where(F.col("z") == z).drop("z")
-                parts.append(tile_rows(small, srs, z, tile_size, buffer)
-                             .withColumn("z", F.lit(z)))
-            for r in parts:
-                rows = r if rows is None else rows.unionByName(r)
-        result = (encode_mvt_flat_multi(rows, tile_size)
-                  .withColumn("srs", F.lit(srs.replace(":", "_"))))
-        result._maps_spark_persisted = persisted
-        return result
-    if strategy == "spans":
-        gen = pyramid_pixels_spans(keyed, srs, max_zoom, min_zoom,
-                                   tile_size=tile_size,
-                                   persisted_out=persisted,
-                                   stage_dir=stage_dir)
-    else:
-        def _track(p: DataFrame) -> DataFrame:
-            persisted.append(p.persist())
-            return p
-        gen = ((z, _track(p) if z > min_zoom else p) for z, p in
-               pyramid_pixels(keyed, srs, max_zoom, min_zoom, tile_size))
-    out: DataFrame | None = None
-    for z, pixels in gen:
-        lvl = build_zoom(pixels, srs, z, tile_size, buffer)
-        out = lvl if out is None else out.unionByName(lvl)
-    result = out.withColumn("srs", F.lit(srs.replace(":", "_")))
+    # One fan-out scan per span parent (z >= 2 via the z-column form),
+    # instead of one scan per zoom: a z10 pyramid reads its two
+    # persisted span tables 3 times total, not 11.
+    persisted: list[DataFrame] = []
+    rows: DataFrame | None = None
+    for z_top, k, levels in pyramid_span_parents(
+            keyed, srs, max_zoom, min_zoom, tile_size=tile_size,
+            persisted_out=persisted, stage_dir=stage_dir,
+            rss_log=rss_log):
+        z_lo = z_top - k
+        parts: list[DataFrame] = []
+        if z_top >= 2:
+            big = levels if z_lo >= 2 else levels.where(F.col("z") >= 2)
+            parts.append(T.explode_to_tiles_multi(
+                big, srs, tile_size, buffer))
+        for z in range(min(z_top, 1), z_lo - 1, -1):
+            small = levels.where(F.col("z") == z).drop("z")
+            parts.append(tile_rows(small, srs, z, tile_size, buffer)
+                         .withColumn("z", F.lit(z)))
+        for r in parts:
+            rows = r if rows is None else rows.unionByName(r)
+    result = (encode_mvt(rows, tile_size)
+              .withColumn("srs", F.lit(srs.replace(":", "_"))))
     result._maps_spark_persisted = persisted
     return result
 

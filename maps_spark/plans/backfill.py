@@ -113,52 +113,39 @@ def run_backfill(spark: SparkSession, sf_dir: str, out_root: str,
                                             k=5).collect()]
 
     points = PY.point_blobs(small)
-    if not parallel_srs:
-        tile_store.write_points(points, out_dir)
+    # stale-sibling guard: each projection overwrites only its own
+    # tiles/srs=<v> subtree, so an unversioned rerun into the same root
+    # with a smaller srs_list would otherwise keep serving the previous
+    # build's other projections
+    if not versioned:
+        tile_store.drop_stale_srs(out_dir, srs_list)
 
-    stats: dict[str, float] = {}
+    def _one(srs: str) -> tuple[str, float]:
+        t = time.time()
+        # polar clip (F2, TileMapBuilder.java:68-69) is inside the
+        # projection's plottable mask — no extra filter needed
+        sdir = (f"{staging_root}/{srs.replace(':', '_')}"
+                if staged else None)
+        tiles = PY.build_pyramid(large, srs, max_zoom, stage_dir=sdir)
+        tile_store.write_tiles(tiles, out_dir, srs)
+        PY.unpersist_pyramid(tiles)  # release span-parent cache
+        return srs, round(time.time() - t, 2)
+
     if parallel_srs:
-        # the four projections are independent DAGs over the shared
+        # the projections are independent DAGs over the shared
         # snapshot; overlapping them fills scheduler troughs (shuffle
         # barriers, driver-side coordination) that a sequential loop
-        # leaves idle. Safe because each SRS writes its own
-        # tiles/srs=<v>/ subtree — disjoint commit state
-        # (write_tiles_srs), no shared _temporary directory.
+        # leaves idle. Safe because each SRS writes its own disjoint
+        # subtree — no shared _temporary directory.
         from concurrent.futures import ThreadPoolExecutor
-
-        # stale-sibling guard: write_tiles_srs overwrites only its own
-        # tiles/srs=<v> subtree, so an unversioned rerun into the same
-        # root with a smaller srs_list would otherwise keep serving the
-        # previous build's other projections
-        if not versioned:
-            tile_store.drop_stale_srs(out_dir, srs_list)
-
-        def _one(srs: str) -> tuple[str, float]:
-            t = time.time()
-            sdir = (f"{staging_root}/{srs.replace(':', '_')}"
-                    if staged else None)
-            tiles = PY.build_pyramid(large, srs, max_zoom, stage_dir=sdir)
-            tile_store.write_tiles_srs(tiles, out_dir, srs)
-            PY.unpersist_pyramid(tiles)
-            return srs, round(time.time() - t, 2)
 
         with ThreadPoolExecutor(max_workers=len(srs_list) + 1) as ex:
             pts = ex.submit(tile_store.write_points, points, out_dir)
             stats = dict(ex.map(_one, srs_list))
             pts.result()
     else:
-        for srs in srs_list:
-            t = time.time()
-            # polar clip (F2, TileMapBuilder.java:68-69) is inside the
-            # projection's plottable mask — no extra filter needed
-            sdir = (f"{staging_root}/{srs.replace(':', '_')}"
-                    if staged else None)
-            tiles = PY.build_pyramid(large, srs, max_zoom, stage_dir=sdir)
-            tile_store.write_tiles(tiles, out_dir,
-                                   mode="append" if srs != srs_list[0]
-                                   else "overwrite")
-            PY.unpersist_pyramid(tiles)  # release span-parent cache
-            stats[srs] = round(time.time() - t, 2)
+        tile_store.write_points(points, out_dir)
+        stats = dict(map(_one, srs_list))
 
     if staged:
         # staged tables have served their barrier role once the tile

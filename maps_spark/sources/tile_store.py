@@ -53,37 +53,6 @@ def _checklist_of(map_key: str) -> str:
             else DEFAULT_CHECKLIST_DIR)
 
 
-def write_tiles(tiles: DataFrame, root: str, mode: str = "overwrite",
-                files_per_z: int = 1,
-                partitions: int | None = None) -> None:
-    """Write (srs, mapKey, z, x, y, tile) as the partitioned tile index.
-
-    Scale shape: the shuffle key is ``(srs, checklist, z, bucket)``
-    with ``bucket = hash(mapKey) mod files_per_z`` — every
-    (srs, checklist, z) directory is written by its own task(s) in
-    parallel and receives ~``files_per_z`` sorted files. (A plain
-    ``repartition(1, ...)`` would funnel the ENTIRE index through one
-    task — fine at sf0.1, a serialization wall for a z16 pyramid.)
-    Files stay sorted by ``(mapKey, x, y)`` so row-group min/max stats
-    keep point reads near-O(1); ``files_per_z`` is the
-    salt-prefix-partitioner knob (SaltPrefixPartitioner.java:21-37)
-    for hot builds. Non-default checklists route to their own
-    ``checklist=`` subtrees (HBaseMaps.java:149-186).
-    """
-    spark = tiles.sparkSession
-    n_parts = partitions or spark.sparkContext.defaultParallelism * 2
-    bucket = F.pmod(F.hash("mapKey"), F.lit(files_per_z))
-    (tiles
-     .withColumn("checklist", _checklist_expr())
-     .withColumn("__bucket", bucket)
-     .repartition(n_parts, "srs", "checklist", "z", "__bucket")
-     .sortWithinPartitions("srs", "checklist", "z", "__bucket",
-                           "mapKey", "x", "y")
-     .drop("__bucket")
-     .write.partitionBy("srs", "checklist", "z").mode(mode)
-     .parquet(f"{root}/tiles"))
-
-
 def _escape_partition(value: str) -> str:
     """Hive/Spark partition-directory escaping for a partition VALUE
     (ExternalCatalogUtils.escapePathName semantics for the chars our
@@ -92,20 +61,31 @@ def _escape_partition(value: str) -> str:
     return quote(value, safe="")
 
 
-def write_tiles_srs(tiles: DataFrame, root: str, srs: str,
-                    files_per_z: int = 1,
-                    partitions: int | None = None) -> None:
-    """Write ONE projection's tiles directly into its
-    ``tiles/srs=<srs>/`` partition subtree (partitioned by ``z``,
-    same ``(z, bucket)`` shuffle/sort shape as :func:`write_tiles`).
+def write_tiles(tiles: DataFrame, root: str, srs: str,
+                files_per_z: int = 1,
+                partitions: int | None = None) -> None:
+    """Write ONE projection's (srs, mapKey, z, x, y, tile) rows as its
+    ``tiles/srs=<srs>/`` subtree of the partitioned tile index,
+    overwriting only that subtree.
 
-    Because each SRS owns a disjoint output directory (its own
-    ``_temporary`` staging), independent projections can be built and
-    written CONCURRENTLY — the per-SRS pipelines share no commit state,
-    which is what :func:`maps_spark.plans.backfill.run_backfill`'s
-    ``parallel_srs`` mode relies on. The combined ``tiles/`` tree reads
-    back identically to a :func:`write_tiles` output (partition
-    discovery infers ``srs`` from the directory name).
+    Scale shape: the shuffle key is ``(checklist, z, bucket)`` with
+    ``bucket = hash(mapKey) mod files_per_z`` — every (checklist, z)
+    directory is written by its own task(s) in parallel and receives
+    ~``files_per_z`` sorted files. (A plain ``repartition(1, ...)``
+    would funnel the ENTIRE index through one task — fine at sf0.1, a
+    serialization wall for a z16 pyramid.) Files stay sorted by
+    ``(mapKey, x, y)`` so row-group min/max stats keep point reads
+    near-O(1); ``files_per_z`` is the salt-prefix-partitioner knob
+    (SaltPrefixPartitioner.java:21-37) for hot builds. Non-default
+    checklists route to their own ``checklist=`` subtrees
+    (HBaseMaps.java:149-186).
+
+    Each SRS owns a disjoint output directory (its own ``_temporary``
+    staging), so projections can be written one after another or
+    CONCURRENTLY (:func:`maps_spark.plans.backfill.run_backfill`'s
+    ``parallel_srs``); partition discovery infers ``srs`` back from the
+    directory name on read. Siblings of a previous build are not
+    touched — see :func:`drop_stale_srs`.
     """
     spark = tiles.sparkSession
     n_parts = partitions or spark.sparkContext.defaultParallelism * 2

@@ -459,7 +459,7 @@ def merge_into_tiles(delta: DataFrame, pixel_store: str, tile_store: str,
     trows = PY.tile_rows(merged, srs, zoom).join(
         F.broadcast(touched_tiles), ["mapKey", "tileX", "tileY"],
         "left_semi")
-    fresh = (PY.encode_mvt_flat(trows, zoom)
+    fresh = (PY.encode_mvt(trows.withColumn("z", F.lit(zoom)))
              .withColumn("bucket", F.pmod(F.xxhash64("mapKey"),
                                           F.lit(n_buckets)).cast("int")))
     out = fresh

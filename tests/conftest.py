@@ -19,3 +19,15 @@ def spark():
 def occ_small(spark):
     from maps_spark.sources.occurrence import occurrence_df
     return occurrence_df(spark, SF_SMALL).cache()
+
+
+def pyramid_pixels(keyed, srs, max_zoom, min_zoom=0):
+    """Cascade oracle for the span engine: yield (z, pixel_table_at_z)
+    from max_zoom down to min_zoom, one ``rollup`` shuffle per level —
+    the reference's per-zoom pyramid shape (TileMapBuilder.java:173-204)."""
+    from maps_spark.operators import pyramid as PY
+    pixels = PY.pixel_table(keyed, srs, max_zoom)
+    yield max_zoom, pixels
+    for z in range(max_zoom - 1, min_zoom - 1, -1):
+        pixels = PY.rollup(pixels, 1)
+        yield z, pixels

@@ -93,7 +93,7 @@ def test_tile_store_lookup_prunes_partitions(spark, tmp_path):
         [("0:0", "EPSG_3857", z, x, 0, bytearray(b"\x1a\x02"))
          for z in (0, 1, 2) for x in range(2 ** z)],
         "mapKey string, srs string, z int, x long, y long, tile binary")
-    TS.write_tiles(tiles, str(tmp_path))
+    TS.write_tiles(tiles, str(tmp_path), "EPSG:3857")
     lookup = (TS.read_tiles(spark, str(tmp_path))
               .where((F.col("srs") == "EPSG_3857") & (F.col("z") == 2) &
                      (F.col("mapKey") == "0:0") & (F.col("x") == 1) &
@@ -143,12 +143,11 @@ def test_multi_zoom_fanout_stays_in_codegen(spark):
 
 def test_build_pyramid_spans_multi_low_max_zoom(spark, occ_small):
     """max_zoom < 2 exercises the all-literal small-z branch of the
-    spans_multi strategy (no z-column fan-out at all)."""
+    span-parent tile fan-out (no z-column fan-out at all)."""
     from maps_spark.functions import mvt
     from maps_spark.operators import pyramid as PY
     keyed = PY.keyed_occurrence(occ_small)
-    tiles = PY.build_pyramid(keyed, "EPSG:3857", 1,
-                             strategy="spans_multi")
+    tiles = PY.build_pyramid(keyed, "EPSG:3857", 1)
     rows = tiles.where(F.col("mapKey") == "0:0").collect()
     PY.unpersist_pyramid(tiles)
     per_z = {}
@@ -205,8 +204,8 @@ def test_semantic_dedup_pairs_join_on_cluster(spark):
 
 
 def test_parallel_srs_backfill_matches_sequential(spark, tmp_path):
-    # the concurrent per-SRS write path must produce a tile tree that
-    # reads back row-identical to the sequential append path
+    # the concurrent per-SRS writes must produce a tile tree that reads
+    # back row-identical to the same per-SRS writes run one by one
     from maps_spark.plans.backfill import run_backfill
     from maps_spark.sources import tile_store
     seq_root, par_root = str(tmp_path / "seq"), str(tmp_path / "par")
@@ -313,22 +312,26 @@ def test_adversarial_skew_backfill(spark, tmp_path):
             tls.where(F.col("mapKey") == hot_view).limit(1).count()) > 0
 
 
-def test_parallel_srs_unversioned_rerun_drops_stale_srs(spark, tmp_path):
-    # ADVICE r3: rerunning an unversioned parallel build with a smaller
-    # srs_list must not keep serving the previous run's projections
+@pytest.mark.parametrize("parallel", [False, True],
+                         ids=["sequential", "parallel"])
+def test_parallel_srs_unversioned_rerun_drops_stale_srs(spark, tmp_path,
+                                                        parallel):
+    # rerunning an unversioned build with a smaller srs_list must not
+    # keep serving the previous run's projections: every projection
+    # overwrites only its own tiles/srs=<v> subtree, sequential or not
     from maps_spark.plans.backfill import run_backfill
     from maps_spark.sources import tile_store
     root = str(tmp_path / "u")
     run_backfill(spark, SF_SMALL, root, max_zoom=2, threshold=500,
                  srs_list=("EPSG:3857", "EPSG:3031"),
-                 versioned=False, parallel_srs=True)
+                 versioned=False, parallel_srs=parallel)
     first = {r["srs"] for r in
              tile_store.read_tiles(spark, root).select("srs").distinct()
              .collect()}
     assert first == {"EPSG_3857", "EPSG_3031"}
     run_backfill(spark, SF_SMALL, root, max_zoom=2, threshold=500,
                  srs_list=("EPSG:3857",), versioned=False,
-                 parallel_srs=True)
+                 parallel_srs=parallel)
     second = {r["srs"] for r in
               tile_store.read_tiles(spark, root).select("srs").distinct()
               .collect()}
@@ -353,7 +356,7 @@ def test_checklist_routed_layout_point_get_and_pruning(spark, tmp_path):
         rows,
         "mapKey string, srs string, z int, x long, y long, tile binary")
     root = str(tmp_path)
-    TS.write_tiles(tiles, root)
+    TS.write_tiles(tiles, root, "EPSG:3857")
     srs_dir = f"{root}/tiles/srs=EPSG_3857"
     subdirs = sorted(os.listdir(srs_dir))
     assert "checklist=coldlist" in subdirs

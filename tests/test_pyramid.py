@@ -7,6 +7,7 @@ import pytest
 
 from maps_spark.functions import mvt, pointpb
 from maps_spark.operators import pyramid as PY
+from tests.conftest import pyramid_pixels
 
 MAX_Z = 6
 
@@ -18,7 +19,7 @@ def keyed(occ_small):
 
 @pytest.fixture(scope="module")
 def pixel_levels(keyed):
-    levels = dict(PY.pyramid_pixels(keyed, "EPSG:3857", MAX_Z))
+    levels = dict(pyramid_pixels(keyed, "EPSG:3857", MAX_Z))
     for df in levels.values():
         df.cache()
     return levels
@@ -72,7 +73,7 @@ def test_spans_match_cascade_at_z16(keyed):
     the previous span's deepest level) twice, which no single-span test
     reaches."""
     spans = dict(PY.pyramid_pixels_spans(keyed, "EPSG:3857", 16))
-    cascade = dict(PY.pyramid_pixels(keyed, "EPSG:3857", 16))
+    cascade = dict(pyramid_pixels(keyed, "EPSG:3857", 16))
     for z in (16, 10, 9, 4, 3, 0):  # boundary zooms + their successors
         bad = (spans[z].alias("s").join(
             cascade[z].alias("c"), ["mapKey", "px", "py", "borYear"],
@@ -95,7 +96,7 @@ def test_spans_incremental_multi_batch(spark, keyed):
         # the running aggregate, exercising the incremental-merge path
         spans = dict(PY.pyramid_pixels_spans(keyed, "EPSG:3857", 8,
                                              min_chunk=100))
-        cascade = dict(PY.pyramid_pixels(keyed, "EPSG:3857", 8))
+        cascade = dict(pyramid_pixels(keyed, "EPSG:3857", 8))
         for z in (8, 5, 2, 0):
             bad = (spans[z].alias("s").join(
                 cascade[z].alias("c"), ["mapKey", "px", "py", "borYear"],
@@ -197,17 +198,21 @@ def test_explode_to_tiles_multi_matches_per_zoom_on_edge_grid(spark):
 
 
 def test_multi_zoom_encode_matches_per_zoom(keyed):
-    """The single-shuffle multi-zoom encoder must produce the same tile
-    set with feature-identical contents as per-zoom encodes (byte
-    equality is not required — feature order within a tile is
-    partition-arbitrary in both strategies)."""
-    per_zoom = PY.build_pyramid(keyed, "EPSG:3857", 4, strategy="spans")
-    multi = PY.build_pyramid(keyed, "EPSG:3857", 4,
-                             strategy="spans_multi")
+    """The span engine + single multi-zoom encode must produce the same
+    tile set with feature-identical contents as a per-zoom reference:
+    cascade pixel levels, per-zoom tile fan-out, one encode per zoom
+    (byte equality is not required — feature order within a tile is
+    partition-arbitrary)."""
+    max_z = 4
+    built = PY.build_pyramid(keyed, "EPSG:3857", max_z)
+    per_zoom = [
+        PY.encode_mvt(PY.tile_rows(pixels, "EPSG:3857", z)
+                      .withColumn("z", F.lit(z)))
+        for z, pixels in pyramid_pixels(keyed, "EPSG:3857", max_z)]
 
-    def decoded(df):
+    def decoded(rows):
         out = {}
-        for r in df.collect():
+        for r in rows:
             t = mvt.decode_tile(bytes(r.tile))
             out[(r.mapKey, r.z, r.x, r.y)] = {
                 layer: {(x, y, frozenset(attrs.items()))
@@ -215,7 +220,10 @@ def test_multi_zoom_encode_matches_per_zoom(keyed):
                 for layer, feats in t.items()}
         return out
 
-    a, b = decoded(per_zoom), decoded(multi)
+    a = decoded(built.collect())
+    PY.unpersist_pyramid(built)
+    b = decoded(r for df in per_zoom for r in df.collect())
+    assert set(range(max_z + 1)) == {k[1] for k in b}
     assert a.keys() == b.keys()
     for k in a:
         assert a[k] == b[k], k
@@ -225,7 +233,8 @@ def test_mvt_tiles_match_pixels(pixel_levels):
     """Decoded MVT totals (buffer excluded) == pixel-table totals for a
     sample of map views at z1."""
     z = 1
-    tiles = PY.build_zoom(pixel_levels[z], "EPSG:3857", z).collect()
+    tiles = PY.encode_mvt(PY.tile_rows(pixel_levels[z], "EPSG:3857", z)
+                          .withColumn("z", F.lit(z))).collect()
     assert tiles
     totals: dict[str, int] = {}
     for r in tiles:

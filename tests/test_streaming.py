@@ -126,11 +126,11 @@ class TestRefresh:
 
         got = {(r["mapKey"], r["x"], r["y"]): bytes(r["tile"])
                for r in read_tile_store(spark, tiles).collect()}
-        batch = PY.build_zoom(
-            PY.pixel_table(
-                PY.keyed_occurrence(occurrence_df(spark, SF_SMALL)),
-                "EPSG:3857", 5),
+        pixels = PY.pixel_table(
+            PY.keyed_occurrence(occurrence_df(spark, SF_SMALL)),
             "EPSG:3857", 5)
+        batch = PY.encode_mvt(PY.tile_rows(pixels, "EPSG:3857", 5)
+                              .withColumn("z", F.lit(5)))
         want = {(r["mapKey"], r["x"], r["y"]): bytes(r["tile"])
                 for r in batch.collect()}
         assert set(got) == set(want)

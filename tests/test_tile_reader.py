@@ -105,8 +105,8 @@ def test_tile_diff_between_builds(spark, tmp_path):
     schema = ("mapKey string, srs string, z int, x long, y long, "
               "tile binary")
     ra, rb = str(tmp_path / "a"), str(tmp_path / "b")
-    TS.write_tiles(spark.createDataFrame(rows_a, schema), ra)
-    TS.write_tiles(spark.createDataFrame(rows_b, schema), rb)
+    TS.write_tiles(spark.createDataFrame(rows_a, schema), ra, "EPSG:3857")
+    TS.write_tiles(spark.createDataFrame(rows_b, schema), rb, "EPSG:3857")
     out = {(r.mapKey, r.z): r.change
            for r in TS.tile_diff(spark, ra, rb).collect()}
     # unchanged (0:0, z0) omitted; changed/removed/added all present

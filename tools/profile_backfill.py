@@ -95,7 +95,7 @@ def main() -> None:
         # + store write; encode+write ~= this minus the span sum above
         t = time.time()
         tiles = PY.build_pyramid(large, "EPSG:3857", 10)
-        tile_store.write_tiles(tiles, out)
+        tile_store.write_tiles(tiles, out, "EPSG:3857")
         mark("build_pyramid_and_write", t)
         PY.unpersist_pyramid(tiles)
     finally:
