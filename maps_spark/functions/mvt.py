@@ -13,11 +13,23 @@ as-is (autoScale=false in the reference encoder).
 Used from Arrow-batched pandas UDFs (grouped encode) — this is the
 deliberate Python slow path at the very end of the pipeline, matching
 the reference's own SQL->RDD encode boundary (TileMapBuilder.java:216-229).
+
+Point tiles have one decoder, :func:`decode_columns`, which reads a tile
+into :class:`TileColumns`: per point a layer code, ``x`` and ``y``, and
+its attributes as flat key-code/count arrays with offsets. The serve
+path filters and rasterizes those columns with numpy, and
+:class:`~maps_spark.sources.tile_store.TileReader` keeps them per cached
+tile, so a warm tile is decoded once, not per request.
+:func:`decode_tile` is the ``{layer: [(x, y, attrs)]}`` dict view of the
+same columns; :func:`decode_polygon_tile` reads the binned POLYGON tiles.
 """
 
 from __future__ import annotations
 
-from collections import defaultdict
+from dataclasses import dataclass
+from itertools import chain
+
+import numpy as np
 
 # -- protobuf wire helpers ---------------------------------------------------
 
@@ -244,47 +256,6 @@ def _skip(buf: bytes, pos: int, wire: int) -> int:
     return pos
 
 
-def _decode_feature(buf: bytes, keys: list[str], vals: list):
-    pos = 0
-    tags: list[int] = []
-    geom: list[int] = []
-    while pos < len(buf):
-        key, pos = _read_varint(buf, pos)
-        field, wire = key >> 3, key & 0x7
-        if field == 2 and wire == 2:
-            ln, pos = _read_varint(buf, pos)
-            end = pos + ln
-            while pos < end:
-                v, pos = _read_varint(buf, pos)
-                tags.append(v)
-        elif field == 4 and wire == 2:
-            ln, pos = _read_varint(buf, pos)
-            end = pos + ln
-            while pos < end:
-                v, pos = _read_varint(buf, pos)
-                geom.append(v)
-        else:
-            pos = _skip(buf, pos, wire)
-    # decode point geometry (possibly multipoint with cumulative deltas)
-    pts = []
-    i = 0
-    cx = cy = 0
-    while i < len(geom):
-        cmd = geom[i]
-        cid, cnt = cmd & 0x7, cmd >> 3
-        i += 1
-        if cid == 1:
-            for _ in range(cnt):
-                cx += _unzigzag(geom[i])
-                cy += _unzigzag(geom[i + 1])
-                i += 2
-                pts.append((cx, cy))
-        else:  # lines/polys not produced by this engine
-            i += cnt * 2
-    attrs = {keys[tags[j]]: vals[tags[j + 1]] for j in range(0, len(tags), 2)}
-    return pts, attrs
-
-
 def decode_polygon_tile(data: bytes
                         ) -> dict[str, list[tuple[list, dict]]]:
     """MVT bytes -> {layer: [(exterior ring pts, attrs), ...]} for
@@ -372,57 +343,197 @@ def _decode_layer_polys(buf: bytes):
     return name, polys
 
 
-def decode_tile(data: bytes) -> dict[str, list[tuple[int, int, dict]]]:
-    """MVT bytes -> {layer_name: [(x, y, attrs), ...]}."""
-    layers: dict[str, list] = {}
+@dataclass(frozen=True, eq=False)
+class TileColumns:
+    """One decoded point tile as numpy columns: the form the serve path
+    filters and rasterizes, decoded once per cached tile (see
+    :class:`maps_spark.sources.tile_store.TileReader`).
+
+    One row per point, grouped by layer in first-appearance order (the
+    order :func:`decode_tile` lists them in): ``layer`` indexes
+    ``names``; ``x``/``y`` are tile pixels. Row ``i``'s attributes are
+    the entries ``offsets[i]:offsets[i + 1]`` of ``key`` (indexes into
+    the tile-wide ``keys``) and ``count``. Per key, ``is_year`` marks
+    the year attributes the serve filter reads (``int(key)`` parses;
+    "0" is the unknown year) and ``year`` holds that int; ``total``,
+    which the renderers prefer over the year sum, is an ordinary key.
+    """
+
+    names: tuple[str, ...]
+    layer: np.ndarray
+    x: np.ndarray
+    y: np.ndarray
+    offsets: np.ndarray
+    keys: tuple[str, ...]
+    key: np.ndarray
+    count: np.ndarray
+    is_year: np.ndarray
+    year: np.ndarray
+
+    def __post_init__(self):
+        # cached and shared by every request: read-only
+        for a in self._arrays():
+            a.flags.writeable = False
+
+    def _arrays(self) -> tuple[np.ndarray, ...]:
+        return (self.layer, self.x, self.y, self.offsets, self.key,
+                self.count, self.is_year, self.year)
+
+    @property
+    def nbytes(self) -> int:
+        return sum(a.nbytes for a in self._arrays())
+
+    def row_sums(self, values: np.ndarray) -> np.ndarray:
+        """Per-row sums of an entry-aligned array (exact in int64)."""
+        cs = np.concatenate(([0], np.cumsum(values, dtype=np.int64)))
+        return cs[self.offsets[1:]] - cs[self.offsets[:-1]]
+
+
+def _narrow(a: np.ndarray) -> np.ndarray:
+    """Tile pixels as int16 when they fit, which they do in any tile
+    this engine writes."""
+    if not len(a) or (a.min() >= -(1 << 15) and a.max() < (1 << 15)):
+        return a.astype(np.int16)
+    return a
+
+
+def _code_dtype(table) -> type:
+    """The narrowest dtype indexing ``table``."""
+    return np.int8 if len(table) < (1 << 7) else \
+        np.int16 if len(table) < (1 << 15) else np.int32
+
+
+def _walk_layer(buf: bytes, pos: int, end: int, keys: dict,
+                groups: dict) -> None:
+    """Decode one layer message into the row lists of its name in
+    ``groups`` ({name: (x, y, entries per row, key codes, counts)});
+    ``keys`` maps key strings to tile-wide codes."""
+    name, feats, codes, vals = "", [], [], []
+    while pos < end:
+        key = buf[pos]
+        if key < 0x80 and key & 0x7 == 2 and buf[pos + 1] < 0x80:
+            ln = buf[pos + 1]                   # one-byte tag and length
+            pos += 2
+        else:
+            key, pos = _read_varint(buf, pos)
+            if key & 0x7 != 2:
+                pos = _skip(buf, pos, key & 0x7)
+                continue
+            ln, pos = _read_varint(buf, pos)
+        field = key >> 3
+        if field == 2:                          # feature
+            feats.append(pos)
+            feats.append(pos + ln)
+        elif field == 3:                        # key
+            k = buf[pos:pos + ln].decode("utf-8")
+            codes.append(keys.setdefault(k, len(keys)))
+        elif field == 4:                        # value
+            v = (_read_varint(buf, pos + 1)[0] if ln and buf[pos] == 0x20
+                 else _decode_value(buf[pos:pos + ln]))
+            if type(v) is not int:
+                raise ValueError("MVT point tile with a non-integer value")
+            vals.append(v)
+        elif field == 1:
+            name = buf[pos:pos + ln].decode("utf-8")
+        pos += ln
+    if name not in groups:
+        groups[name] = ([], [], [], [], [])
+    xs, ys, nent, kc, cnt = groups[name]
+    for i in range(0, len(feats), 2):
+        pos, stop = feats[i], feats[i + 1]
+        ta = tb = ga = gb = 0
+        while pos < stop:                       # fields of one feature
+            key = buf[pos]
+            if key == 0x12 or key == 0x22:      # tags / geometry, packed
+                ln = buf[pos + 1]
+                if ln < 0x80:
+                    pos += 2
+                else:
+                    ln, pos = _read_varint(buf, pos + 1)
+                if key == 0x12:
+                    ta, tb = pos, pos + ln
+                else:
+                    ga, gb = pos, pos + ln
+                pos += ln
+            elif key == 0x18 and buf[pos + 1] < 0x80:   # geometry type
+                pos += 2
+            else:
+                key, pos = _read_varint(buf, pos)
+                pos = _skip(buf, pos, key & 0x7)
+        n = 0
+        while ta < tb:                          # (key, value) index pairs
+            k = buf[ta]
+            if k < 0x80:
+                ta += 1
+            else:
+                k, ta = _read_varint(buf, ta)
+            v = buf[ta]
+            if v < 0x80:
+                ta += 1
+            else:
+                v, ta = _read_varint(buf, ta)
+            kc.append(codes[k])
+            cnt.append(vals[v])
+            n += 1
+        if ta != tb:
+            raise ValueError("MVT feature tags are not (key, value) pairs")
+        if ga == gb or buf[ga] != 0x09:         # MoveTo, one point
+            raise ValueError("MVT feature geometry is not one point")
+        if gb - ga == 3 and buf[ga + 1] < 0x80 and buf[ga + 2] < 0x80:
+            zx, zy, pos = buf[ga + 1], buf[ga + 2], gb
+        else:
+            zx, pos = _read_varint(buf, ga + 1)
+            zy, pos = _read_varint(buf, pos)
+        if pos != gb:
+            raise ValueError("MVT feature geometry is not one point")
+        xs.append((zx >> 1) ^ -(zx & 1))
+        ys.append((zy >> 1) ^ -(zy & 1))
+        nent.append(n)
+
+
+def decode_columns(data: bytes) -> TileColumns:
+    """MVT point-tile bytes -> :class:`TileColumns`. Features must be
+    single points with integer attribute values, as :func:`encode_tile`
+    writes them; anything else raises ValueError."""
+    keys: dict[str, int] = {}
+    groups: dict[str, tuple] = {}
     pos = 0
     while pos < len(data):
         key, pos = _read_varint(data, pos)
-        field, wire = key >> 3, key & 0x7
-        if field == 3 and wire == 2:
-            ln, pos = _read_varint(data, pos)
-            layer_buf = data[pos:pos + ln]
-            pos += ln
-            name, feats = _decode_layer(layer_buf)
-            layers.setdefault(name, []).extend(feats)
-        else:
-            pos = _skip(data, pos, wire)
-    return layers
+        if key != 0x1A:                         # not a layer (tag 3)
+            pos = _skip(data, pos, key & 0x7)
+            continue
+        ln, pos = _read_varint(data, pos)
+        _walk_layer(data, pos, pos + ln, keys, groups)
+        pos += ln
+    x, y, nent, key, count = (
+        np.fromiter(chain.from_iterable(g[i] for g in groups.values()),
+                    np.int64) for i in range(5))
+    years = [_year(k) for k in keys]
+    return TileColumns(
+        names=tuple(groups),
+        layer=np.repeat(np.arange(len(groups), dtype=_code_dtype(groups)),
+                        [len(g[0]) for g in groups.values()]),
+        x=_narrow(x), y=_narrow(y),
+        offsets=np.concatenate(([0], np.cumsum(nent))).astype(np.int32),
+        keys=tuple(keys), key=key.astype(_code_dtype(keys)), count=count,
+        is_year=np.array([v is not None for v in years], bool),
+        year=np.array([v or 0 for v in years], np.int64))
 
 
-def _decode_layer(buf: bytes):
-    pos = 0
-    name = ""
-    raw_feats: list[bytes] = []
-    keys: list[str] = []
-    vals: list = []
-    while pos < len(buf):
-        key, pos = _read_varint(buf, pos)
-        field, wire = key >> 3, key & 0x7
-        if field == 1 and wire == 2:
-            ln, pos = _read_varint(buf, pos)
-            name = buf[pos:pos + ln].decode("utf-8")
-            pos += ln
-        elif field == 2 and wire == 2:
-            ln, pos = _read_varint(buf, pos)
-            raw_feats.append(buf[pos:pos + ln])
-            pos += ln
-        elif field == 3 and wire == 2:
-            ln, pos = _read_varint(buf, pos)
-            keys.append(buf[pos:pos + ln].decode("utf-8"))
-            pos += ln
-        elif field == 4 and wire == 2:
-            ln, pos = _read_varint(buf, pos)
-            vals.append(_decode_value(buf[pos:pos + ln]))
-            pos += ln
-        else:
-            pos = _skip(buf, pos, wire)
-    feats = []
-    for rf in raw_feats:
-        pts, attrs = _decode_feature(rf, keys, vals)
-        for (x, y) in pts:
-            feats.append((x, y, attrs))
-    return name, feats
+def decode_tile(data: bytes) -> dict[str, list[tuple[int, int, dict]]]:
+    """MVT bytes -> {layer_name: [(x, y, attrs), ...]}: the dict view of
+    :func:`decode_columns`."""
+    c = decode_columns(data)
+    out: dict[str, list] = {name: [] for name in c.names}
+    key, count = c.key.tolist(), c.count.tolist()
+    off = c.offsets.tolist()
+    for i, (li, x, y) in enumerate(zip(c.layer.tolist(), c.x.tolist(),
+                                       c.y.tolist())):
+        out[c.names[li]].append(
+            (x, y, {c.keys[key[j]]: count[j]
+                    for j in range(off[i], off[i + 1])}))
+    return out
 
 
 # -- convenience for tests/serving -------------------------------------------
@@ -431,18 +542,20 @@ def _decode_layer(buf: bytes):
 def tile_totals(data: bytes, exclude_buffer: bool = False,
                 tile_size: int = 512) -> dict[str, int]:
     """Sum of year counts per layer (optionally visible-region only)."""
-    out: dict[str, int] = defaultdict(int)
-    for layer, feats in decode_tile(data).items():
-        for x, y, attrs in feats:
-            if exclude_buffer and not (0 <= x < tile_size and 0 <= y < tile_size):
-                continue
-            out[layer] += sum(v for k, v in attrs.items() if _is_year(k))
-    return dict(out)
+    c = decode_columns(data)
+    layer = c.layer.astype(np.int64)
+    sums = c.row_sums(np.where(c.is_year[c.key], c.count, 0))
+    if exclude_buffer:
+        keep = (c.x >= 0) & (c.x < tile_size) & (c.y >= 0) & (c.y < tile_size)
+        layer, sums = layer[keep], sums[keep]
+    out = np.zeros(len(c.names), np.int64)
+    np.add.at(out, layer, sums)
+    return {c.names[i]: int(out[i]) for i in np.unique(layer).tolist()}
 
 
-def _is_year(k: str) -> bool:
+def _year(k: str) -> int | None:
+    """The year a key names, or None for a non-year key."""
     try:
-        int(k)
-        return True
+        return int(k)
     except ValueError:
-        return False
+        return None

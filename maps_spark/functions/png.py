@@ -195,34 +195,66 @@ def render_density_png(tile_bytes: bytes | None, style: str = "classic.point",
 
     Buffer-region features are dropped (they repeat in the neighbour's
     visible region); ``scale`` renders @0.5x..@4x sizes by scaling both
-    the canvas and the dot.
+    the canvas and the dot. Dots are painted in the order their pixels
+    first appear in the tile; where dots overlap, the later one wins.
     """
     size = int(tile_size * scale)
     canvas = np.zeros((size, size, 4), dtype=np.uint8)
-    ramp = STYLES[style]
     if tile_bytes:
-        totals: dict[tuple[int, int], int] = {}
-        for _, feats in mvt.decode_tile(tile_bytes).items():
-            for x, y, attrs in feats:
-                if 0 <= x < tile_size and 0 <= y < tile_size:
-                    t = sum(v for k, v in attrs.items()
-                            if isinstance(v, int) and k not in ("total",))
-                    t = attrs.get("total", t)
-                    totals[(x, y)] = totals.get((x, y), 0) + t
+        x, y, total = _dot_totals(mvt.decode_columns(tile_bytes), tile_size)
         d = max(1, int(round(dot_width * scale)))
-        for (x, y), total in totals.items():
-            for hi, rgb in ramp:
-                if total <= hi:
-                    break
-            sx, sy = int(x * scale), int(y * scale)
-            x0, x1 = max(0, sx), min(size, sx + d)
-            y0, y1 = max(0, sy), min(size, sy + d)
-            if x0 < x1 and y0 < y1:
-                canvas[y0:y1, x0:x1, 0] = rgb[0]
-                canvas[y0:y1, x0:x1, 1] = rgb[1]
-                canvas[y0:y1, x0:x1, 2] = rgb[2]
-                canvas[y0:y1, x0:x1, 3] = 255
+        pix, dot = _dot_pixels((x * scale).astype(np.int64),
+                               (y * scale).astype(np.int64), d, size)
+        # the last dot painted on a pixel wins
+        order = np.argsort(pix, kind="stable")
+        pix, dot = pix[order], dot[order]
+        last = np.ones(len(pix), bool)
+        last[:-1] = pix[1:] != pix[:-1]
+        flat = canvas.reshape(-1, 4)
+        flat[pix[last], :3] = _ramp_rgb(STYLES[style], total)[dot[last]]
+        flat[pix[last], 3] = 255
     return write_png(canvas)
+
+
+def _dot_totals(cols, tile_size: int
+                ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(x, y, total) per visible pixel, in the order each pixel first
+    appears. A feature's total is its ``total`` attribute if it has
+    one, else the sum of its other attributes; features on one pixel
+    add up."""
+    is_total = np.array([k == "total" for k in cols.keys], bool)[cols.key]
+    has_total = cols.row_sums(is_total) > 0
+    t = np.where(has_total,
+                 cols.row_sums(np.where(is_total, cols.count, 0)),
+                 cols.row_sums(np.where(is_total, 0, cols.count)))
+    x, y = cols.x.astype(np.int64), cols.y.astype(np.int64)
+    vis = (x >= 0) & (x < tile_size) & (y >= 0) & (y < tile_size)
+    pix = x[vis] * tile_size + y[vis]
+    uniq, first, inv = np.unique(pix, return_index=True, return_inverse=True)
+    sums = np.zeros(len(uniq), np.int64)
+    np.add.at(sums, inv, t[vis])
+    order = np.argsort(first)
+    return uniq[order] // tile_size, uniq[order] % tile_size, sums[order]
+
+
+def _dot_pixels(sx: np.ndarray, sy: np.ndarray, d: int, size: int
+                ) -> tuple[np.ndarray, np.ndarray]:
+    """Canvas pixels (flat index) of d x d dots with top-left corners
+    (sx, sy), clipped to the canvas, and the dot each belongs to; dot
+    by dot, in dot order."""
+    oy, ox = np.divmod(np.arange(d * d), d)
+    px = (sx[:, None] + ox).ravel()
+    py = (sy[:, None] + oy).ravel()
+    dot = np.repeat(np.arange(len(sx)), d * d)
+    ok = (px >= 0) & (px < size) & (py >= 0) & (py < size)
+    return (py * size + px)[ok], dot[ok]
+
+
+def _ramp_rgb(ramp, total: np.ndarray) -> np.ndarray:
+    """Per-total ramp colour: the first breakpoint >= total."""
+    his = np.array([hi for hi, _ in ramp], np.float64)
+    idx = np.minimum(np.searchsorted(his, total, side="left"), len(ramp) - 1)
+    return np.array([rgb for _, rgb in ramp], np.uint8)[idx]
 
 
 def _ramp_color(ramp, total):
@@ -350,54 +382,54 @@ def square_cell_polys(cells: dict, square_size: int
     return out
 
 
-def _tile_totals(tile_bytes: bytes, tile_size: int) -> dict:
-    totals: dict[tuple[int, int], int] = {}
-    for _, feats in mvt.decode_tile(tile_bytes).items():
-        for x, y, attrs in feats:
-            if 0 <= x < tile_size and 0 <= y < tile_size:
-                t = sum(v for k, v in attrs.items()
-                        if isinstance(v, int) and k not in ("total",))
-                t = attrs.get("total", t)
-                totals[(x, y)] = totals.get((x, y), 0) + t
-    return totals
-
-
 def render_heat_png(children: list, style: str = "purpleHeat.point",
                     tile_size: int = 512, dot_width: int = 2,
                     scale: float = 1.0) -> bytes:
     """Heat-style raster from the FOUR z+1 child tiles
     (renderer.js:70-100 heatMapRender + routes.js heatVectorRequest).
 
-    ``children`` = [TL, TR, BL, BR] MVT bytes (None for empty): the
-    (2x,2y)..(2x+1,2y+1) children of the requested tile, each rendered
-    into its quadrant at half resolution, dots accumulated with SCREEN
-    blending (marker-comp-op: screen in every heat stylesheet) so
-    overlapping markers brighten. ``scale=0.5`` yields the 256 px
-    ``@Hx`` tile (routes.js:63).
+    ``children`` = [TL, TR, BL, BR] as MVT bytes or decoded
+    :class:`~maps_spark.functions.mvt.TileColumns` (None for empty):
+    the (2x,2y)..(2x+1,2y+1) children of the requested tile, each
+    rendered into its quadrant at half resolution, dots accumulated
+    with SCREEN blending (marker-comp-op: screen in every heat
+    stylesheet) so overlapping markers brighten. Each pixel takes the
+    screen-blend steps of its dots one by one, in dot order (children
+    in order, then each child's pixels in first-appearance order).
+    ``scale=0.5`` yields the 256 px ``@Hx`` tile (routes.js:63).
     """
     size = int(tile_size * scale)
     half = size // 2
-    acc = np.zeros((size, size, 3), dtype=np.float64)
-    ramp = STYLES[style]
-    d = max(1, int(round(dot_width * scale)))
-    for qi, tile_bytes in enumerate(children[:4]):
-        if not tile_bytes:
-            continue
-        dx, dy = (qi % 2) * half, (qi // 2) * half
-        for (x, y), total in _tile_totals(tile_bytes, tile_size).items():
-            for hi, rgb in ramp:
-                if total <= hi:
-                    break
-            sx = dx + int(x * half / tile_size)
-            sy = dy + int(y * half / tile_size)
-            x0, x1 = max(0, sx), min(size, sx + d)
-            y0, y1 = max(0, sy), min(size, sy + d)
-            if x0 < x1 and y0 < y1:
-                # screen blend: out = 255 - (255-a)(255-b)/255
-                a = acc[y0:y1, x0:x1]
-                b = np.array(rgb, dtype=np.float64)
-                acc[y0:y1, x0:x1] = 255.0 - (255.0 - a) * (255.0 - b) / 255.0
     canvas = np.zeros((size, size, 4), dtype=np.uint8)
-    canvas[:, :, :3] = np.clip(np.rint(acc), 0, 255).astype(np.uint8)
-    canvas[:, :, 3] = np.where(acc.sum(axis=2) > 0, 255, 0).astype(np.uint8)
+    d = max(1, int(round(dot_width * scale)))
+    sx, sy, total = [], [], []
+    for qi, tile in enumerate(children[:4]):
+        if not tile:
+            continue
+        if not isinstance(tile, mvt.TileColumns):
+            tile = mvt.decode_columns(tile)
+        x, y, t = _dot_totals(tile, tile_size)
+        sx.append((qi % 2) * half + (x * half / tile_size).astype(np.int64))
+        sy.append((qi // 2) * half + (y * half / tile_size).astype(np.int64))
+        total.append(t)
+    if sx:
+        pix, dot = _dot_pixels(np.concatenate(sx), np.concatenate(sy), d,
+                               size)
+        rgb = _ramp_rgb(STYLES[style], np.concatenate(total))
+        order = np.argsort(pix, kind="stable")
+        pix, b = pix[order], rgb[dot[order]].astype(np.float64)
+        # accumulate per painted pixel; step k applies its (k+1)-th dot
+        start = np.ones(len(pix), bool)
+        start[1:] = pix[1:] != pix[:-1]
+        slot = np.cumsum(start) - 1
+        step = np.arange(len(pix)) - np.flatnonzero(start)[slot]
+        acc = np.zeros((int(start.sum()), 3), dtype=np.float64)
+        for k in range(int(step.max()) + 1 if len(step) else 0):
+            at = step == k
+            # screen blend: out = 255 - (255-a)(255-b)/255
+            acc[slot[at]] = 255.0 - (255.0 - acc[slot[at]]) * \
+                (255.0 - b[at]) / 255.0
+        flat = canvas.reshape(-1, 4)
+        flat[pix[start], :3] = np.clip(np.rint(acc), 0, 255).astype(np.uint8)
+        flat[pix[start], 3] = np.where(acc.sum(axis=1) > 0, 255, 0)
     return write_png(canvas)

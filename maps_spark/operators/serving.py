@@ -9,8 +9,9 @@ per request (VectorTileFilters.java:102-242, PointFeatureFilters.java:
   y, year-range, BOR-set) they produce exactly the feature set a served
   tile would contain (tile containment incl. dateline buffer, year/BOR
   filtering, per-pixel merge, total).
-- ``filter_decoded_tile``: the single-tile in-memory path over a decoded
-  MVT (for the point-lookup serve flow against the tile store).
+- ``filter_decoded_tile``: the single-tile in-memory path over a tile
+  decoded into numpy columns (for the point-lookup serve flow against
+  the tile store), vectorized over the tile's features.
 
 Filter semantics (pinned to the reference):
 
@@ -28,6 +29,7 @@ from __future__ import annotations
 
 from collections import defaultdict
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
@@ -132,14 +134,15 @@ def country_masked_tile(keyed: DataFrame, map_key: str, mask_key: str,
 # -- single-tile in-memory path (tile-store serve flow) ----------------------
 
 
-def filter_decoded_tile(layers: dict, srs: str, z: int, x: int, y: int,
+def filter_decoded_tile(cols, srs: str, z: int, x: int, y: int,
                         source: tuple[int, int] | None = None,
                         year_range=(None, None), bors=None,
                         verbose: bool = False, tile_size: int = P.TILE_SIZE,
                         buffer: int = T.DEFAULT_BUFFER):
-    """Reference collectInVectorTile over one decoded MVT
-    {layer: [(x, y, {year: cnt})]}. ``source`` is the (x, y) address the
-    tile was stored under when serving an adjacent/identical address.
+    """Reference collectInVectorTile over one decoded tile
+    (:class:`maps_spark.functions.mvt.TileColumns`), vectorized over its
+    rows. ``source`` is the (x, y) address the tile was stored under
+    when serving an adjacent/identical address.
 
     Returns {(px, py): {year: cnt, 'total': n}} (verbose) or
     {(px, py): total}.
@@ -147,41 +150,63 @@ def filter_decoded_tile(layers: dict, srs: str, z: int, x: int, y: int,
     sch = P.schema_for(srs)
     sx, sy = source if source else (x, y)
     lo, hi = year_range
-    out_verbose: dict = defaultdict(lambda: defaultdict(int))
-    out_simple: dict = defaultdict(int)
-    world = sch.num_x_tiles(z) * tile_size
-    for layer, feats in layers.items():
-        if bors and layer not in bors:
-            continue
-        for fx, fy, attrs in feats:
-            gx = sx * tile_size + fx
-            gy = sy * tile_size + fy
-            if not _contains(sch, z, x, y, gx, gy, tile_size, buffer):
-                continue
-            counts = {k: v for k, v in attrs.items()
-                      if _is_year(k) and _in_range(int(k), lo, hi)}
-            if (lo is not None or hi is not None) and not counts:
-                continue
-            lx = gx - x * tile_size
-            if sch.wrap_x and (sch.zz_tiles_horizontal > 1 or z > 0):
-                if x == 0 and gx >= world - buffer:
-                    lx = gx - world
-                elif x == sch.num_x_tiles(z) - 1 and gx < buffer:
-                    lx = gx + world - x * tile_size
-            ly = gy - y * tile_size
-            if verbose:
-                for k, v in counts.items():
-                    out_verbose[(lx, ly)][k] += v
-            else:
-                out_simple[(lx, ly)] += sum(counts.values())
+    gx = cols.x.astype(np.int64) + sx * tile_size
+    gy = cols.y.astype(np.int64) + sy * tile_size
+    keep = _contains(sch, z, x, y, gx, gy, tile_size, buffer)
+    if bors:
+        keep &= np.array([n in bors for n in cols.names], bool)[cols.layer]
+    key_ok = cols.is_year.copy()
+    if lo is not None:
+        key_ok &= cols.year >= lo
+    if hi is not None:
+        key_ok &= cols.year <= hi
+    ent_ok = key_ok[cols.key]
+    if lo is not None or hi is not None:
+        keep &= cols.row_sums(ent_ok) > 0
+    lx = gx - x * tile_size
+    if sch.wrap_x and (sch.zz_tiles_horizontal > 1 or z > 0):
+        world = sch.num_x_tiles(z) * tile_size
+        if x == 0:
+            lx = np.where(gx >= world - buffer, gx - world, lx)
+        elif x == sch.num_x_tiles(z) - 1:
+            lx = np.where(gx < buffer, gx + world - x * tile_size, lx)
+    ly = gy - y * tile_size
+    # kept rows lie within the buffered tile: one int per pixel
+    width = tile_size + 2 * buffer + 1
+    pix = (lx + buffer) * width + (ly + buffer)
     if verbose:
-        final = {}
-        for pix, counts in out_verbose.items():
-            d = dict(counts)
-            d[TOTAL_KEY] = sum(counts.values())
-            final[pix] = d
-        return final
-    return dict(out_simple)
+        row = np.repeat(np.arange(len(keep)), np.diff(cols.offsets))
+        sel = ent_ok & keep[row]
+        group = pix[row[sel]] * len(cols.keys) + cols.key[sel]
+        groups, sums = _group_sums(group, cols.count[sel])
+        out: dict = {}
+        for g, n in zip(groups.tolist(), sums.tolist()):
+            p, k = divmod(g, len(cols.keys))
+            out.setdefault(_pixel(p, width, buffer), {})[cols.keys[k]] = n
+        for counts in out.values():
+            counts[TOTAL_KEY] = sum(counts.values())
+        return out
+    totals = cols.row_sums(np.where(ent_ok, cols.count, 0))
+    pixels, sums = _group_sums(pix[keep], totals[keep])
+    return {_pixel(p, width, buffer): n
+            for p, n in zip(pixels.tolist(), sums.tolist())}
+
+
+def _group_sums(group: np.ndarray, values: np.ndarray
+                ) -> tuple[np.ndarray, np.ndarray]:
+    """(distinct groups, int64 sum of ``values`` per group)."""
+    if not len(group):
+        return group, values
+    order = np.argsort(group, kind="stable")
+    group = group[order]
+    first = np.flatnonzero(np.concatenate(([True],
+                                           group[1:] != group[:-1])))
+    return group[first], np.add.reduceat(values[order], first)
+
+
+def _pixel(p: int, width: int, buffer: int) -> tuple[int, int]:
+    px, py = divmod(p, width)
+    return px - buffer, py - buffer
 
 
 def points_to_tile(features, srs: str, z: int, x: int, y: int,
@@ -210,10 +235,11 @@ def points_to_tile(features, srs: str, z: int, x: int, y: int,
     # served pre-threshold (points) vs post-threshold (tiles) would
     # return different feature sets
     polar = P._norm(srs) in ("EPSG:3575", "EPSG:3031")
+    bors = {b.upper() for b in bors} if bors else None
     out_verbose: dict = defaultdict(lambda: defaultdict(int))
     out_simple: dict = defaultdict(int)
     for lat, lng, bor, year, cnt in features:
-        if bors and bor.upper() not in {b.upper() for b in bors}:
+        if bors and bor.upper() not in bors:
             continue
         if year and not _in_range(year, lo, hi):
             continue
@@ -261,24 +287,30 @@ def serve_tile(spark, root: str, map_key: str, srs: str, z: int, x: int,
     :func:`filter_decoded_tile`) or None when the view has no data.
 
     Pass a :class:`maps_spark.sources.tile_store.TileReader` as
-    ``reader`` for cached serving (warm lookups skip Spark entirely);
-    without one, each lookup is a partition-pruned Spark job."""
+    ``reader`` for cached serving: warm lookups skip Spark entirely and
+    reuse the tile's decoded columns and the view's decoded point
+    bundle. Without one, each lookup is a partition-pruned Spark job
+    and its bytes are decoded per request."""
     from maps_spark.functions import mvt, pointpb
     from maps_spark.sources import tile_store
     if reader is not None:
-        data = reader.get_tile_bytes(map_key, srs, z, x, y)
+        cols = reader.get_tile_columns(map_key, srs, z, x, y)
     else:
         data = tile_store.get_tile_bytes(spark, root, map_key, srs, z, x, y)
-    if data is not None:
-        return filter_decoded_tile(mvt.decode_tile(data), srs, z, x, y,
+        cols = None if data is None else mvt.decode_columns(data)
+    if cols is not None:
+        return filter_decoded_tile(cols, srs, z, x, y,
                                    year_range=year_range, bors=bors,
                                    verbose=verbose, tile_size=tile_size,
                                    buffer=buffer)
-    blob = (reader.get_point_bytes(map_key) if reader is not None
-            else tile_store.get_point_bytes(spark, root, map_key))
-    if blob is None:
+    if reader is not None:
+        feats = reader.get_point_features(map_key)
+    else:
+        blob = tile_store.get_point_bytes(spark, root, map_key)
+        feats = None if blob is None else pointpb.decode_features(blob)
+    if feats is None:
         return None
-    return points_to_tile(pointpb.decode_features(blob), srs, z, x, y,
+    return points_to_tile(feats, srs, z, x, y,
                           year_range=year_range, bors=bors, verbose=verbose,
                           tile_size=tile_size, buffer=buffer)
 
@@ -349,26 +381,19 @@ def serve_binned_png(spark, root: str, map_key: str, srs: str, z: int,
 
 
 def _contains(sch, z, x, y, gx, gy, tile_size, buffer):
-    vert = (y * tile_size - buffer) <= gy <= (y * tile_size + tile_size + buffer)
-    horiz = (x * tile_size - buffer) <= gx <= (x * tile_size + tile_size + buffer)
-    if horiz and vert:
-        return True
-    if sch.wrap_x and vert:
-        max_tile = sch.num_x_tiles(z) - 1
+    """Reference Tiles.tileContains (Tiles.java:104-127) for a global
+    pixel or, elementwise, for arrays of them."""
+    vert = (gy >= y * tile_size - buffer) & \
+        (gy <= y * tile_size + tile_size + buffer)
+    inside = vert & (gx >= x * tile_size - buffer) & \
+        (gx <= x * tile_size + tile_size + buffer)
+    if sch.wrap_x:
         world = sch.num_x_tiles(z) * tile_size
-        if x == 0 and gx >= world - buffer:
-            return True
-        if x == max_tile and gx < buffer:
-            return True
-    return False
-
-
-def _is_year(k) -> bool:
-    try:
-        int(k)
-        return True
-    except (TypeError, ValueError):
-        return False
+        if x == 0:
+            inside = inside | (vert & (gx >= world - buffer))
+        if x == sch.num_x_tiles(z) - 1:
+            inside = inside | (vert & (gx < buffer))
+    return inside
 
 
 def _in_range(year: int, lo, hi) -> bool:

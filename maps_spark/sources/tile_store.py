@@ -258,15 +258,16 @@ def get_heat_png(spark: SparkSession, root: str, map_key: str, srs: str,
     requested tile ((2x,2y)..(2x+1,2y+1), routes.js heatVectorRequest)
     and composites them quadrant-wise (renderer.js:70-100). Pass
     ``scale=0.5`` for the 256 px ``@Hx`` size; a :class:`TileReader`
-    makes the four child lookups one cached slice load."""
+    makes the four child lookups one cached slice load and serves the
+    children's cached decoded columns."""
     from maps_spark.functions.png import render_heat_png
     children = []
     for dy in (0, 1):
         for dx in (0, 1):
             cx, cy = 2 * x + dx, 2 * y + dy
             if reader is not None:
-                children.append(reader.get_tile_bytes(map_key, srs,
-                                                      z + 1, cx, cy))
+                children.append(reader.get_tile_columns(map_key, srs,
+                                                        z + 1, cx, cy))
             else:
                 children.append(get_tile_bytes(spark, root, map_key, srs,
                                                z + 1, cx, cy))
@@ -298,6 +299,14 @@ class TileReader:
     job loads a whole ``(mapKey, srs, z)`` view-zoom slice into an
     in-process dict, and every subsequent tile of that slice is a dict
     lookup (sub-ms warm). Point bundles cache per mapKey the same way.
+
+    Warm tiles are served from decoded columns: the first
+    :meth:`get_tile_columns` call for a tile decodes it into
+    :class:`~maps_spark.functions.mvt.TileColumns`, kept in the slice
+    entry beside the tile's bytes (which stay for the MVT endpoint,
+    :meth:`get_tile_bytes`) and evicted with the slice. A point
+    bundle's decoded features (:meth:`get_point_features`) are kept
+    beside its bytes in the point cache the same way.
 
     Cache keys embed the active build id, so a ``finalise_build``
     manifest swap invalidates stale entries naturally; an LRU bound
@@ -338,27 +347,59 @@ class TileReader:
                        (F.col("z") == z) & (F.col("mapKey") == map_key))
                 .select("x", "y", "tile"))
 
-    def get_tile_bytes(self, map_key: str, srs: str, z: int,
-                       x: int, y: int) -> bytes | None:
+    def _tile_entry(self, map_key: str, srs: str, z: int, x: int,
+                    y: int) -> list | None:
+        """The cached ``[bytes, columns or None]`` of one tile."""
         key = (self._build_id(), map_key, srs.replace(":", "_"), int(z))
         if key not in self._slices:
             rows = self.slice_df(map_key, srs, z).collect()
             self._lru_put(self._slices, key,
-                          {(r.x, r.y): bytes(r.tile) for r in rows},
+                          {(r.x, r.y): [bytes(r.tile), None] for r in rows},
                           self.max_slices)
         else:
             self._slices.move_to_end(key)
         return self._slices[key].get((int(x), int(y)))
 
-    def get_point_bytes(self, map_key: str) -> bytes | None:
+    def get_tile_bytes(self, map_key: str, srs: str, z: int,
+                       x: int, y: int) -> bytes | None:
+        entry = self._tile_entry(map_key, srs, z, x, y)
+        return entry[0] if entry else None
+
+    def get_tile_columns(self, map_key: str, srs: str, z: int, x: int,
+                         y: int):
+        """The tile's :class:`~maps_spark.functions.mvt.TileColumns`,
+        decoded on its first request, or None."""
+        from maps_spark.functions import mvt
+        entry = self._tile_entry(map_key, srs, z, x, y)
+        if entry is None:
+            return None
+        if entry[1] is None:
+            entry[1] = mvt.decode_columns(entry[0])
+        return entry[1]
+
+    def _point_entry(self, map_key: str) -> list:
+        """The cached ``[bytes or None, features or None]`` of a view."""
         key = (self._build_id(), map_key)
         if key not in self._points:
             self._lru_put(self._points, key,
-                          get_point_bytes(self.spark, self.root, map_key),
-                          self.max_points)
+                          [get_point_bytes(self.spark, self.root, map_key),
+                           None], self.max_points)
         else:
             self._points.move_to_end(key)
         return self._points[key]
+
+    def get_point_bytes(self, map_key: str) -> bytes | None:
+        return self._point_entry(map_key)[0]
+
+    def get_point_features(self, map_key: str) -> list | None:
+        """The view's point bundle as
+        :func:`~maps_spark.functions.pointpb.decode_features` rows,
+        decoded on its first request, or None."""
+        from maps_spark.functions import pointpb
+        entry = self._point_entry(map_key)
+        if entry[0] is not None and entry[1] is None:
+            entry[1] = pointpb.decode_features(entry[0])
+        return entry[1]
 
 
 def pyramid_invariant(spark: SparkSession, root: str,

@@ -1,0 +1,135 @@
+"""Loop implementations the vectorized serve path replaced, kept as
+test oracles: the dict-walking tile filter and the dot-by-dot PNG
+renderers. They read :func:`maps_spark.functions.mvt.decode_tile`'s
+dict form and must agree exactly with
+:func:`maps_spark.operators.serving.filter_decoded_tile` and
+:mod:`maps_spark.functions.png`'s renderers."""
+
+from collections import defaultdict
+
+import numpy as np
+
+from maps_spark.functions import mvt
+from maps_spark.functions import projections as P
+from maps_spark.functions import tiles as T
+from maps_spark.functions.png import STYLES, write_png
+from maps_spark.operators.serving import TOTAL_KEY, _contains, _in_range
+
+
+def _is_year(k) -> bool:
+    try:
+        int(k)
+        return True
+    except (TypeError, ValueError):
+        return False
+
+
+def filter_dict_tile(layers: dict, srs: str, z: int, x: int, y: int,
+                     source=None, year_range=(None, None), bors=None,
+                     verbose: bool = False, tile_size: int = P.TILE_SIZE,
+                     buffer: int = T.DEFAULT_BUFFER):
+    """Reference collectInVectorTile over one decoded MVT
+    {layer: [(x, y, {year: cnt})]}."""
+    sch = P.schema_for(srs)
+    sx, sy = source if source else (x, y)
+    lo, hi = year_range
+    out_verbose: dict = defaultdict(lambda: defaultdict(int))
+    out_simple: dict = defaultdict(int)
+    world = sch.num_x_tiles(z) * tile_size
+    for layer, feats in layers.items():
+        if bors and layer not in bors:
+            continue
+        for fx, fy, attrs in feats:
+            gx = sx * tile_size + fx
+            gy = sy * tile_size + fy
+            if not _contains(sch, z, x, y, gx, gy, tile_size, buffer):
+                continue
+            counts = {k: v for k, v in attrs.items()
+                      if _is_year(k) and _in_range(int(k), lo, hi)}
+            if (lo is not None or hi is not None) and not counts:
+                continue
+            lx = gx - x * tile_size
+            if sch.wrap_x and (sch.zz_tiles_horizontal > 1 or z > 0):
+                if x == 0 and gx >= world - buffer:
+                    lx = gx - world
+                elif x == sch.num_x_tiles(z) - 1 and gx < buffer:
+                    lx = gx + world - x * tile_size
+            ly = gy - y * tile_size
+            if verbose:
+                for k, v in counts.items():
+                    out_verbose[(lx, ly)][k] += v
+            else:
+                out_simple[(lx, ly)] += sum(counts.values())
+    if verbose:
+        final = {}
+        for pix, counts in out_verbose.items():
+            d = dict(counts)
+            d[TOTAL_KEY] = sum(counts.values())
+            final[pix] = d
+        return final
+    return dict(out_simple)
+
+
+def _tile_totals(tile_bytes: bytes, tile_size: int) -> dict:
+    totals: dict[tuple[int, int], int] = {}
+    for _, feats in mvt.decode_tile(tile_bytes).items():
+        for x, y, attrs in feats:
+            if 0 <= x < tile_size and 0 <= y < tile_size:
+                t = sum(v for k, v in attrs.items()
+                        if isinstance(v, int) and k not in ("total",))
+                t = attrs.get("total", t)
+                totals[(x, y)] = totals.get((x, y), 0) + t
+    return totals
+
+
+def render_density_png_loop(tile_bytes, style: str = "classic.point",
+                            tile_size: int = 512, dot_width: int = 2,
+                            scale: float = 1.0) -> bytes:
+    size = int(tile_size * scale)
+    canvas = np.zeros((size, size, 4), dtype=np.uint8)
+    ramp = STYLES[style]
+    if tile_bytes:
+        d = max(1, int(round(dot_width * scale)))
+        for (x, y), total in _tile_totals(tile_bytes, tile_size).items():
+            for hi, rgb in ramp:
+                if total <= hi:
+                    break
+            sx, sy = int(x * scale), int(y * scale)
+            x0, x1 = max(0, sx), min(size, sx + d)
+            y0, y1 = max(0, sy), min(size, sy + d)
+            if x0 < x1 and y0 < y1:
+                canvas[y0:y1, x0:x1, 0] = rgb[0]
+                canvas[y0:y1, x0:x1, 1] = rgb[1]
+                canvas[y0:y1, x0:x1, 2] = rgb[2]
+                canvas[y0:y1, x0:x1, 3] = 255
+    return write_png(canvas)
+
+
+def render_heat_png_loop(children: list, style: str = "purpleHeat.point",
+                         tile_size: int = 512, dot_width: int = 2,
+                         scale: float = 1.0) -> bytes:
+    size = int(tile_size * scale)
+    half = size // 2
+    acc = np.zeros((size, size, 3), dtype=np.float64)
+    ramp = STYLES[style]
+    d = max(1, int(round(dot_width * scale)))
+    for qi, tile_bytes in enumerate(children[:4]):
+        if not tile_bytes:
+            continue
+        dx, dy = (qi % 2) * half, (qi // 2) * half
+        for (x, y), total in _tile_totals(tile_bytes, tile_size).items():
+            for hi, rgb in ramp:
+                if total <= hi:
+                    break
+            sx = dx + int(x * half / tile_size)
+            sy = dy + int(y * half / tile_size)
+            x0, x1 = max(0, sx), min(size, sx + d)
+            y0, y1 = max(0, sy), min(size, sy + d)
+            if x0 < x1 and y0 < y1:
+                a = acc[y0:y1, x0:x1]
+                b = np.array(rgb, dtype=np.float64)
+                acc[y0:y1, x0:x1] = 255.0 - (255.0 - a) * (255.0 - b) / 255.0
+    canvas = np.zeros((size, size, 4), dtype=np.uint8)
+    canvas[:, :, :3] = np.clip(np.rint(acc), 0, 255).astype(np.uint8)
+    canvas[:, :, 3] = np.where(acc.sum(axis=2) > 0, 255, 0).astype(np.uint8)
+    return write_png(canvas)

@@ -1,6 +1,7 @@
 """The benchmark client (``perfbench/``) reaches into the engine by name:
 ``layers.SPANS`` wraps engine functions looked up in their owner's
-``__dict__``, and ``workloads.py`` calls ``run_backfill`` with keywords.
+``__dict__``, and ``workloads.py`` calls the backfill, the serving
+functions, the renderers and the ``TileReader`` by name.
 These tests read those files without running them, so a rename in
 ``maps_spark`` fails here instead of in a benchmark run."""
 
@@ -34,16 +35,38 @@ def test_span_hooks_resolve_in_engine():
     assert not missing, missing
 
 
-def test_run_backfill_accepts_workload_calls():
+def _workload_targets() -> dict:
+    """Engine callables ``workloads.py`` reaches, by called name."""
+    from maps_spark.functions import png
+    from maps_spark.operators import serving
     from maps_spark.plans.backfill import run_backfill
-    sig = inspect.signature(run_backfill)
+    from maps_spark.sources import tile_store
+    reader = tile_store.TileReader.__new__(tile_store.TileReader)
+    return {"run_backfill": run_backfill,
+            "serve_tile": serving.serve_tile,
+            "serve_binned_tile": serving.serve_binned_tile,
+            "get_heat_png": tile_store.get_heat_png,
+            "render_density_png": png.render_density_png,
+            "TileReader": tile_store.TileReader,
+            # called on the workload's TileReader
+            "get_tile_bytes": reader.get_tile_bytes,
+            "get_point_bytes": reader.get_point_bytes}
+
+
+def test_workload_calls_bind_to_engine_signatures():
+    targets = _workload_targets()
     tree = ast.parse((PERFBENCH / "workloads.py").read_text())
-    calls = [node for node in ast.walk(tree)
-             if isinstance(node, ast.Call)
-             and getattr(node.func, "attr",
-                         getattr(node.func, "id", None)) == "run_backfill"]
-    assert calls, "workloads.py no longer calls run_backfill"
-    for call in calls:
+    seen = set()
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        name = getattr(node.func, "attr", getattr(node.func, "id", None))
+        if name not in targets:
+            continue
+        assert not any(isinstance(a, ast.Starred) for a in node.args)
+        seen.add(name)
         # raises TypeError on an unknown keyword or too many positionals
-        sig.bind(*[None] * len(call.args),
-                 **{kw.arg: None for kw in call.keywords if kw.arg})
+        inspect.signature(targets[name]).bind(
+            *[None] * len(node.args),
+            **{kw.arg: None for kw in node.keywords if kw.arg})
+    assert seen == set(targets), set(targets) - seen

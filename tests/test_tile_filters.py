@@ -7,7 +7,7 @@ from maps_spark.operators.serving import (apply_country_mask,
 
 
 def _decoded(features_by_layer):
-    return mvt.decode_tile(mvt.encode_tile(features_by_layer, extent=512))
+    return mvt.decode_columns(mvt.encode_tile(features_by_layer, extent=512))
 
 
 class TestYearFiltering:

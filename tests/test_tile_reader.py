@@ -19,14 +19,63 @@ def store(spark, tmp_path_factory):
 
 class TestTileReader:
     def test_reader_matches_spark_path(self, spark, store):
+        """Cached serving equals the per-lookup Spark path for tiles and
+        point-bundle views, plain, verbose and filtered; tile answers
+        also equal the dict-walking oracle over the same bytes."""
+        from maps_spark.functions import mvt
         from maps_spark.operators.serving import serve_tile
+        from maps_spark.sources.tile_store import TileReader, read_points
+        from tests.oracles import filter_dict_tile
+        reader = TileReader(spark, store)
+        small_key = read_points(spark, store).select("mapKey").first()[0]
+        bors = {"bors": ["HUMAN_OBSERVATION", "PRESERVED_SPECIMEN"],
+                "year_range": (1990, None)}
+        cases = [("0:0", z, x, y, {})
+                 for z, x, y in ((0, 0, 0), (1, 1, 0), (2, 1, 1), (4, 7, 7))]
+        cases += [("0:0", 2, 1, 1, {"verbose": True}), ("0:0", 1, 0, 0, bors),
+                  (small_key, 0, 0, 0, {}),
+                  (small_key, 0, 0, 0, {"verbose": True}),
+                  (small_key, 0, 0, 0, bors)]
+        for key, z, x, y, kw in cases:
+            direct = serve_tile(spark, store, key, "EPSG:3857", z, x, y, **kw)
+            cached = serve_tile(spark, store, key, "EPSG:3857", z, x, y,
+                                reader=reader, **kw)
+            assert cached == direct, (key, z, x, y, kw)
+            data = reader.get_tile_bytes(key, "EPSG:3857", z, x, y)
+            if data is not None:
+                assert cached == filter_dict_tile(
+                    mvt.decode_tile(data), "EPSG:3857", z, x, y, **kw)
+        assert serve_tile(spark, store, "0:0", "EPSG:3857", 1, 0, 0,
+                          reader=reader, **bors)
+        assert serve_tile(spark, store, small_key, "EPSG:3857", 0, 0, 0,
+                          reader=reader, verbose=True)
+
+    def test_decoded_columns_evicted_with_slice(self, spark, store):
+        import gc
+        import weakref
+
+        from maps_spark.sources.tile_store import TileReader
+        reader = TileReader(spark, store, max_slices=1)
+        cols = reader.get_tile_columns("0:0", "EPSG:3857", 0, 0, 0)
+        assert reader.get_tile_columns("0:0", "EPSG:3857", 0, 0, 0) is cols
+        assert not cols.count.flags.writeable   # shared across requests
+        ref = weakref.ref(cols)
+        del cols
+        reader.get_tile_columns("0:0", "EPSG:3857", 1, 0, 0)  # evicts z0
+        gc.collect()
+        assert ref() is None
+
+    def test_decoded_columns_within_twice_the_slice_bytes(self, spark, store):
         from maps_spark.sources.tile_store import TileReader
         reader = TileReader(spark, store)
-        for z, x, y in ((0, 0, 0), (1, 1, 0), (2, 1, 1), (4, 7, 7)):
-            direct = serve_tile(spark, store, "0:0", "EPSG:3857", z, x, y)
-            cached = serve_tile(spark, store, "0:0", "EPSG:3857", z, x, y,
-                                reader=reader)
-            assert cached == direct
+        for z in range(5):
+            reader.get_tile_bytes("0:0", "EPSG:3857", z, 0, 0)
+            entries = next(reversed(reader._slices.values()))
+            for x, y in entries:
+                reader.get_tile_columns("0:0", "EPSG:3857", z, x, y)
+            raw = sum(len(data) for data, _ in entries.values())
+            decoded = sum(cols.nbytes for _, cols in entries.values())
+            assert raw and decoded <= 2 * raw, (z, decoded, raw)
 
     def test_warm_lookups_fast(self, spark, store):
         from maps_spark.sources.tile_store import TileReader
