@@ -282,21 +282,29 @@ def hot_keys(df: DataFrame, cols: list[str] | tuple[str, ...],
     splitting, and a broadcast rewrite.
 
     One map-side-combined aggregation + a TakeOrdered cut (never a
-    global sort); the rank window runs AFTER the limit, over at most
-    ``k`` rows. Deterministic: ties break on the key columns.
+    global sort); the windows run AFTER the limit, over at most
+    ``k + 1`` rows. Deterministic: ties break on the key columns.
+
+    The grand total is the aggregation's empty grouping set, which
+    sorts first in the cut, so one pass over ``df`` yields both. (A
+    second consumer of the counts would recompute them when ``df`` is
+    a persisted frame, such as the occurrence snapshot: adaptive
+    execution never reuses an exchange above a cached relation.)
 
     Output: (rank, key, cnt, share_scaled) with key the pipe-joined
     string form and share = floor(cnt * scale / total).
     """
     from pyspark.sql import Window
     cols = list(cols)
-    counts = df.groupBy(*cols).agg(F.count("*").alias("cnt"))
-    total = counts.agg(F.sum("cnt").alias("total"))
-    top = counts.orderBy(F.desc("cnt"), *cols).limit(k)
+    counts = df.groupingSets([cols, []], *cols).agg(
+        F.count("*").alias("cnt"), F.grouping_id().alias("gid"))
+    top = counts.orderBy(F.desc("gid"), F.desc("cnt"), *cols).limit(k + 1)
+    total = F.max(F.when(F.col("gid") > 0, F.col("cnt"))).over(
+        Window.partitionBy())
     w = Window.orderBy(F.desc("cnt"), *cols)
     key = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
-    return (top.withColumn("rank", F.row_number().over(w))
-            .crossJoin(F.broadcast(total))
+    return (top.withColumn("total", total).where(F.col("gid") == 0)
+            .withColumn("rank", F.row_number().over(w))
             .select("rank", key.alias("key"), "cnt",
                     F.expr(f"cnt * {scale} div total")
                     .cast("long").alias("share_scaled")))

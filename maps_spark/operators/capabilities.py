@@ -120,11 +120,11 @@ def lng_spread_df(spark, keyed: DataFrame, view: str = "0:0",
                   multiplier: int = 100) -> DataFrame:
     """centredSpread as a distributed window query — the same
     dual-dialect SQL text the oracle replays (one row:
-    minLng, maxLng; minLng > maxLng means antimeridian crossing)."""
+    minLng, maxLng; minLng > maxLng means antimeridian crossing). The
+    keyed frame is bound as a ``spark.sql`` argument."""
     from maps_spark.sql.oracle import lng_spread_body
-    keyed.createOrReplaceTempView("keyed_lng_spread")
-    return spark.sql(lng_spread_body(view, keyed="keyed_lng_spread",
-                                     lng="lng", multiplier=multiplier))
+    return spark.sql(lng_spread_body(view, keyed="{keyed}", lng="lng",
+                                     multiplier=multiplier), keyed=keyed)
 
 
 def lng_spread(keyed_view: DataFrame, multiplier: int = 100

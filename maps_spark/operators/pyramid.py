@@ -62,7 +62,20 @@ def keyed_occurrence(occ: DataFrame,
                      taxon_cols: dict[str, str] | None = None,
                      **key_cols) -> DataFrame:
     """Explode map keys; pack borYear. Output:
-    (mapKey, lat, lng, borYear)."""
+    (mapKey, lat, lng, borYear).
+
+    With the default keys, the fan-out of an ``occurrence_df`` snapshot
+    is itself persisted once and released with the snapshot
+    (``sources.occurrence``); any other frame gives a lazy plan."""
+    if taxon_cols is None and not key_cols:
+        from maps_spark.sources.occurrence import snapshot_fanout
+        return snapshot_fanout(occ, _explode_keys)
+    return _explode_keys(occ, taxon_cols, **key_cols)
+
+
+def _explode_keys(occ: DataFrame,
+                  taxon_cols: dict[str, str] | None = None,
+                  **key_cols) -> DataFrame:
     if "classifications" in occ.columns and \
             "classifications_col" not in key_cols:
         # taxon keys come from the map-typed classifications fan-out

@@ -161,15 +161,16 @@ FROM ex6"""
 
 def species_trend(spark, keyed: DataFrame, species_view: str,
                   group_view: str) -> DataFrame:
-    """Engine entry: registers the keyed frame and runs the dual-dialect
-    trend SQL (the oracle runs the identical text over its own CTE).
-    borYear's null-year encoding (0) maps back to NULL year."""
+    """Engine entry: runs the dual-dialect trend SQL over the keyed
+    frame, bound as a ``spark.sql`` argument (a per-call view, so
+    concurrent requests never share a name); the oracle runs the
+    identical text over its own CTE. borYear's null-year encoding (0)
+    maps back to NULL year."""
     year = F.floor(F.col("borYear") / 100).cast("bigint")
-    (keyed.select("mapKey", F.when(year > 0, year).alias("year"))
-     .createOrReplaceTempView("keyed_for_trend"))
     sql = trend_sql(f"mapKey = '{species_view}'", f"mapKey = '{group_view}'",
-                    "keyed_for_trend")
-    return spark.sql(sql)
+                    "{keyed}")
+    return spark.sql(sql, keyed=keyed.select(
+        "mapKey", F.when(year > 0, year).alias("year")))
 
 
 def trend_response(spark, keyed: DataFrame, species_view: str,
@@ -198,12 +199,13 @@ def hex_trend(spark, keyed: DataFrame, species_view: str, group_view: str,
               ) -> DataFrame:
     """J2: per-hexagon species trend over one served tile — runs the
     same dual-dialect SQL text the oracle replays
-    (RegressionResource.java:258-342)."""
+    (RegressionResource.java:258-342), with the keyed frame bound as a
+    ``spark.sql`` argument."""
     from maps_spark.sql.oracle import hex_trend_body
-    keyed.createOrReplaceTempView("keyed_hex_trend")
     return spark.sql(hex_trend_body(
         srs, z, x, y, species_view, group_view,
-        keyed="keyed_hex_trend", lat="lat", lng="lng", bor_year="borYear"))
+        keyed="{keyed}", lat="lat", lng="lng", bor_year="borYear"),
+        keyed=keyed)
 
 
 def per_cell_trend(species_cells: DataFrame, group_cells: DataFrame,

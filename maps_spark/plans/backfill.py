@@ -3,9 +3,11 @@
 Mirrors the reference workflow (Backfill.java:39-66 ->
 MapBuilder.run:118-177 -> Prepare/FinaliseBackfill) as one Spark app:
 
-1. snapshot: read + base-filter occurrence, materialize once
-   (MapBuilder.java:184-199's staged table — defeats lazy re-read across
-   the many downstream branches).
+1. snapshot: the persisted, base-filtered occurrence snapshot of
+   ``sources.occurrence`` and its persisted map-key fan-out, each
+   filled once by the first action (MapBuilder.java:184-199's staged
+   table — defeats lazy re-read across the many downstream branches);
+   ``snapshot="staged"`` stages it as Parquet instead.
 2. split views at the threshold (broadcast join, no driver collect).
 3. point bundles for small views; tile pyramids per projection for
    large views.
@@ -47,15 +49,18 @@ def run_backfill(spark: SparkSession, sf_dir: str, out_root: str,
 
     ``snapshot`` picks the materialization-barrier mode:
 
-    - ``True`` (local default): ``localCheckpoint`` the filtered
-      source. Fast, but non-reliable — blocks die with their executor.
+    - ``True`` (local default): build from the source snapshot that
+      ``occurrence_df`` returns (persisted ``MEMORY_AND_DISK``, shared
+      with every other caller of the same input in this SparkContext;
+      a warm snapshot is not re-read) and its persisted map-key
+      fan-out. Fast, but non-reliable — cached blocks die with their
+      executor and are recomputed from the source.
     - ``"staged"`` (cluster mode): write the snapshot AND every span
       parent as Parquet staged tables under ``<build>/staging/`` and
       read them back — the reference's MapBuilder.java:184-199 /
       TileMapBuilder.java:164-169 semantics. Reliable storage: an
       executor loss recomputes from the staged table instead of
       killing the job. The staging tree is dropped on finalise.
-    - ``False``: no barrier (every consumer re-reads the source).
 
     ``expectations`` is an optional promotion contract
     (:func:`operators.expectations.evaluate_contract` shape) run on
@@ -65,6 +70,8 @@ def run_backfill(spark: SparkSession, sf_dir: str, out_root: str,
     returned as ``{"promoted": False, "expectations": ...}``. On
     success the report is recorded in the promoted manifest.
     """
+    if snapshot not in (True, "staged"):
+        raise ValueError(f"snapshot must be True or 'staged': {snapshot!r}")
     t0 = time.time()
     build_id = tile_store.build_id() if versioned else None
     out_dir = f"{out_root}/builds/{build_id}" if versioned else out_root
@@ -90,10 +97,9 @@ def run_backfill(spark: SparkSession, sf_dir: str, out_root: str,
         # fresh lineage rooted at replicated storage
         occ.write.mode("overwrite").parquet(f"{staging_root}/snapshot")
         occ = spark.read.parquet(f"{staging_root}/snapshot")
-    elif snapshot:
-        # materialization barrier: one pass over the source feeds ~40
-        # downstream stages (4 projections x zooms + points + stats)
-        occ = occ.localCheckpoint(eager=True)
+    # on the source snapshot the fan-out is persisted too: one pass
+    # feeds ~40 downstream stages (4 projections x zooms + points +
+    # stats)
     keyed = PY.keyed_occurrence(occ)
     large, small = PY.split_views(keyed, threshold)
 
@@ -157,8 +163,7 @@ def run_backfill(spark: SparkSession, sf_dir: str, out_root: str,
     manifest = {
         "sf_dir": sf_dir, "max_zoom": max_zoom, "threshold": threshold,
         "srs": list(srs_list), "build_sec": round(time.time() - t0, 2),
-        "stage_sec": stats, "snapshot_mode": ("staged" if staged else
-                                              bool(snapshot)),
+        "stage_sec": stats, "snapshot_mode": snapshot,
         "hot_keys": hot,
     }
     if gate is not None:

@@ -29,7 +29,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from maps_spark.operators import pyramid as PY
-from maps_spark.sources.occurrence import BASE_FILTER_SQL, OCCURRENCE_SQL
+from maps_spark.sources.occurrence import occurrence_plan
 
 
 class BatchQuarantined(ValueError):
@@ -105,12 +105,11 @@ def stream_occurrence(spark: SparkSession, input_dir: str,
     The static nation dim joins stream-static (broadcast) — supported
     natively by Structured Streaming.
     """
-    from maps_spark.sources.occurrence import with_network_key
     stream = _stream_parquet(spark, input_dir)
     stream.createOrReplaceTempView("events")
     (spark.read.parquet(nation_dir)
      .createOrReplaceTempView("nation"))
-    return with_network_key(spark.sql(OCCURRENCE_SQL).where(BASE_FILTER_SQL))
+    return occurrence_plan(spark)
 
 
 def stream_pixel_deltas(occ: DataFrame, srs: str = "EPSG:3857",

@@ -18,7 +18,7 @@ def spark():
 @pytest.fixture(scope="session")
 def occ_small(spark):
     from maps_spark.sources.occurrence import occurrence_df
-    return occurrence_df(spark, SF_SMALL).cache()
+    return occurrence_df(spark, SF_SMALL)
 
 
 def pyramid_pixels(keyed, srs, max_zoom, min_zoom=0):

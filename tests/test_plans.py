@@ -50,14 +50,17 @@ def test_occurrence_scan_prunes_and_pushes(spark):
 
 
 def test_pixel_table_prunes_unused_measure(spark):
-    # a fresh (uncached) view: pruning must reach the parquet scan.
-    # Clear the cache first — a cached occurrence frame from another
-    # module would be substituted into this plan (CacheManager matches
-    # subplans) and its scan materializes every column.
+    # a fresh (uncached) lazy plan — the shape a streaming batch takes:
+    # pruning must reach the parquet scan. occurrence_df's snapshot
+    # materializes every column once by design, so take its lazy plan,
+    # and clear the cache first — the cached snapshot would be
+    # substituted into this plan (CacheManager matches subplans).
     spark.catalog.clearCache()
     from maps_spark.operators import pyramid as PY
-    from maps_spark.sources.occurrence import occurrence_df
-    occ = occurrence_df(spark, SF_SMALL)
+    from maps_spark.sources.occurrence import (occurrence_plan,
+                                               register_testdata)
+    register_testdata(spark, SF_SMALL, ("events", "nation"))
+    occ = occurrence_plan(spark)
     plan = plan_of(PY.pixel_table(PY.keyed_occurrence(occ),
                                   "EPSG:3857", 6))
     ev = scan_block(plan, "events")
@@ -263,6 +266,42 @@ def test_staged_backfill_matches_default_and_drops_staging(spark, tmp_path):
     for bdir in builds:
         assert not os.path.exists(
             f"{roots['staged']}/builds/{bdir}/staging")
+
+
+def test_backfill_bytes_equal_from_cold_and_warm_snapshot(spark, tmp_path):
+    """The default build reads the source snapshot of occurrence_df: a
+    cold one (filled by this build) and a warm one (reused from the
+    previous build) must give byte-identical tiles and point bundles."""
+    import shutil
+
+    from maps_spark.plans.backfill import run_backfill
+    from maps_spark.sources import tile_store
+    from maps_spark.sources.occurrence import occurrence_df
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for t in ("events", "nation"):
+        shutil.copy(f"{SF_SMALL}/{t}.parquet", sf / f"{t}.parquet")
+    with pytest.raises(ValueError):
+        run_backfill(spark, str(sf), str(tmp_path / "x"), snapshot=False)
+
+    def build(name):
+        root = str(tmp_path / name)
+        run_backfill(spark, str(sf), root, max_zoom=3, threshold=500,
+                     srs_list=("EPSG:3857",))
+        return root
+
+    cold = build("cold")
+    snap = occurrence_df(spark, str(sf))
+    warm = build("warm")
+    assert occurrence_df(spark, str(sf)) is snap  # reused, not rebuilt
+
+    def rows(df):
+        cols = sorted(df.columns)
+        return sorted(map(tuple, df.select(*cols).collect()))
+
+    for read in (tile_store.read_tiles, tile_store.read_points):
+        a, b = rows(read(spark, cold)), rows(read(spark, warm))
+        assert a and a == b
 
 
 def test_adversarial_skew_backfill(spark, tmp_path):

@@ -172,3 +172,80 @@ def test_degenerate_inputs(spark):
     assert out["slope"] == pytest.approx(0.0)
     assert out["slope_stderr"] is None
     assert out["significance"] is None
+
+
+def _keyed_rows(seed: int) -> list[tuple]:
+    """A small keyed frame: a species and a genus view with per-year
+    counts and positions that depend on ``seed``."""
+    import random
+    rng = random.Random(seed)
+    rows = []
+    for year in range(1990, 2010):
+        for view, n in (("1:c0|s1", rng.randint(5, 25)),
+                        ("1:c0|g1", rng.randint(30, 50))):
+            rows += [(view, rng.uniform(0, 4), rng.uniform(0, 4),
+                      year * 100 + 1) for _ in range(n)]
+    return rows
+
+
+def _canon(rows) -> list[tuple]:
+    return sorted(tuple(float(f"{v:.10g}") if isinstance(v, float) else v
+                        for v in r) for r in rows)
+
+
+def test_concurrent_requests_keep_their_own_frames(spark):
+    """Two threads, each with its own keyed frame, run the SQL-text
+    endpoints at the same time: every answer must equal the DuckDB
+    twin over that thread's own rows (the engine binds the frame per
+    call; a shared temp-view name would let one request read the
+    other's frame)."""
+    import threading
+
+    import duckdb
+    import pandas as pd
+
+    from maps_spark.operators.capabilities import lng_spread_df
+    from maps_spark.operators.regression import (hex_trend, species_trend,
+                                                 trend_sql)
+    from maps_spark.sql.oracle import hex_trend_body, lng_spread_body
+
+    schema = "mapKey string, lat double, lng double, borYear long"
+    sp, gp = "1:c0|s1", "1:c0|g1"
+    frames, want = [], []
+    for seed in (1, 2):
+        rows = _keyed_rows(seed)
+        frames.append(spark.createDataFrame(rows, schema))
+        con = duckdb.connect()
+        con.register("keyed", pd.DataFrame(
+            rows, columns=["mapKey", "lat", "lng", "borYear"]))
+        con.execute("CREATE VIEW trend_keyed AS SELECT mapKey, CASE WHEN "
+                    "floor(borYear / 100) > 0 THEN CAST(floor(borYear / 100)"
+                    " AS BIGINT) END AS year FROM keyed")
+        want.append([_canon(con.execute(sql).fetchall()) for sql in (
+            trend_sql(f"mapKey = '{sp}'", f"mapKey = '{gp}'", "trend_keyed"),
+            hex_trend_body("EPSG:3857", 0, 0, 0, sp, gp, lat="lat",
+                           lng="lng", bor_year="borYear"),
+            lng_spread_body(sp, lng="lng"))])
+    assert want[0] != want[1] and all(w[1] for w in want)
+
+    start = threading.Barrier(2)
+    got: list[list] = [[], []]
+
+    def run(i: int) -> None:
+        start.wait()
+        keyed = frames[i]
+        for _ in range(4):
+            dfs = (species_trend(spark, keyed, sp, gp),
+                   hex_trend(spark, keyed, sp, gp),
+                   lng_spread_df(spark, keyed, sp))
+            got[i].append([_canon(df.collect()) for df in dfs])
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in (0, 1)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+        assert not t.is_alive()
+    for i in (0, 1):
+        assert len(got[i]) == 4
+        assert all(answers == want[i] for answers in got[i])

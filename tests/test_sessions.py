@@ -492,6 +492,10 @@ def test_hot_keys_skew_diagnosis(spark):
     plan = buf.getvalue()
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
+    # one count aggregation feeds both the cut and the total: over a
+    # persisted input a second consumer would recompute the counts
+    # (adaptive execution reuses no exchange above a cached relation)
+    assert plan.count("Arguments: hashpartitioning(") == 1, plan
 
 
 def test_event_anomalies_planted_spike(spark):
