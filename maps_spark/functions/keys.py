@@ -91,17 +91,6 @@ def bor_year_col(bor_col: str, year_col: str) -> Column:
     return F.expr(dual.encode_bor_year(bor_col, year_col))
 
 
-def decode_year_col(bor_year: Column) -> Column:
-    return F.floor(bor_year / 100).cast("long")
-
-
-def decode_bor_col(bor_year: Column) -> Column:
-    mapping = F.create_map(
-        *[F.lit(x) for kv in ((c, b) for b, c in dual.BOR_CODE.items())
-          for x in kv])
-    return mapping[(bor_year % 100).cast("int")]
-
-
 def java_string_hash(s: pd.Series) -> np.ndarray:
     """Vectorized Java ``String.hashCode`` (s[0]*31^(n-1) + ... + s[n-1])."""
     out = np.zeros(len(s), dtype=np.int32)

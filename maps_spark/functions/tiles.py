@@ -69,11 +69,6 @@ def local_x(sch: TileSchema, z: int, tx: Column, px: Column,
     )
 
 
-def local_y(tx_unused: None, ty: Column, py: Column,
-            tile_size: int = TILE_SIZE) -> Column:
-    return py - ty * F.lit(tile_size)
-
-
 def collect_to_tiles(srs: str, z: int, px: Column, py: Column,
                      tile_size: int = TILE_SIZE, buffer: int = DEFAULT_BUFFER,
                      contained_only: bool = True,

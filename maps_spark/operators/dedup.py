@@ -126,13 +126,6 @@ def drop_dup_paragraphs(docs: DataFrame, text_col: str = "text",
                 sep).alias("clean_text")))
 
 
-def _shingles(text: str, k: int) -> set[str]:
-    toks = text.split()
-    if len(toks) < k:
-        return {" ".join(toks)} if toks else set()
-    return {" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
-
-
 def _token_hashes(toks: list[str]) -> np.ndarray:
     """31-bit polynomial token hashes: utf-8 bytes base-256 mod 2^31-1.
 

@@ -2117,8 +2117,9 @@ def write_webdataset_shards(media: DataFrame, path: str,
 
     Scale: one hash repartition on ``shard`` (every shard's rows land
     in exactly one task), each task streams its tar(s) to
-    ``path/shard-NNNNN.tar`` via a tempfile + atomic rename; payloads
-    never pass through the driver. Returns the shard manifest
+    ``path/shard-NNNNN.tar`` via a temp file published by
+    :func:`maps_spark.sources.commit.publish_file`; payloads stay on
+    the executors. Returns the shard manifest
     (shard, n_samples, n_bytes) — tiny.
     """
     import glob
@@ -2128,11 +2129,13 @@ def write_webdataset_shards(media: DataFrame, path: str,
     import tarfile
 
     from maps_spark.operators.packing import shard_assign
+    from maps_spark.sources import commit
     os.makedirs(path, exist_ok=True)
     # overwrite semantics like every other writer here: stale shards
     # from a previous (larger) export must not survive beside the new
     # ones — a loader globbing shard-*.tar would mix builds
-    for stale in glob.glob(f"{path}/shard-*.tar") +             glob.glob(f"{path}/.shard-*.tar.tmp"):
+    for stale in (glob.glob(f"{path}/shard-*.tar")
+                  + glob.glob(commit.temp_path(f"{path}/shard-*.tar"))):
         os.remove(stale)
     assign = shard_assign(media.select(F.col(id_col).alias("doc_id")),
                           n_shards).withColumnRenamed("doc_id", id_col)
@@ -2153,7 +2156,7 @@ def write_webdataset_shards(media: DataFrame, path: str,
         def _close():
             if cur is not None:
                 tf.close()
-                os.replace(tmp, f"{path}/shard-{cur:05d}.tar")
+                commit.publish_file(tmp, f"{path}/shard-{cur:05d}.tar")
                 out.append((cur, stat[0], stat[1]))
 
         for r in part:
@@ -2161,7 +2164,7 @@ def write_webdataset_shards(media: DataFrame, path: str,
             if sh != cur:
                 _close()
                 cur = sh
-                tmp = f"{path}/.shard-{sh:05d}.tar.tmp"
+                tmp = commit.temp_path(f"{path}/shard-{sh:05d}.tar")
                 tf = tarfile.open(tmp, "w")
                 stat = [0, 0]
             key = f"{int(r[id_col]):012d}"

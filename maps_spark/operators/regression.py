@@ -20,45 +20,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
-def year_counts(keyed_view: DataFrame) -> DataFrame:
-    """(year, count) for one map view, null years dropped."""
-    year = F.floor(F.col("borYear") / 100).cast("long")
-    return (keyed_view.select(year.alias("year"))
-            .where(F.col("year") > 0)
-            .groupBy("year").agg(F.count("*").alias("cnt")))
-
-
-def ols_stats(pairs: DataFrame, x: str = "year", y: str = "ratio") -> DataFrame:
-    """One-row OLS over (x, y): slope, intercept, r2, n.
-
-    ``y`` may be a ratio column; computed via decimal-exact sums.
-    """
-    xd = F.col(x).cast("decimal(28,10)")
-    yd = F.col(y).cast("decimal(28,10)")
-    agg = pairs.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum(xd).cast("decimal(38,10)").cast("double").alias("sx"),
-        F.sum(yd).cast("decimal(38,10)").cast("double").alias("sy"),
-        F.sum((xd * xd).cast("decimal(38,10)")).cast("decimal(38,10)")
-        .cast("double").alias("sxx"),
-        F.sum((xd * yd).cast("decimal(38,10)")).cast("decimal(38,10)")
-        .cast("double").alias("sxy"),
-        F.sum((yd * yd).cast("decimal(38,10)")).cast("decimal(38,10)")
-        .cast("double").alias("syy"),
-    )
-    n, sx, sy, sxx, sxy, syy = [F.col(c) for c in
-                                ("n", "sx", "sy", "sxx", "sxy", "syy")]
-    denom = n * sxx - sx * sx
-    slope = (n * sxy - sx * sy) / denom
-    intercept = (sy - slope * sx) / n
-    r2_denom = (n * sxx - sx * sx) * (n * syy - sy * sy)
-    r2 = F.when(r2_denom != 0,
-                F.pow(n * sxy - sx * sy, F.lit(2)) / r2_denom)
-    return agg.select(
-        slope.alias("slope"), intercept.alias("intercept"),
-        r2.alias("r2"), n.alias("n"))
-
-
 def trend_sql(species_pred: str, group_pred: str, keyed_table: str) -> str:
     """Dual-dialect OLS trend SQL (RegressionResource.java:204-220,
     output fields per :347-355): per-year species/group ratio regressed
@@ -207,33 +168,3 @@ def hex_trend(spark, keyed: DataFrame, species_view: str, group_view: str,
         keyed="{keyed}", lat="lat", lng="lng", bor_year="borYear"),
         keyed=keyed)
 
-
-def per_cell_trend(species_cells: DataFrame, group_cells: DataFrame,
-                   cell_cols: tuple[str, ...] = ("cellX", "cellY")
-                   ) -> DataFrame:
-    """J2: join species and higher-taxon per-(cell, year) counts, then a
-    per-cell OLS of the normalized ratio using window-free grouped sums."""
-    cols = list(cell_cols)
-    s = species_cells.withColumnRenamed("cnt", "speciesCnt")
-    g = group_cells.withColumnRenamed("cnt", "groupCnt")
-    pairs = (s.join(g, cols + ["year"])
-             .where(F.col("groupCnt") > 0)
-             .withColumn("ratio", F.col("speciesCnt").cast("double") /
-                         F.col("groupCnt").cast("double")))
-    xd = F.col("year").cast("decimal(28,10)")
-    yd = F.col("ratio").cast("decimal(28,10)")
-    agg = pairs.groupBy(*cols).agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum(xd).cast("decimal(38,10)").cast("double").alias("sx"),
-        F.sum(yd).cast("decimal(38,10)").cast("double").alias("sy"),
-        F.sum((xd * xd).cast("decimal(38,10)")).cast("decimal(38,10)")
-        .cast("double").alias("sxx"),
-        F.sum((xd * yd).cast("decimal(38,10)")).cast("decimal(38,10)")
-        .cast("double").alias("sxy"))
-    denom = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    slope = F.when(denom != 0,
-                   (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
-                   / denom)
-    intercept = (F.col("sy") - slope * F.col("sx")) / F.col("n")
-    return agg.select(*cols, slope.alias("slope"),
-                      intercept.alias("intercept"), F.col("n").alias("n"))

@@ -172,12 +172,8 @@ def run_backfill(spark: SparkSession, sf_dir: str, out_root: str,
             manifest["profile"] = gate["profile"]
         if gate["drift"] is not None:
             manifest["drift"] = gate["drift"]
-    if versioned:
-        tile_store.finalise_build(out_root, build_id, manifest,
-                                  keep=keep_builds)
-    else:
-        tile_store.write_manifest(out_root, manifest)
-    return tile_store.read_manifest(out_root)
+    return tile_store.finalise_build(out_root, build_id, manifest,
+                                     keep=keep_builds)
 
 
 def audit_build(spark: SparkSession, root: str,

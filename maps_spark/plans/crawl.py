@@ -29,9 +29,7 @@ import time
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from maps_spark.sources.tile_store import (build_id as _build_id,
-                                           finalise_build, read_manifest,
-                                           write_manifest)
+from maps_spark.sources.tile_store import build_id as _build_id, finalise_build
 
 
 def run_crawl_plan(spark: SparkSession, pages: DataFrame,
@@ -290,11 +288,8 @@ def _plan_and_write(spark: SparkSession, cand, ranks, n_cand: int,
                    "hosts": int(n_hosts or 0)},
         "build_sec": round(time.time() - t0, 2),
     }
-    if versioned:
-        finalise_build(out_root, build_id, manifest, keep=keep_builds)
-    else:
-        write_manifest(out_root, manifest)
-    return read_manifest(out_root)
+    return finalise_build(out_root, build_id, manifest,
+                          keep=keep_builds)
 
 
 def read_node_ranks(spark: SparkSession,

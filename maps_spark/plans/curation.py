@@ -25,6 +25,12 @@ the stage vocabulary; exact agreement of verdicts is NOT guaranteed
 curation is lowest-id-wins globally) — the trade every incremental
 dedup makes, stated here rather than hidden.
 
+Crash safety: the snapshot (``docs``) and its verdicts are one state
+directory, ``<state_dir>/snapshot``, staged whole and published with
+one swap; the batch counter is committed after it. A crash anywhere
+rolls back to the previous snapshot and the retry re-runs the same
+batch id (the contract of :mod:`maps_spark.sources.commit`).
+
 Staleness: a CHANGED doc re-enters the batch but its previous
 signature stays in the append-only store (self-matches are excluded in
 ``process_batch``); until the periodic full rebuild /
@@ -40,14 +46,17 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from maps_spark.sources import commit
 
-def _verdicts_path(state_dir: str) -> str:
-    return f"{state_dir}/verdicts"
+
+def _snapshot(state_dir: str) -> str:
+    return f"{state_dir}/snapshot"
 
 
 def read_verdicts(spark: SparkSession, state_dir: str) -> DataFrame:
     """(doc_id, stage) for every doc in the current corpus state."""
-    return spark.read.parquet(_verdicts_path(state_dir))
+    commit.recover(_snapshot(state_dir))  # no-op outside a crash window
+    return spark.read.parquet(f"{_snapshot(state_dir)}/verdicts")
 
 
 def run_incremental_curation(spark: SparkSession, new_docs: DataFrame,
@@ -66,18 +75,17 @@ def run_incremental_curation(spark: SparkSession, new_docs: DataFrame,
     from maps_spark.operators.text import quality_score
     from maps_spark.streaming.dedup import process_batch, rejected
 
-    vp = _verdicts_path(state_dir)
+    snap = _snapshot(state_dir)
     # committed state = the batch counter exists (it is written LAST,
     # after the snapshot swap): a run that crashed mid-way leaves
     # partial files but no counter advance, and its retry must re-run
     # as the same logical batch, not treat debris as state
     have_state = os.path.isfile(_counter_path(state_dir))
-    if have_state:
-        _finish_swap_if_needed(state_dir)
+    commit.recover(snap)  # roll a crashed swap back
     new_docs = new_docs.select("doc_id", text_col).localCheckpoint()
 
     if have_state:
-        old_docs = spark.read.parquet(f"{state_dir}/docs")
+        old_docs = spark.read.parquet(f"{snap}/docs")
         diff = corpus_diff(old_docs, new_docs).localCheckpoint()
         touched = (diff.where(F.col("change").isin("added", "changed"))
                    .select("doc_id"))
@@ -102,14 +110,15 @@ def run_incremental_curation(spark: SparkSession, new_docs: DataFrame,
     # and the store marker (same mechanism as streaming.dedup's
     # foreachBatch body) then skips the duplicate append; verdicts
     # re-derive idempotently from the store's rejected table.
-    from maps_spark.streaming.refresh import _applied_batch, _commit_batch
     bid = batch_id if batch_id is not None else _peek_batch(state_dir)
     store = f"{state_dir}/dedup_store"
-    marker = f"{store}/_meta/last_batch.json"
-    if _applied_batch(marker) < bid:
-        process_batch(survivors, store, batch_id=bid, text_col=text_col,
+
+    def _append(df: DataFrame, b: int) -> None:
+        process_batch(df, store, batch_id=b, text_col=text_col,
                       threshold=threshold)
-        _commit_batch(marker, bid)
+
+    commit.guarded(f"{store}/_meta/last_batch.json", _append)(
+        survivors, bid)
     rej = (rejected(spark, store)
            .where(F.col("batch_id") == bid)
            .select("doc_id",
@@ -130,17 +139,32 @@ def run_incremental_curation(spark: SparkSession, new_docs: DataFrame,
         merged = keepers.unionByName(delta_verdicts).localCheckpoint()
     else:
         merged = delta_verdicts.localCheckpoint()
-    merged.write.mode("overwrite").parquet(vp)
-    new_docs.write.mode("overwrite").parquet(f"{state_dir}/docs.next")
-    _swap(state_dir)
-    _commit_counter(state_dir, bid)  # the run is now durable
+    n_corpus = merged.count()
+
+    # docs and verdicts are staged together and published by ONE swap:
+    # two swaps could leave new docs beside old verdicts, and the retry
+    # would then see an empty diff
+    def _write(staged: str) -> None:
+        merged.write.parquet(f"{staged}/verdicts")
+        new_docs.write.parquet(f"{staged}/docs")
+
+    def _check(staged: str) -> str | None:
+        got = spark.read.parquet(f"{staged}/verdicts").count()
+        return None if got == n_corpus else (
+            f"curation validation failed for {state_dir}: {got} staged "
+            f"verdicts != {n_corpus}")
+
+    commit.rewrite(snap, _write, _check)
+    # the run is now durable (never rewind on explicit ids)
+    commit.write_json(_counter_path(state_dir),
+                      max(bid, _peek_batch(state_dir) - 1))
 
     stages = {r["stage"]: r["n"] for r in
               delta_verdicts.groupBy("stage")
               .agg(F.count("*").alias("n")).collect()}
     return {"batch_id": bid, "delta_docs": int(n_delta),
             "delta_stages": stages,
-            "corpus_docs": int(merged.count())}
+            "corpus_docs": int(n_corpus)}
 
 
 def _counter_path(state_dir: str) -> str:
@@ -156,38 +180,3 @@ def _peek_batch(state_dir: str) -> int:
         with open(p) as f:
             return int(f.read().strip()) + 1
     return 0
-
-
-def _commit_counter(state_dir: str, bid: int) -> None:
-    p = _counter_path(state_dir)
-    os.makedirs(os.path.dirname(p), exist_ok=True)
-    cur = _peek_batch(state_dir) - 1
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(max(bid, cur)))  # never rewind on explicit ids
-    os.replace(tmp, p)
-
-
-def _finish_swap_if_needed(state_dir: str) -> None:
-    """Complete a :func:`_swap` a previous run crashed inside: if the
-    current snapshot is missing but ``docs.next`` survived, promote it;
-    always clear leftover ``docs.old``."""
-    import shutil
-    cur, nxt = f"{state_dir}/docs", f"{state_dir}/docs.next"
-    if not os.path.isdir(cur) and os.path.isdir(nxt):
-        os.rename(nxt, cur)
-    shutil.rmtree(f"{state_dir}/docs.old", ignore_errors=True)
-
-
-def _swap(state_dir: str) -> None:
-    """docs.next -> docs (keep the previous snapshot for the next
-    diff; the brief rename window is covered by the driver being the
-    only writer — same contract as maintenance.compact_dir)."""
-    import shutil
-    cur, nxt = f"{state_dir}/docs", f"{state_dir}/docs.next"
-    old = f"{state_dir}/docs.old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(cur):
-        os.rename(cur, old)
-    os.rename(nxt, cur)
-    shutil.rmtree(old, ignore_errors=True)

@@ -36,9 +36,7 @@ import time
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from maps_spark.sources.tile_store import (build_id as _build_id,
-                                           finalise_build, read_manifest,
-                                           write_manifest)
+from maps_spark.sources.tile_store import build_id as _build_id, finalise_build
 
 
 def run_media_curation(spark: SparkSession, media: DataFrame,
@@ -87,11 +85,8 @@ def run_media_curation(spark: SparkSession, media: DataFrame,
                    "near_dups_dropped": int(n_decoded - n_kept)},
         "build_sec": round(time.time() - t0, 2),
     }
-    if versioned:
-        finalise_build(out_root, build_id, manifest, keep=keep_builds)
-    else:
-        write_manifest(out_root, manifest)
-    return read_manifest(out_root)
+    return finalise_build(out_root, build_id, manifest,
+                          keep=keep_builds)
 
 
 def run_pair_curation(spark: SparkSession, media: DataFrame,
@@ -193,11 +188,8 @@ def run_pair_curation(spark: SparkSession, media: DataFrame,
                    "cross_modal_dups_dropped": int(n_aligned - n_kept)},
         "build_sec": round(time.time() - t0, 2),
     }
-    if versioned:
-        finalise_build(out_root, build_id, manifest, keep=keep_builds)
-    else:
-        write_manifest(out_root, manifest)
-    return read_manifest(out_root)
+    return finalise_build(out_root, build_id, manifest,
+                          keep=keep_builds)
 
 
 def read_pairs(spark: SparkSession, out_root: str) -> DataFrame:

@@ -31,8 +31,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from maps_spark.sources.tile_store import (build_id as _build_id,
-                                           finalise_build, read_manifest,
-                                           write_manifest)
+                                           finalise_build, read_manifest)
 
 
 def run_training_prep(spark: SparkSession, sf_dir: str, out_root: str,
@@ -124,11 +123,8 @@ def run_training_prep(spark: SparkSession, sf_dir: str, out_root: str,
             manifest["profile"] = gate["profile"]
         if gate["drift"] is not None:
             manifest["drift"] = gate["drift"]
-    if versioned:
-        finalise_build(out_root, build_id, manifest, keep=keep_builds)
-    else:
-        write_manifest(out_root, manifest)
-    return read_manifest(out_root)
+    return finalise_build(out_root, build_id, manifest,
+                          keep=keep_builds)
 
 
 def read_training_shards(spark: SparkSession, out_root: str) -> DataFrame:

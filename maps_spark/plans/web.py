@@ -38,8 +38,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from maps_spark.sources.tile_store import (build_id as _build_id,
-                                           finalise_build, read_manifest,
-                                           write_manifest)
+                                           finalise_build, read_manifest)
 
 QUALITY_WEIGHTS = {"n_tokens": 600_000, "n_stopwords": 400_000}
 
@@ -197,11 +196,8 @@ def run_web_corpus(spark: SparkSession, sf_dir: str, out_root: str,
             manifest["profile"] = gate["profile"]
         if gate["drift"] is not None:
             manifest["drift"] = gate["drift"]
-    if versioned:
-        finalise_build(out_root, build_id, manifest, keep=keep_builds)
-    else:
-        write_manifest(out_root, manifest)
-    return read_manifest(out_root)
+    return finalise_build(out_root, build_id, manifest,
+                          keep=keep_builds)
 
 
 def read_web_shards(spark: SparkSession, out_root: str) -> DataFrame:

@@ -28,20 +28,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from maps_spark.operators.similarity import (cluster_assign_udf, cosine_col,
                                              ivf_centroids)
+from maps_spark.sources import commit
 from maps_spark.sources.tile_store import read_manifest, write_manifest
-
-
-def _merge_manifest(root: str, new: dict) -> None:
-    """Manifest update that PRESERVES sibling-index keys: the IVF and
-    PQ builders share one root (the documented co-located layout), so
-    each merges its keys over whatever the other already wrote
-    instead of clobbering the file."""
-    try:
-        old = {k: v for k, v in read_manifest(root).items()
-               if k not in ("generated", "generated_unix")}
-    except FileNotFoundError:
-        old = {}
-    write_manifest(root, {**old, **new})
 
 
 def build_ivf_index(emb: DataFrame, root: str, n_clusters: int = 16,
@@ -64,10 +52,13 @@ def build_ivf_index(emb: DataFrame, root: str, n_clusters: int = 16,
         [(i, [float(x) for x in cent[i]]) for i in range(len(cent))],
         "cluster int, centroid array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(f"{root}/centroids")
-    _merge_manifest(root, {"n_clusters": int(len(cent)),
-                           "dim": int(cent.shape[1]),
-                           "kmeans_iters": kmeans_iters,
-                           "train_sample": train_sample})
+    # the IVF and PQ indexes share one root (the co-located layout):
+    # each keeps the manifest keys the other already wrote
+    write_manifest(root, {**commit.read_json(f"{root}/manifest.json", {}),
+                          "n_clusters": int(len(cent)),
+                          "dim": int(cent.shape[1]),
+                          "kmeans_iters": kmeans_iters,
+                          "train_sample": train_sample})
 
 
 def load_centroids(spark: SparkSession, root: str) -> np.ndarray:
@@ -201,18 +192,17 @@ def purge_ann_tombstones(spark: SparkSession, root: str,
     last). O(index) — run on takedown cadence, not per batch."""
     import os
     import shutil
-    from maps_spark.sources.maintenance import (purge_rows,
-                                                recover_compaction)
+    from maps_spark.sources.maintenance import purge_rows
     tpath = f"{root.rstrip('/')}/tombstones"
     if not os.path.isdir(tpath):
         return None
-    # self-repair a crashed earlier purge before rewriting
-    for sub in ("vectors", "pq_codes", "tombstones"):
-        recover_compaction(f"{root.rstrip('/')}/{sub}")
+    # self-repair a crashed earlier purge or cluster compaction first
+    vec = f"{root.rstrip('/')}/vectors"
+    commit.recover(root)
+    commit.recover(vec)
     ids = (spark.read.parquet(tpath)
            .select("vec_id").distinct().localCheckpoint())
     out: dict = {"tombstones": ids.count()}
-    vec = f"{root.rstrip('/')}/vectors"
     if os.path.isdir(vec):
         out["vectors"] = purge_rows(spark, vec, ids, "vec_id",
                                     partition_by=("cluster",),
@@ -263,9 +253,10 @@ def build_pq_index(emb: DataFrame, root: str, m: int = 8,
     spark.createDataFrame(
         rows, "subspace int, code int, centroid array<long>"
     ).coalesce(1).write.mode("overwrite").parquet(f"{root}/pq_books")
-    _merge_manifest(root, {"pq_m": m, "pq_n_cent": n_cent,
-                           "pq_iters": iters, "pq_scale": scale,
-                           "pq_train_sample": train_sample})
+    write_manifest(root, {**commit.read_json(f"{root}/manifest.json", {}),
+                          "pq_m": m, "pq_n_cent": n_cent,
+                          "pq_iters": iters, "pq_scale": scale,
+                          "pq_train_sample": train_sample})
 
 
 def load_pq_codebooks(spark: SparkSession,

@@ -14,14 +14,13 @@ files via a staging dir that is row-count-validated before any swap,
 preserving hive partition columns (``partition_by``) so
 partition-pruned readers are unaffected.
 
-Crash/concurrency contract: the swap is two renames (old -> ``.old``,
-staging -> live), which is NOT atomic as a pair — between them the
-live path is briefly absent, and a crash in that window leaves the
-only copy at ``.old``. Run compaction under the store's write lock
-(e.g. between streaming triggers) and call :func:`recover_compaction`
-at startup: it restores an orphaned ``.old`` and clears dead staging
-dirs. The original data is never deleted until the validated rewrite
-is live.
+Every rewrite here is a :func:`maps_spark.sources.commit.rewrite`
+(stage, validate, swap) and every segment manifest a
+:func:`~maps_spark.sources.commit.write_json`; the crash contract and
+its recovery rule are stated once, in :mod:`maps_spark.sources.commit`.
+Run maintenance under the store's write lock (e.g. between streaming
+triggers) and call :func:`~maps_spark.sources.commit.recover` on the
+store at startup.
 """
 
 from __future__ import annotations
@@ -31,23 +30,12 @@ import shutil
 
 from pyspark.sql import SparkSession
 
+from maps_spark.sources import commit
+
 
 def _count_star():
     import pyspark.sql.functions as F
     return F.count(F.lit(1))
-
-
-def swap_compacted(path: str, staging: str) -> None:
-    """The shared two-rename swap every compaction uses (live ->
-    ``.old``, staging -> live, drop ``.old``). ONE implementation so
-    the crash-recovery contract :func:`recover_compaction` repairs
-    stays true for every store kind. Callers must have validated the
-    staging copy first."""
-    old = path.rstrip("/") + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old)  # validated rewrite is live; safe to drop
 
 
 def dir_stats(path: str) -> tuple[int, int]:
@@ -82,6 +70,27 @@ def _write_staging_stats(spark: SparkSession, staging: str,
                 keys, value_col, sub=sub)
 
 
+def _sized_writer(df, size: int, target_file_bytes: int,
+                  partition_by: tuple[str, ...] = (),
+                  sort_within: tuple[str, ...] = ()):
+    """An overwrite writer for ``df`` in ``ceil(size / target)`` files
+    (per partition directory when ``partition_by`` is set), sorted
+    within files so row-group min/max stats stay selective."""
+    n_files = max(1, -(-size // target_file_bytes))
+    # partitioned writes spread across the cluster: hashing on the
+    # partition keys keeps one file per directory per target size,
+    # while max(n_files, parallelism) tasks write their key subsets'
+    # directories CONCURRENTLY — a single-task write serializes ~1024
+    # directory commits and was the measured bulk of a fold
+    n_write = max(n_files, df.sparkSession.sparkContext
+                  .defaultParallelism) if partition_by else n_files
+    out = df.repartition(n_write, *partition_by)
+    if sort_within:
+        out = out.sortWithinPartitions(*sort_within)
+    writer = out.write.mode("overwrite")
+    return writer.partitionBy(*partition_by) if partition_by else writer
+
+
 def compact_dir(spark: SparkSession, path: str,
                 target_file_bytes: int = 128 * 1024 * 1024,
                 partition_by: tuple[str, ...] = (),
@@ -94,69 +103,28 @@ def compact_dir(spark: SparkSession, path: str,
     sorted within files so row-group min/max stats stay selective.
 
     Returns {"files_before", "files_after", "bytes", "rows"}. The
-    rewrite goes to ``path + '.compact'`` and is validated (row count
-    vs the source) BEFORE the swap; a crash before the swap leaves the
-    original untouched, a crash mid-swap is repaired by
-    :func:`recover_compaction`. See the module docstring for the
-    locking contract.
+    rewrite is staged and validated (row count vs the source) BEFORE
+    the swap (:func:`maps_spark.sources.commit.rewrite`).
     """
     n_before, size = dir_stats(path)
-    n_files = max(1, -(-size // target_file_bytes))
     df = spark.read.parquet(path)
-    # partitioned writes: spread the per-directory commits across the
-    # cluster (hash on the partition keys keeps one file per dir)
-    n_write = n_files if not partition_by else max(
-        n_files, spark.sparkContext.defaultParallelism)
-    out = df.repartition(n_write, *partition_by) if partition_by \
-        else df.repartition(n_files)
-    if sort_within:
-        out = out.sortWithinPartitions(*sort_within)
-    staging = path.rstrip("/") + ".compact"
-    shutil.rmtree(staging, ignore_errors=True)
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-    # validate the rewrite before touching the live store: parquet
-    # footer counts, no data scan
+    writer = _sized_writer(df, size, target_file_bytes, partition_by,
+                           sort_within)
     n_rows = df.count()
-    staged_rows = spark.read.parquet(staging).count()
-    if staged_rows != n_rows:
-        shutil.rmtree(staging)
-        raise RuntimeError(
-            f"compaction validation failed for {path}: "
-            f"{staged_rows} staged rows != {n_rows} source rows")
-    _write_staging_stats(spark, staging, stats, sub=sub)
-    swap_compacted(path, staging)
+
+    def _check(staged: str) -> str | None:
+        # parquet footer counts, no data scan
+        staged_rows = spark.read.parquet(staged).count()
+        if staged_rows != n_rows:
+            return (f"compaction validation failed for {path}: "
+                    f"{staged_rows} staged rows != {n_rows} source rows")
+        _write_staging_stats(spark, staged, stats, sub=sub)
+        return None
+
+    commit.rewrite(path, writer.parquet, _check)
     n_after, _ = dir_stats(path)
     return {"files_before": n_before, "files_after": n_after,
             "bytes": size, "rows": n_rows}
-
-
-def recover_compaction(path: str) -> str | None:
-    """Startup repair for a crash during :func:`compact_dir`'s swap.
-
-    - live path missing but ``.old`` present -> the crash hit between
-      the two renames; restore ``.old`` as live (the validated staging
-      copy, if complete, is discarded — restoring the original is
-      always safe).
-    - stale ``.compact`` / leftover ``.old`` beside a live path ->
-      remove them.
-
-    Returns what was done ("restored", "cleaned") or None.
-    """
-    old = path.rstrip("/") + ".old"
-    staging = path.rstrip("/") + ".compact"
-    if not os.path.exists(path) and os.path.isdir(old):
-        os.rename(old, path)
-        shutil.rmtree(staging, ignore_errors=True)
-        return "restored"
-    cleaned = False
-    for p in (staging, old):
-        if os.path.isdir(p) and os.path.exists(path):
-            shutil.rmtree(p)
-            cleaned = True
-    return "cleaned" if cleaned else None
 
 
 # ---------------------------------------------------------------------
@@ -182,17 +150,17 @@ def recover_compaction(path: str) -> str | None:
 #   ``tier_fanout x tiers`` = O(log store).
 #
 # Crash contract (manifest is the single source of truth): publish
-# order is (1) rename staging -> seg dir, (2) swap manifest,
-# (3) delete consumed inputs (L0 / merged-away segments). A crash
-# before (2) leaves an orphan directory the manifest never names —
-# :func:`recover_segments` drops it and the inputs are refolded; a
-# crash after (2) is converged by the L0 fingerprint check (fold) or
-# by recover_segments dropping the now-unreferenced old segments
-# (merge). Duplicate rows can therefore never accrete.
+# order is (1) stage + rename the seg dir (commit.rewrite), (2) swap
+# the manifest (commit.write_json), (3) delete consumed inputs (L0 /
+# merged-away segments). A crash before (2) leaves an orphan directory
+# the manifest never names — :func:`recover_segments` drops it and the
+# inputs are refolded; a crash after (2) is converged by the L0
+# fingerprint check (fold) or by recover_segments dropping the
+# now-unreferenced old segments (merge). Duplicate rows can therefore
+# never accrete.
 # ---------------------------------------------------------------------
 
 SEG_PREFIX = "seg-"
-_SEG_TMP = ".seg-tmp-"
 
 # Scale-adaptive sub-bucket fan-out (guide §2: partitioning must adapt
 # to data size, not be a constant tuned for one scale). A segment's
@@ -238,17 +206,6 @@ def read_segment_manifest(root: str) -> dict | None:
         return json.load(f)
 
 
-def _write_segment_manifest(root: str, manifest: dict) -> None:
-    import json
-    p = _manifest_path(root)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, p)  # atomic publish
-
-
 def list_segments(root: str) -> list[str]:
     """Absolute paths of the live segment directories in manifest
     order (oldest first); ``[]`` when the store has no compacted
@@ -261,7 +218,7 @@ def list_segments(root: str) -> list[str]:
 
 def recover_segments(root: str) -> str | None:
     """Startup repair for a crash during a segment publish: drop every
-    ``seg-*`` / ``.seg-tmp-*`` directory under ``root`` that the
+    ``seg-*`` directory under ``root`` (staged ones included) that the
     manifest does not name. Safe by the publish order (rename, THEN
     manifest swap, THEN input deletion): an unreferenced segment means
     the crash hit before the manifest swap, and its source data (L0,
@@ -272,8 +229,7 @@ def recover_segments(root: str) -> str | None:
     live = {s["name"] for s in m["segments"]} if m else set()
     dropped = False
     for name in os.listdir(root):
-        if name.startswith(_SEG_TMP) or (name.startswith(SEG_PREFIX)
-                                         and name not in live):
+        if name.startswith(SEG_PREFIX) and name not in live:
             shutil.rmtree(os.path.join(root, name), ignore_errors=True)
             dropped = True
     return "cleaned" if dropped else None
@@ -305,8 +261,9 @@ def _publish_segment(spark: SparkSession, root: str, df, size_hint: int,
                      sub_mod: tuple[str, str, int] | None = None
                      ) -> tuple[int, int, int | None]:
     """Write ``df`` as a validated immutable segment directory
-    ``root/seg_name`` (staging + count validation + per-segment Bloom
-    ``_stats`` + one rename). Returns (bytes, rows, sub). The caller
+    ``root/seg_name`` (:func:`maps_spark.sources.commit.rewrite`: stage,
+    count validation + per-segment Bloom ``_stats``, one rename).
+    Returns (bytes, rows, sub). The caller
     swaps the manifest afterwards — until then the directory is
     invisible to readers and recover_segments may drop it.
 
@@ -322,47 +279,34 @@ def _publish_segment(spark: SparkSession, root: str, df, size_hint: int,
         sub = _adaptive_sub(size_hint, max_sub)
         df = df.withColumn(
             sub_col, F.pmod(F.col(value_col).cast("long"), F.lit(sub)))
-    n_files = max(1, -(-size_hint // target_file_bytes))
-    # partitioned writes spread across the cluster: hashing on the
-    # partition keys keeps one file per directory per target size,
-    # while max(n_files, parallelism) tasks write their key subsets'
-    # directories CONCURRENTLY — a single-task write serializes ~1024
-    # directory commits and was the measured bulk of a fold
-    n_write = n_files if not partition_by else max(
-        n_files, spark.sparkContext.defaultParallelism)
     obs = Observation()
-    df = df.observe(obs, _count_star().alias("n"))
-    out = df.repartition(n_write, *partition_by) if partition_by \
-        else df.repartition(n_files)
-    if sort_within:
-        out = out.sortWithinPartitions(*sort_within)
-    staging = os.path.join(root, _SEG_TMP + seg_name)
-    shutil.rmtree(staging, ignore_errors=True)
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-    n_rows = obs.get["n"]
-    if stats is not None:
-        # ONE pass over the staged bytes builds the Bloom stats AND
-        # yields the validation count (sum of per-sub-bucket n) — the
-        # separate footer-count job re-listed every partition dir
-        from maps_spark.sources.bloom import write_stats
-        keys, value_col = stats
-        staged_rows = write_stats(spark.read.parquet(staging),
-                                  f"{staging}/_stats", keys, value_col,
-                                  sub=sub)
-    else:
-        # footer-only count of the staged bytes, no data scan
-        staged_rows = spark.read.parquet(staging).count()
-    if staged_rows != n_rows:
-        shutil.rmtree(staging)
-        raise RuntimeError(
-            f"segment validation failed for {root}/{seg_name}: "
-            f"{staged_rows} staged rows != {n_rows} source rows")
-    _n, size = dir_stats(staging)
-    os.rename(staging, os.path.join(root, seg_name))
-    return size, n_rows, sub
+    writer = _sized_writer(df.observe(obs, _count_star().alias("n")),
+                           size_hint, target_file_bytes, partition_by,
+                           sort_within)
+
+    def _check(staged: str) -> str | None:
+        n_rows = obs.get["n"]
+        if stats is not None:
+            # ONE pass over the staged bytes builds the Bloom stats AND
+            # yields the validation count (sum of per-sub-bucket n) —
+            # the separate footer-count job re-listed every partition
+            from maps_spark.sources.bloom import write_stats
+            keys, value_col = stats
+            staged_rows = write_stats(spark.read.parquet(staged),
+                                      f"{staged}/_stats", keys,
+                                      value_col, sub=sub)
+        else:
+            # footer-only count of the staged bytes, no data scan
+            staged_rows = spark.read.parquet(staged).count()
+        if staged_rows != n_rows:
+            return (f"segment validation failed for {root}/{seg_name}: "
+                    f"{staged_rows} staged rows != {n_rows} source rows")
+        return None
+
+    seg = os.path.join(root, seg_name)
+    commit.rewrite(seg, writer.parquet, _check)
+    _n, size = dir_stats(seg)
+    return size, obs.get["n"], sub
 
 
 def _size_tier(n_bytes: int) -> int:
@@ -420,7 +364,7 @@ def fold_l0_segments(spark: SparkSession, live: str, l0: str,
                 entry["sub"] = sub
             m = {"segments": m["segments"] + [entry],
                  "next": m["next"] + 1, "last_l0": fp}
-            _write_segment_manifest(live, m)
+            commit.write_json(_manifest_path(live), m)
             shutil.rmtree(l0)  # folded; the L0 level restarts empty
             folded = {"files": n_l0, "bytes": size, "rows": rows}
     merges = _merge_segment_tiers(spark, live, target_file_bytes,
@@ -486,7 +430,7 @@ def _merge_segment_tiers(spark: SparkSession, root: str,
             entry["sub"] = sub
         m2 = {"segments": kept + [entry],
               "next": m["next"] + 1, "last_l0": m.get("last_l0")}
-        _write_segment_manifest(root, m2)
+        commit.write_json(_manifest_path(root), m2)
         for s in group:  # manifest no longer names them; drop
             shutil.rmtree(os.path.join(root, s["name"]),
                           ignore_errors=True)
@@ -519,8 +463,7 @@ def compact_dir_tiered(spark: SparkSession, path: str,
     rename semantics, like every swap here; an object-store
     deployment would copy).
 
-    Same staging + validation + two-rename-swap crash contract as
-    :func:`compact_dir` / :func:`recover_compaction`."""
+    Same validated staged rewrite as :func:`compact_dir`."""
     names = [f for f in os.listdir(path) if f.endswith(".parquet")]
     sized = sorted(((f, os.path.getsize(os.path.join(path, f)))
                     for f in names), key=lambda t: t[1])
@@ -537,25 +480,25 @@ def compact_dir_tiered(spark: SparkSession, path: str,
         return {"files_before": len(sized), "files_after": len(sized),
                 "bytes": total, "rows": None, "skipped": True}
     keep = [f for f, _ in sized if f not in {f for f, _ in merge}]
-    merge_bytes = sum(s for _, s in merge)
-    n_files = max(1, -(-merge_bytes // target_file_bytes))
     df = spark.read.parquet(*(os.path.join(path, f) for f, _ in merge))
-    out = df.repartition(n_files)
-    if sort_within:
-        out = out.sortWithinPartitions(*sort_within)
-    staging = path.rstrip("/") + ".compact"
-    shutil.rmtree(staging, ignore_errors=True)
-    out.write.mode("overwrite").parquet(staging)
+    writer = _sized_writer(df, sum(s for _, s in merge),
+                           target_file_bytes, sort_within=sort_within)
     n_rows = df.count()  # parquet footer counts only
-    staged_rows = spark.read.parquet(staging).count()
-    if staged_rows != n_rows:
-        shutil.rmtree(staging)
-        raise RuntimeError(
-            f"tiered compaction validation failed for {path}: "
-            f"{staged_rows} staged rows != {n_rows} merged-source rows")
-    for f in keep:  # graduated files: hardlink, zero rewrite
-        os.link(os.path.join(path, f), os.path.join(staging, f))
-    swap_compacted(path, staging)
+    live_rows = spark.read.parquet(path).count()
+
+    def _write(staged: str) -> None:
+        writer.parquet(staged)
+        for f in keep:  # graduated files: hardlink, zero rewrite
+            os.link(os.path.join(path, f), os.path.join(staged, f))
+
+    def _check(staged: str) -> str | None:
+        staged_rows = spark.read.parquet(staged).count()
+        if staged_rows != live_rows:
+            return (f"tiered compaction validation failed for {path}: "
+                    f"{staged_rows} staged rows != {live_rows} source rows")
+        return None
+
+    commit.rewrite(path, _write, _check)
     n_after, _ = dir_stats(path)
     return {"files_before": len(sized), "files_after": n_after,
             "bytes": total, "rows": n_rows, "skipped": False}
@@ -569,9 +512,10 @@ def compact_frontier_store(spark: SparkSession, store_root: str,
     appends one file-set to refs/seen/edges, so a long-running crawl
     accumulates small files linearly with batch count. Same validated
     rewrite + recovery contract as the dedup store (run between
-    triggers; call :func:`recover_compaction` per table dir on
-    startup). ``batch_id`` is preserved — compaction changes file
-    layout only, so ``read_frontier`` assembles identically."""
+    triggers; call :func:`maps_spark.sources.commit.recover` on the
+    store root on startup). ``batch_id`` is preserved — compaction
+    changes file layout only, so ``read_frontier`` assembles
+    identically."""
     out = {}
     for sub, sort in (("refs", ("norm_href",)),
                       ("seen", ("norm_href",)),
@@ -624,42 +568,30 @@ def purge_rows(spark: SparkSession, path: str, ids, key: str,
     major-compaction split. O(directory) by design: run it rarely,
     on takedown/retention cadence, not per batch.
 
-    Same staging + validation + two-rename-swap crash contract as
-    :func:`compact_dir`."""
+    Same validated staged rewrite as :func:`compact_dir`; an
+    all-purged table is retired (its directory unpublished)."""
     from pyspark.sql import Observation
     df = spark.read.parquet(path)
     keep = df.join(ids.select(key).distinct(), key, "left_anti")
-    obs = Observation()
-    keep = keep.observe(obs, _count_star().alias("n"))
-    _n_before, size = dir_stats(path)
-    n_files = max(1, -(-size // target_file_bytes))
-    n_write = n_files if not partition_by else max(
-        n_files, spark.sparkContext.defaultParallelism)
-    out = keep.repartition(n_write, *partition_by) if partition_by \
-        else keep.repartition(n_files)
-    if sort_within:
-        out = out.sortWithinPartitions(*sort_within)
-    staging = path.rstrip("/") + ".compact"
-    shutil.rmtree(staging, ignore_errors=True)
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-    n_rows = obs.get["n"]
-    staged_rows = spark.read.parquet(staging).count() \
-        if n_rows else 0
-    if staged_rows != n_rows:
-        shutil.rmtree(staging)
-        raise RuntimeError(
-            f"purge validation failed for {path}: "
-            f"{staged_rows} staged rows != {n_rows} surviving rows")
-    if n_rows == 0:
-        # an all-purged table: swap in nothing, drop the directory
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(path)
+    # early-terminating existence probe (as in purge_segments): an
+    # all-purged table has no data to stage
+    if not keep.take(1):
+        commit.retire(path)
         return {"rows_after": 0, "dropped_dir": True}
-    swap_compacted(path, staging)
-    return {"rows_after": int(n_rows), "dropped_dir": False}
+    obs = Observation()
+    writer = _sized_writer(keep.observe(obs, _count_star().alias("n")),
+                           dir_stats(path)[1], target_file_bytes,
+                           partition_by, sort_within)
+
+    def _check(staged: str) -> str | None:
+        staged_rows = spark.read.parquet(staged).count()
+        if staged_rows != obs.get["n"]:
+            return (f"purge validation failed for {path}: {staged_rows} "
+                    f"staged rows != {obs.get['n']} surviving rows")
+        return None
+
+    commit.rewrite(path, writer.parquet, _check)
+    return {"rows_after": int(obs.get["n"]), "dropped_dir": False}
 
 
 def purge_segments(spark: SparkSession, root: str, ids, key: str,
@@ -691,7 +623,7 @@ def purge_segments(spark: SparkSession, root: str, ids, key: str,
     # never materialized driver-side or checkpointed whole
     if not df.take(1):  # everything purged: empty store, no segment
         old = [s["name"] for s in m["segments"]]
-        _write_segment_manifest(root, {
+        commit.write_json(_manifest_path(root), {
             "segments": [], "next": m["next"],
             "last_l0": m.get("last_l0")})
         for n in old:
@@ -706,7 +638,7 @@ def purge_segments(spark: SparkSession, root: str, ids, key: str,
     if sub is not None:
         entry["sub"] = sub
     old = [s["name"] for s in m["segments"]]
-    _write_segment_manifest(root, {
+    commit.write_json(_manifest_path(root), {
         "segments": [entry],
         "next": m["next"] + 1, "last_l0": m.get("last_l0")})
     for n in old:
@@ -726,7 +658,8 @@ def compact_ann_store(spark: SparkSession, root: str,
     the size-tiered merge applies per cluster — only small files are
     rewritten, graduated ones hardlink through. ``pq_codes`` (flat)
     gets the same treatment. Run between triggers; call
-    :func:`recover_compaction` per cluster dir on startup."""
+    :func:`maps_spark.sources.commit.recover` on ``vectors`` and
+    ``pq_codes`` on startup."""
     out = {}
     vec_root = f"{root.rstrip('/')}/vectors"
     if os.path.isdir(vec_root):
@@ -764,8 +697,7 @@ def purge_dedup_tombstones(spark: SparkSession, store_dir: str,
         return None
     # self-repair first: a crashed earlier purge may have left
     # half-swapped tables or unreferenced segments
-    for sub in ("sigs", "hashes", "dupes", "tombstones"):
-        recover_compaction(f"{store_dir}/{sub}")
+    commit.recover(store_dir)
     recover_segments(f"{store_dir}/bands")
     ids = (spark.read.parquet(tpath)
            .select("doc_id").distinct().localCheckpoint())
@@ -802,8 +734,7 @@ def purge_media_tombstones(spark: SparkSession, store_dir: str,
     tpath = f"{store_dir}/tombstones"
     if not os.path.isdir(tpath):
         return None
-    for sub in ("hashes", "dupes", "tombstones"):
-        recover_compaction(f"{store_dir}/{sub}")
+    commit.recover(store_dir)
     recover_segments(f"{store_dir}/bands")
     ids = (spark.read.parquet(tpath)
            .select("media_id").distinct().localCheckpoint())

@@ -26,6 +26,8 @@ import time
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from maps_spark.sources import commit
+
 
 DEFAULT_CHECKLIST_DIR = "__default__"
 
@@ -141,13 +143,13 @@ def build_id(now: float | None = None) -> str:
 
 
 def write_manifest(root: str, meta: dict | None = None) -> None:
-    m = {"generated": time.strftime("%Y%m%d_%H%M", time.gmtime()),
-         "generated_unix": int(time.time()), **(meta or {})}
-    os.makedirs(root, exist_ok=True)
-    tmp = f"{root}/manifest.json.tmp"
-    with open(tmp, "w") as f:
-        json.dump(m, f)
-    os.replace(tmp, f"{root}/manifest.json")  # atomic swap
+    """Atomically publish ``root/manifest.json`` (``meta`` plus fresh
+    ``generated``/``generated_unix`` stamps) through
+    :func:`maps_spark.sources.commit.write_json`."""
+    commit.write_json(f"{root}/manifest.json", {
+        **(meta or {}),
+        "generated": time.strftime("%Y%m%d_%H%M", time.gmtime()),
+        "generated_unix": int(time.time())})
 
 
 def read_manifest(root: str) -> dict:
@@ -166,19 +168,25 @@ def resolve_root(root: str) -> str:
     return f"{root}/builds/{build_id}" if build_id else root
 
 
-def finalise_build(root: str, build_id: str, meta: dict | None = None,
-                   keep: int = 2) -> None:
+def finalise_build(root: str, build_id: str | None,
+                   meta: dict | None = None, keep: int = 2) -> dict:
     """FinaliseBackfill semantics (FinaliseBackfill.java:65-135,157-199):
     atomically repoint the manifest at the finished build, then drop all
-    but the newest ``keep`` builds (lexicographic timestamp ids)."""
+    but the newest ``keep`` builds (lexicographic timestamp ids) — the
+    manifest swap is the build's one commit point (see
+    :mod:`maps_spark.sources.commit`). ``build_id=None`` finalises an
+    unversioned layout: the manifest alone, no pointer, no rotation.
+    Returns the published manifest."""
     import shutil
-    write_manifest(root, {"build_id": build_id, **(meta or {})})
+    write_manifest(root, meta if build_id is None
+                   else {"build_id": build_id, **(meta or {})})
     builds_dir = f"{root}/builds"
-    if os.path.isdir(builds_dir):
+    if build_id is not None and os.path.isdir(builds_dir):
         builds = sorted(os.listdir(builds_dir))
         for old in builds[:-keep] if keep else builds:
             if old != build_id:
                 shutil.rmtree(f"{builds_dir}/{old}", ignore_errors=True)
+    return read_manifest(root)
 
 
 def list_builds(root: str) -> list[dict]:

@@ -212,11 +212,6 @@ def tile_xy(p: str, z: int, tile_size: int = TILE_SIZE,
     )
 
 
-def tile_local(p: str, tile: str, tile_size: int = TILE_SIZE) -> str:
-    """Tile-local pixel: ``p - tile*T`` (may be <0 / >=T in buffers)."""
-    return f"CAST({p} AS BIGINT) - CAST({tile} AS BIGINT) * {tile_size}"
-
-
 # ---------------------------------------------------------------------------
 # borYear dictionary packing (EncodeBorYearUDF.java:34-66)
 # ---------------------------------------------------------------------------
@@ -253,14 +248,6 @@ def encode_bor_year(bor: str, year: str) -> str:
     return f"(coalesce(CAST({year} AS BIGINT), 0) * 100 + {bor_code(bor)})"
 
 
-def decode_year(bor_year: str) -> str:
-    return f"CAST(floor(({bor_year}) / 100) AS BIGINT)"
-
-
-def decode_bor(bor_year: str) -> str:
-    return f"(({bor_year}) % 100)"
-
-
 # ---------------------------------------------------------------------------
 # Decimal-stable floating aggregates
 # ---------------------------------------------------------------------------
@@ -275,13 +262,6 @@ def sum_stable(col: str, scale: int = 6) -> str:
     return (
         f"CAST(CAST(sum(CAST({col} AS DECIMAL(28,{scale}))) "
         f"AS DECIMAL(38,{scale})) AS DOUBLE)"
-    )
-
-
-def avg_stable(col: str, scale: int = 6) -> str:
-    return (
-        f"CAST(CAST(sum(CAST({col} AS DECIMAL(28,{scale}))) "
-        f"AS DECIMAL(38,{scale})) AS DOUBLE) / count({col})"
     )
 
 

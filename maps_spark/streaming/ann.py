@@ -19,8 +19,6 @@ the new centroids the moment the manifest swaps.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from maps_spark.sources.ann_index import upsert_ivf_index
@@ -44,40 +42,24 @@ def run_ann_ingest(spark: SparkSession, input_path: str, root: str,
     batch count. Size-tiered per cluster dir: only small files are
     rewritten, graduated ones hardlink through (same crash contract
     as the dedup store — the prior batch's replay marker is already
-    durable, and recover_compaction precedes every compaction and
-    the first trigger)."""
-    from maps_spark.streaming.refresh import _applied_batch, _commit_batch
+    durable, and commit.recover precedes every compaction and the
+    first trigger)."""
+    from maps_spark.streaming.refresh import (quarantine_gate,
+                                              run_file_stream)
     marker = root.rstrip("/") + "/_meta/last_batch.json"
     state = {"n": 0}
-    schema = spark.read.parquet(input_path).schema
-    reader = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", max_files_per_trigger))
-    if os.path.isfile(input_path):
-        stream = reader.option(
-            "pathGlobFilter", os.path.basename(input_path)).parquet(
-            os.path.dirname(input_path))
-    else:
-        stream = reader.parquet(input_path)
 
     def _body(batch_df: DataFrame, batch_id: int) -> None:
-        if _applied_batch(marker) >= batch_id:
-            return
-        from maps_spark.streaming.refresh import quarantine_gate
         quarantine_gate(batch_df, expectations, root, batch_id)
         if compact_every:
-            from maps_spark.sources.maintenance import (
-                compact_ann_store, recover_compaction)
-            vec_root = f"{root.rstrip('/')}/vectors"
-            if os.path.isdir(vec_root):
-                for d in os.listdir(vec_root):
-                    if d.startswith("cluster="):
-                        recover_compaction(os.path.join(vec_root, d))
-            recover_compaction(f"{root.rstrip('/')}/pq_codes")
+            from maps_spark.sources.commit import recover
+            from maps_spark.sources.maintenance import compact_ann_store
+            recover(f"{root.rstrip('/')}/vectors")
+            recover(f"{root.rstrip('/')}/pq_codes")
             if state["n"] and state["n"] % compact_every == 0:
                 compact_ann_store(spark, root)
         upsert_ivf_index(batch_df, root, id_col=id_col, vec_col=vec_col)
         state["n"] += 1
-        _commit_batch(marker, batch_id)
 
-    return (stream.writeStream.foreachBatch(_body)
-            .trigger(availableNow=True).start())
+    return run_file_stream(spark, input_path, marker, _body,
+                           max_files_per_trigger)

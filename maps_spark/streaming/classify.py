@@ -16,8 +16,6 @@ classes delta table, one per-document argmax window.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -37,28 +35,16 @@ def run_streaming_classification(spark: SparkSession, input_path: str,
     the same body.
     """
     from maps_spark.operators.classify import nb_score
-    from maps_spark.streaming.refresh import _applied_batch, _commit_batch
+    from maps_spark.streaming.refresh import run_file_stream
 
     classes, delta = load_nb_model(spark, model_root)
     tc = text_col or read_manifest(model_root).get("text_col", "text")
     marker = out_root.rstrip("/") + "/_meta/last_batch.json"
-    schema = spark.read.parquet(input_path).schema
-    reader = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", max_files_per_trigger))
-    if os.path.isfile(input_path):
-        stream = reader.option(
-            "pathGlobFilter", os.path.basename(input_path)).parquet(
-            os.path.dirname(input_path))
-    else:
-        stream = reader.parquet(input_path)
 
     def _body(batch_df: DataFrame, batch_id: int) -> None:
-        if _applied_batch(marker) >= batch_id:
-            return
         (nb_score(batch_df, classes, delta, tc)
          .withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(f"{out_root}/predictions"))
-        _commit_batch(marker, batch_id)
 
-    return (stream.writeStream.foreachBatch(_body)
-            .trigger(availableNow=True).start())
+    return run_file_stream(spark, input_path, marker, _body,
+                           max_files_per_trigger)

@@ -58,9 +58,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from maps_spark.operators.dedup import (band_key_col, cap_buckets,
                                         minhash_signatures, minhash_verify)
+from maps_spark.streaming.refresh import run_file_stream
 
-SIG_DIRS = ("sigs", "bands", "bands_l0", "hashes", "dupes",
-            "tombstones")
 # sub-partition fan-out of the band index: bands x sub-buckets dirs.
 # 64 keeps directory counts sane while letting a small batch prune to
 # a few percent of the store's files.
@@ -126,32 +125,6 @@ def read_partitioned_subset(spark: SparkSession, root: str,
     if not paths:
         return None
     return spark.read.option("basePath", root).parquet(*paths)
-
-
-def run_file_stream(spark: SparkSession, input_path: str, marker: str,
-                    process, max_files_per_trigger: int = 1):
-    """Shared landing-zone wiring: parquet file stream -> replay-
-    guarded foreachBatch -> availableNow drain (used by the text and
-    image incremental dedup runners)."""
-    from maps_spark.streaming.refresh import _applied_batch, _commit_batch
-    schema = spark.read.parquet(input_path).schema
-    reader = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", max_files_per_trigger))
-    if os.path.isfile(input_path):
-        stream = reader.option(
-            "pathGlobFilter", os.path.basename(input_path)).parquet(
-            os.path.dirname(input_path))
-    else:
-        stream = reader.parquet(input_path)
-
-    def _body(batch_df: DataFrame, batch_id: int) -> None:
-        if _applied_batch(marker) >= batch_id:
-            return
-        process(batch_df, batch_id)
-        _commit_batch(marker, batch_id)
-
-    return (stream.writeStream.foreachBatch(_body)
-            .trigger(availableNow=True).start())
 
 
 def read_two_level(spark: SparkSession, l1_root: str, l0_root: str,
@@ -513,7 +486,7 @@ def run_incremental_dedup(spark: SparkSession, input_path: str,
     BEFORE the batch body (i.e. after the previous batch's replay
     marker committed) keeps the crash contract intact: a crash
     mid-compaction replays nothing (the marker is already durable)
-    and the half-swap is repaired by the recover_compaction pass
+    and the half-swap is repaired by the commit.recover pass
     that precedes every compaction and the first trigger."""
     marker = store_dir.rstrip("/") + "/_meta/last_batch.json"
     state = {"n": 0}
@@ -522,11 +495,10 @@ def run_incremental_dedup(spark: SparkSession, input_path: str,
         from maps_spark.streaming.refresh import quarantine_gate
         quarantine_gate(df, expectations, store_dir, bid)
         if compact_every:
+            from maps_spark.sources.commit import recover
             from maps_spark.sources.maintenance import (
-                compact_dedup_store, recover_compaction,
-                recover_segments)
-            for sub in SIG_DIRS:
-                recover_compaction(f"{store_dir}/{sub}")
+                compact_dedup_store, recover_segments)
+            recover(store_dir)
             recover_segments(f"{store_dir}/bands")
             if state["n"] and state["n"] % compact_every == 0:
                 import time as _time

@@ -40,7 +40,7 @@ def run_frontier_ingest(spark: SparkSession, input_path: str,
     from maps_spark.operators.html import (_links_with_source,
                                            candidate_refs, page_urls,
                                            site_domain_edges)
-    from maps_spark.streaming.dedup import run_file_stream
+    from maps_spark.streaming.refresh import run_file_stream
     marker = store_root.rstrip("/") + "/_meta/last_batch.json"
 
     def _body(batch_df: DataFrame, batch_id: int) -> None:

@@ -31,8 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from maps_spark.operators.dedup import cap_buckets
 from maps_spark.operators.multimodal import image_dhash
-from maps_spark.streaming.dedup import (BAND_SUBBUCKETS, _try_read,
-                                        run_file_stream)
+from maps_spark.streaming.dedup import BAND_SUBBUCKETS, _try_read
+from maps_spark.streaming.refresh import run_file_stream
 
 
 def dhash_band_rows(h: DataFrame, id_col: str = "media_id",
@@ -206,10 +206,6 @@ def rejected(spark: SparkSession, store_dir: str) -> DataFrame:
     return spark.read.parquet(f"{store_dir}/dupes")
 
 
-MEDIA_SIG_DIRS = ("hashes", "bands", "bands_l0", "dupes",
-                  "tombstones")
-
-
 def run_incremental_image_dedup(spark: SparkSession, input_path: str,
                                 store_dir: str,
                                 max_files_per_trigger: int = 1,
@@ -222,7 +218,7 @@ def run_incremental_image_dedup(spark: SparkSession, input_path: str,
     ``compact_every=k`` folds the band L0 into the path-pruned L1 and
     compacts the flat tables at the START of every k-th trigger —
     the same crash-safe cadence as the text dedup runner (the prior
-    batch's replay marker is already durable, and recover_compaction
+    batch's replay marker is already durable, and commit.recover
     precedes every compaction and the first trigger)."""
     marker = store_dir.rstrip("/") + "/_meta/last_batch.json"
     state = {"n": 0}
@@ -231,11 +227,10 @@ def run_incremental_image_dedup(spark: SparkSession, input_path: str,
         from maps_spark.streaming.refresh import quarantine_gate
         quarantine_gate(df, expectations, store_dir, bid)
         if compact_every:
+            from maps_spark.sources.commit import recover
             from maps_spark.sources.maintenance import (
-                compact_media_store, recover_compaction,
-                recover_segments)
-            for sub in MEDIA_SIG_DIRS:
-                recover_compaction(f"{store_dir}/{sub}")
+                compact_media_store, recover_segments)
+            recover(store_dir)
             recover_segments(f"{store_dir}/bands")
             if state["n"] and state["n"] % compact_every == 0:
                 compact_media_store(spark, store_dir)

@@ -19,6 +19,10 @@ module adds the missing incremental path as new scope:
 Event-time semantics: the events table's ``ts`` is TIMESTAMP(MICROS)
 parquet (read as TIMESTAMP_NTZ); a 10-minute watermark bounds state for
 the windowed variant.
+
+Every store write here publishes through :mod:`maps_spark.sources.commit`
+(staged bucket swaps, the replay marker, the quarantine report); the
+crash contract is stated there.
 """
 
 from __future__ import annotations
@@ -29,6 +33,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from maps_spark.operators import pyramid as PY
+from maps_spark.sources import commit
 from maps_spark.sources.occurrence import occurrence_plan
 
 
@@ -58,8 +63,6 @@ def quarantine_gate(batch_df: DataFrame, expectations: dict | None,
     """
     if expectations is None:
         return None
-    import json
-
     from maps_spark.operators.expectations import evaluate_contract
     if not any(k in expectations for k in ("conditions", "unique")):
         # a typo'd contract ({"condtions": ...}) must fail loudly —
@@ -72,30 +75,38 @@ def quarantine_gate(batch_df: DataFrame, expectations: dict | None,
     gate = evaluate_contract(batch_df, expectations)
     if gate["ok"]:
         return gate
-    qdir = store_root.rstrip("/") + "/_meta/quarantine"
-    os.makedirs(qdir, exist_ok=True)
-    path = f"{qdir}/batch_{batch_id}.json"
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"batch_id": batch_id, **gate}, f, default=str)
-    os.replace(tmp, path)
+    path = f"{store_root.rstrip('/')}/_meta/quarantine/batch_{batch_id}.json"
+    commit.write_json(path, {"batch_id": batch_id, **gate}, default=str)
     raise BatchQuarantined(
         f"batch {batch_id} failed expectations {gate['failed']}; "
         f"no store write, replay marker not advanced (report: {path})")
 
 
-def _stream_parquet(spark: SparkSession, path: str):
-    """File-stream reader that also accepts a single-file path
-    (FileStreamSource requires a directory; testdata tables are bare
-    files, a landing zone is a directory)."""
+def _stream_parquet(spark: SparkSession, path: str,
+                    max_files_per_trigger: int = 4):
+    """The one parquet file-stream reader; it also accepts a
+    single-file path (FileStreamSource requires a directory; testdata
+    tables are bare files, a landing zone is a directory)."""
     schema = spark.read.parquet(path).schema
     reader = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 4))
+              .option("maxFilesPerTrigger", max_files_per_trigger))
     if os.path.isfile(path):
         return reader.option(
             "pathGlobFilter", os.path.basename(path)).parquet(
             os.path.dirname(path))
     return reader.parquet(path)
+
+
+def run_file_stream(spark: SparkSession, input_path: str, marker: str,
+                    process, max_files_per_trigger: int = 1):
+    """Shared landing-zone wiring: parquet file stream -> replay-
+    guarded foreachBatch (:func:`maps_spark.sources.commit.guarded`)
+    -> availableNow drain. ``availableNow`` drains the backlog and
+    stops; a live feed would use a processing-time trigger with the
+    same body."""
+    return (_stream_parquet(spark, input_path, max_files_per_trigger)
+            .writeStream.foreachBatch(commit.guarded(marker, process))
+            .trigger(availableNow=True).start())
 
 
 def stream_occurrence(spark: SparkSession, input_dir: str,
@@ -159,26 +170,6 @@ def _applied_marker(batch_id: int) -> str:
     return f"_applied-{batch_id}"
 
 
-def _recover_bucket_swaps(store: str) -> None:
-    """Repair a crash inside :func:`_swap_buckets`: a bucket renamed
-    aside (``bucket=N.old``) whose replacement never arrived is
-    restored (its accumulated history is the only copy); a leftover
-    ``.old`` beside a live bucket is dropped (the swap completed).
-    Cheap (one listdir) and a no-op outside the crash window."""
-    import shutil
-    if not os.path.isdir(store):
-        return
-    for name in os.listdir(store):
-        if not name.endswith(".old"):
-            continue
-        live = os.path.join(store, name[:-len(".old")])
-        old = os.path.join(store, name)
-        if os.path.isdir(live):
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.rename(old, live)
-
-
 def _buckets_already_applied(store: str, buckets, batch_id) -> set:
     """Buckets whose LIVE directory already carries this batch's
     applied marker — i.e. they were swapped by a crashed earlier
@@ -191,36 +182,19 @@ def _buckets_already_applied(store: str, buckets, batch_id) -> set:
                 store, f"bucket={b}", _applied_marker(batch_id)))}
 
 
-def _swap_buckets(store: str, staging: str, buckets, batch_id) -> None:
-    """Publish staged bucket directories into the live store: mark
-    each staged dir with the applied batch id (an underscore file —
-    invisible to parquet readers; the next successful batch replaces
-    the whole directory, so markers never accumulate), rename the
-    live dir aside, rename staging in, and drop the aside copies only
-    after EVERY bucket swapped — at no instant does a bucket's
-    accumulated history exist nowhere (ADVICE r10), and a replay
-    after a mid-loop crash skips the marked buckets and re-merges the
-    rest from their pre-batch state."""
-    import shutil
-    os.makedirs(store, exist_ok=True)
-    aside = []
+def _mark_applied(staged: str, buckets, batch_id) -> None:
+    """Mark each staged bucket with the applied batch id (an
+    underscore file — invisible to parquet readers; the next
+    successful batch replaces the whole directory, so markers never
+    accumulate). A replay after a crash mid-swap skips the marked
+    buckets and re-merges the rest from their pre-batch state."""
+    if batch_id is None:
+        return
     for b in buckets:
-        src = os.path.join(staging, f"bucket={b}")
-        if not os.path.isdir(src):
-            continue  # a bucket whose rows all vanished cannot occur
-        if batch_id is not None:
+        src = os.path.join(staged, f"bucket={b}")
+        if os.path.isdir(src):
             open(os.path.join(src, _applied_marker(batch_id)),
                  "w").close()
-        dst = os.path.join(store, f"bucket={b}")
-        old = dst + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(dst):
-            os.rename(dst, old)
-            aside.append(old)
-        os.rename(src, dst)
-    for old in aside:
-        shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(staging, ignore_errors=True)
 
 
 def merge_into_pixels(delta: DataFrame, pixel_store: str,
@@ -243,14 +217,12 @@ def merge_into_pixels(delta: DataFrame, pixel_store: str,
     accumulate: batch N merges into the result of batches 1..N-1. A
     Delta/Iceberg deployment would use MERGE INTO directly.
     """
-    import shutil
-
     from pyspark.errors import AnalysisException
 
     spark = delta.sparkSession
     # repair any crashed earlier swap BEFORE listing/reading the store
     # (a bucket renamed aside must be restored; a stale .old dropped)
-    _recover_bucket_swaps(pixel_store)
+    commit.recover(pixel_store)
     bucketed = delta.withColumn(
         "bucket", F.pmod(F.xxhash64("mapKey"), F.lit(n_buckets)).cast("int"))
     touched = [r[0] for r in bucketed.select("bucket").distinct().collect()]
@@ -275,24 +247,26 @@ def merge_into_pixels(delta: DataFrame, pixel_store: str,
     # ONE materialization, not two: the merged rows go straight to a
     # staging tree (reads of the live store execute during this write,
     # so no lineage cut is needed), then the touched bucket
-    # directories swap in by rename. The previous shape —
+    # directories swap in by rename (commit.rewrite). The previous shape —
     # localCheckpoint() to legalize overwrite-in-place, then a dynamic
     # partition overwrite — serialized every merged row twice (block
     # store + parquet), the measured bulk of merge-mode batch cost
     # (guide §5: materialize once). Crash window is unchanged: a
     # partially-applied batch is replayed (marker not yet advanced)
     # exactly as a partially-committed dynamic overwrite was.
-    staging = pixel_store.rstrip("/") + ".merge-staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    # repartition by the write's partition key so each bucket directory
-    # receives ONE file, not one per aggregation task (the groupBy
-    # hashes on the full pixel key, spreading every bucket across every
-    # task: |tasks| x |touched buckets| tiny files, re-opened by every
-    # later batch's pruned read — guide §6: small files hurt twice)
-    (merged.repartition("bucket")
-     .write.mode("overwrite").partitionBy("bucket")
-     .parquet(staging))
-    _swap_buckets(pixel_store, staging, touched, batch_id)
+    def _write(staged: str) -> None:
+        # repartition by the write's partition key so each bucket
+        # directory receives ONE file, not one per aggregation task
+        # (the groupBy hashes on the full pixel key, spreading every
+        # bucket across every task: |tasks| x |touched buckets| tiny
+        # files, re-opened by every later batch's pruned read — guide
+        # §6: small files hurt twice)
+        (merged.repartition("bucket")
+         .write.mode("overwrite").partitionBy("bucket").parquet(staged))
+        _mark_applied(staged, touched, batch_id)
+
+    commit.rewrite(pixel_store, _write,
+                   parts=[f"bucket={b}" for b in touched])
 
 
 def append_pixel_deltas(delta: DataFrame, pixel_store: str,
@@ -325,15 +299,15 @@ def fold_pixels(df: DataFrame) -> DataFrame:
             .agg(F.sum("cnt").alias("cnt")))
 
 
+def _mode_path(pixel_store: str) -> str:
+    return os.path.join(pixel_store, "_meta", "mode.json")
+
+
 def _store_mode_marker(pixel_store: str) -> str | None:
     """The store's recorded maintenance mode, or None when no
     ``_meta/mode.json`` marker exists (store absent, or pre-marker)."""
-    import json
-    try:
-        with open(os.path.join(pixel_store, "_meta", "mode.json")) as f:
-            return json.load(f)["pixel_mode"]
-    except (OSError, ValueError, KeyError):
-        return None
+    return (commit.read_json(_mode_path(pixel_store)) or {}).get(
+        "pixel_mode")
 
 
 def _store_mode(pixel_store: str) -> str:
@@ -343,24 +317,12 @@ def _store_mode(pixel_store: str) -> str:
     return _store_mode_marker(pixel_store) or "merge"
 
 
-def _write_store_mode(pixel_store: str, mode: str) -> None:
-    import json
-    meta = os.path.join(pixel_store, "_meta")
-    os.makedirs(meta, exist_ok=True)
-    path = os.path.join(meta, "mode.json")
-    if not os.path.exists(path):
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"pixel_mode": mode}, f)
-        os.replace(tmp, path)
-
-
 def compact_pixel_store(spark: SparkSession, pixel_store: str) -> dict:
     """Fold an append-mode pixel store's accumulated deltas into one
-    unique-key file-set per touched bucket (validated rewrite + the
-    shared ``.compact``/``.old`` crash-recovery contract — run
-    :func:`maps_spark.sources.maintenance.recover_compaction` on the
-    store path at startup). Unlike ``compact_dir`` this rewrite
+    unique-key file-set per touched bucket (a validated
+    :func:`maps_spark.sources.commit.rewrite` — run
+    :func:`maps_spark.sources.commit.recover` on the store path at
+    startup). Unlike ``compact_dir`` this rewrite
     CHANGES row counts (it folds duplicates), so validation compares
     the conserved quantities instead: total cnt mass and distinct
     key count. The store's existing bucket assignment is preserved —
@@ -368,37 +330,39 @@ def compact_pixel_store(spark: SparkSession, pixel_store: str) -> dict:
     two bucket counts would fail the distinct-key validation)."""
     import shutil
 
-    from maps_spark.sources.maintenance import swap_compacted
-
     df = spark.read.parquet(pixel_store)
     want_mass, want_keys = df.agg(
         F.sum("cnt"), F.count_distinct(
             "mapKey", "px", "py", "borYear")).first()
     folded = (df.groupBy("bucket", "mapKey", "px", "py", "borYear")
               .agg(F.sum("cnt").alias("cnt")).localCheckpoint())
-    staging = pixel_store.rstrip("/") + ".compact"
-    shutil.rmtree(staging, ignore_errors=True)
-    # compaction exists to cut file counts: one file per bucket out
-    (folded.repartition("bucket")
-     .write.mode("overwrite").partitionBy("bucket")
-     .parquet(staging))
-    got = spark.read.parquet(staging)
-    got_mass, got_rows = got.agg(F.sum("cnt"), F.count("*")).first()
-    if got_mass != want_mass or got_rows != want_keys:
-        shutil.rmtree(staging)
-        raise RuntimeError(
-            f"pixel compaction validation failed for {pixel_store}: "
-            f"mass {got_mass} != {want_mass} or "
-            f"rows {got_rows} != distinct keys {want_keys}")
-    # the replay-guard marker lives under <store>/_meta — copy it
-    # INTO the staging tree before the swap, so there is no crash
-    # window where the live store exists without its marker (losing
-    # the marker would re-apply a redelivered batch on restart)
     marker_dir = os.path.join(pixel_store, "_meta")
-    if os.path.isdir(marker_dir):
-        shutil.copytree(marker_dir, os.path.join(staging, "_meta"))
-    swap_compacted(pixel_store, staging)
-    return {"rows": int(got_rows), "mass": int(got_mass or 0)}
+
+    def _write(staged: str) -> None:
+        # compaction exists to cut file counts: one file per bucket out
+        (folded.repartition("bucket")
+         .write.mode("overwrite").partitionBy("bucket").parquet(staged))
+        # the replay-guard marker lives under <store>/_meta — copy it
+        # INTO the staging tree before the swap, so there is no crash
+        # window where the live store exists without its marker
+        # (losing it would re-apply a redelivered batch on restart)
+        if os.path.isdir(marker_dir):
+            shutil.copytree(marker_dir, os.path.join(staged, "_meta"))
+
+    got = {}
+
+    def _check(staged: str) -> str | None:
+        got["mass"], got["rows"] = (spark.read.parquet(staged)
+                                    .agg(F.sum("cnt"), F.count("*"))
+                                    .first())
+        if got["mass"] != want_mass or got["rows"] != want_keys:
+            return (f"pixel compaction validation failed for "
+                    f"{pixel_store}: mass {got['mass']} != {want_mass} "
+                    f"or rows {got['rows']} != distinct keys {want_keys}")
+        return None
+
+    commit.rewrite(pixel_store, _write, _check)
+    return {"rows": int(got["rows"]), "mass": int(got["mass"] or 0)}
 
 
 def merge_into_tiles(delta: DataFrame, pixel_store: str, tile_store: str,
@@ -433,7 +397,7 @@ def merge_into_tiles(delta: DataFrame, pixel_store: str, tile_store: str,
     from maps_spark.operators import pyramid as PY
 
     spark = delta.sparkSession
-    _recover_bucket_swaps(tile_store)
+    commit.recover(tile_store)
     touched_tiles = (PY.tile_rows(delta, srs, zoom)
                      .select("mapKey", "tileX", "tileY").distinct()
                      .localCheckpoint())
@@ -473,17 +437,19 @@ def merge_into_tiles(delta: DataFrame, pixel_store: str, tile_store: str,
         out = keep.unionByName(fresh)
     except AnalysisException:  # first merge: tile store does not exist
         pass
-    # same single-materialization staging swap as merge_into_pixels:
-    # the upsert rows cover exactly the touched buckets, so writing
-    # them once to staging and renaming those bucket directories in
-    # replaces the localCheckpoint + dynamic-overwrite double write
-    import shutil
-    staging = tile_store.rstrip("/") + ".merge-staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    # one file per bucket directory (same rationale as merge_into_pixels)
-    (out.repartition("bucket")
-     .write.mode("overwrite").partitionBy("bucket").parquet(staging))
-    _swap_buckets(tile_store, staging, touched_buckets, batch_id)
+    # same single-materialization staged bucket swap as
+    # merge_into_pixels: the upsert rows cover exactly the touched
+    # buckets, so writing them once to staging and renaming those
+    # bucket directories in replaces the localCheckpoint +
+    # dynamic-overwrite double write
+    def _write(staged: str) -> None:
+        # one file per bucket directory (as in merge_into_pixels)
+        (out.repartition("bucket")
+         .write.mode("overwrite").partitionBy("bucket").parquet(staged))
+        _mark_applied(staged, touched_buckets, batch_id)
+
+    commit.rewrite(tile_store, _write,
+                   parts=[f"bucket={b}" for b in touched_buckets])
 
 
 def read_pixel_store(spark: SparkSession, pixel_store: str) -> DataFrame:
@@ -492,7 +458,7 @@ def read_pixel_store(spark: SparkSession, pixel_store: str) -> DataFrame:
     says whether per-batch deltas need the merge-on-read fold —
     merge-mode stores (already unique-keyed) stay a plain
     partition-prunable scan with no extra shuffle."""
-    _recover_bucket_swaps(pixel_store)  # no-op outside a crash window
+    commit.recover(pixel_store)  # no-op outside a crash window
     df = spark.read.parquet(pixel_store).drop("bucket")
     return fold_pixels(df) if _store_mode(pixel_store) == "append" \
         else df
@@ -501,7 +467,7 @@ def read_pixel_store(spark: SparkSession, pixel_store: str) -> DataFrame:
 def read_tile_store(spark: SparkSession, tile_store: str) -> DataFrame:
     """Read the incrementally-maintained tile store (mapKey, z, x, y,
     tile) without the internal bucket column."""
-    _recover_bucket_swaps(tile_store)  # no-op outside a crash window
+    commit.recover(tile_store)  # no-op outside a crash window
     return spark.read.parquet(tile_store).drop("bucket")
 
 
@@ -559,57 +525,23 @@ def run_refresh(spark: SparkSession, input_dir: str, nation_dir: str,
     marker = pixel_store.rstrip("/") + "/_meta/last_batch.json"
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch is at-least-once: after a failure between the
-        # sink write and the checkpoint commit, Structured Streaming
-        # re-delivers the same batch_id. Neither a sum-on-conflict
-        # merge nor a delta append is idempotent, so replayed batch
-        # ids are skipped via a marker written after both merges land
-        # (the standard batch-id guard; a Delta/Iceberg sink would
-        # make the merge itself transactional instead).
-        if _applied_batch(marker) >= batch_id:
-            return
+        # Neither a sum-on-conflict merge nor a delta append is
+        # idempotent, so the body runs under the replay guard: the
+        # marker is committed after both merges land (a Delta/Iceberg
+        # sink would make the merge itself transactional instead).
         quarantine_gate(batch_df, expectations, pixel_store, batch_id)
         delta = stream_pixel_deltas(batch_df, srs, zoom).localCheckpoint()
         if pixel_mode == "append":
             append_pixel_deltas(delta, pixel_store)
         else:
             merge_into_pixels(delta, pixel_store, batch_id=batch_id)
-        _write_store_mode(pixel_store, pixel_mode)
+        if not os.path.exists(_mode_path(pixel_store)):
+            commit.write_json(_mode_path(pixel_store),
+                              {"pixel_mode": pixel_mode})
         if tile_store is not None:
             merge_into_tiles(delta, pixel_store, tile_store, srs, zoom,
                              fold=(pixel_mode == "append"),
                              batch_id=batch_id)
-        _commit_batch(marker, batch_id)
 
-    return (occ.writeStream.foreachBatch(_merge)
+    return (occ.writeStream.foreachBatch(commit.guarded(marker, _merge))
             .trigger(availableNow=True).start())
-
-
-def _applied_batch(marker: str) -> int:
-    import json
-    # Builds before 2026-08 wrote the marker at '<root>_meta/...'
-    # (missing slash). Falling back to that location keeps the replay
-    # guard intact across the upgrade: without it, the first restart
-    # on a pre-existing store finds no marker and a redelivered last
-    # batch would double-merge. New commits always write the new path.
-    # Replace only the marker's OWN '/_meta/' segment (the last one):
-    # a store path that itself contains '/_meta/' earlier must not be
-    # rewritten, or the fallback would probe a wrong legacy location.
-    head, sep, tail = marker.rpartition("/_meta/")
-    legacy = head + "_meta/" + tail if sep else marker
-    for path in (marker, legacy):
-        try:
-            with open(path) as f:
-                return int(json.load(f)["batch_id"])
-        except (OSError, ValueError, KeyError):
-            continue
-    return -1
-
-
-def _commit_batch(marker: str, batch_id: int) -> None:
-    import json
-    os.makedirs(os.path.dirname(marker), exist_ok=True)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"batch_id": batch_id}, f)
-    os.replace(tmp, marker)  # atomic on POSIX

@@ -13,15 +13,14 @@ only in the sketch definition itself).
 Crash safety (counter addition is NOT idempotent, so at-least-once
 redelivery needs more than a skip marker): each batch writes a NEW
 versioned snapshot ``<store>/{cms,values}/v=<batch_id>`` derived from
-the previous COMMITTED version, then atomically repoints a version
-marker (``os.replace``). The marker is the single commit point:
-
-- crash before the marker flips -> the half-written ``v=<id>`` dirs
-  are orphans; redelivery recomputes them FROM THE OLD COMMITTED
-  version (mode=overwrite replaces the partials) — no double-add,
-  because the previous version never contained this batch;
-- marker flipped -> ``_applied_batch`` skips the redelivery entirely;
-- old versions are dropped best-effort AFTER the flip (keep-1).
+the previous COMMITTED version, and the replay marker
+(:func:`maps_spark.sources.commit.commit_batch`) doubles as the
+version pointer — the single commit point, under the contract stated
+in :mod:`maps_spark.sources.commit`. A crash before the marker
+advances leaves orphan ``v=<id>`` dirs that the redelivery recomputes
+from the old committed version (no double-add); once it advanced, the
+replay guard skips the redelivery. Old versions are dropped AFTER the
+advance (keep-1).
 
 Per batch: build the batch sketch (map-side-combined, O(batch)), read
 the tiny committed store, sum counters, write the next version, flip.
@@ -37,8 +36,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from maps_spark.operators.sessions import cms_build, value_sketch
-from maps_spark.streaming.refresh import (_applied_batch, _commit_batch,
-                                          _stream_parquet)
+from maps_spark.sources.commit import applied_batch, guarded
+from maps_spark.streaming.refresh import _stream_parquet, quarantine_gate
 
 SKETCHES = ("cms", "values", "hitters")
 
@@ -115,10 +114,7 @@ def run_sketch_refresh(spark: SparkSession, input_dir: str,
     marker = store_root.rstrip("/") + "/_meta/last_batch.json"
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        prev = _applied_batch(marker)
-        if prev >= batch_id:
-            return
-        from maps_spark.streaming.refresh import quarantine_gate
+        prev = applied_batch(marker)
         quarantine_gate(batch_df, expectations, store_root, batch_id)
         _merge_version(cms_build(batch_df, key_col, width, depth),
                        store_root, "cms", ["d", "bucket"],
@@ -127,11 +123,15 @@ def run_sketch_refresh(spark: SparkSession, input_dir: str,
                        store_root, "values", ["bin"], prev, batch_id)
         _update_hitters(batch_df, store_root, key_col, width, depth,
                         prev, batch_id, top_k, top_m)
-        _commit_batch(marker, batch_id)  # the atomic commit point
-        for which in SKETCHES:
-            _drop_stale_versions(store_root, which, batch_id)
 
-    return (stream.writeStream.foreachBatch(_merge)
+    merge = guarded(marker, _merge)  # the marker is the commit point
+
+    def _body(batch_df: DataFrame, batch_id: int) -> None:
+        merge(batch_df, batch_id)
+        for which in SKETCHES:
+            _drop_stale_versions(store_root, which, applied_batch(marker))
+
+    return (stream.writeStream.foreachBatch(_body)
             .trigger(availableNow=True).start())
 
 
@@ -141,7 +141,7 @@ def read_sketch_store(spark: SparkSession, store_root: str,
     (resolved through the version marker — half-written snapshots are
     never visible)."""
     marker = store_root.rstrip("/") + "/_meta/last_batch.json"
-    version = _applied_batch(marker)
+    version = applied_batch(marker)
     if version < 0:
         raise FileNotFoundError(f"no committed sketch store under "
                                 f"{store_root}")

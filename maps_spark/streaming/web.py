@@ -45,7 +45,7 @@ def run_web_ingest(spark: SparkSession, input_path: str,
     the backlog and stops (landing-zone sweep mode). ``expectations``
     quarantines a failing batch before any append (see
     :func:`maps_spark.streaming.refresh.quarantine_gate`)."""
-    from maps_spark.streaming.dedup import run_file_stream
+    from maps_spark.streaming.refresh import run_file_stream
     marker = store_root.rstrip("/") + "/_meta/last_batch.json"
 
     def _body(batch_df: DataFrame, batch_id: int) -> None:

@@ -213,9 +213,9 @@ def test_frontier_store_compaction(spark, tmp_path):
     """Per-batch appends accumulate one file-set per batch;
     compact_frontier_store folds them without changing what
     read_frontier assembles, and a crash mid-swap is repaired by
-    recover_compaction."""
-    from maps_spark.sources.maintenance import (compact_frontier_store,
-                                                recover_compaction)
+    commit.recover."""
+    from maps_spark.sources.commit import recover
+    from maps_spark.sources.maintenance import compact_frontier_store
     from maps_spark.streaming.frontier import read_frontier
     uni = _universe(spark, n=24)
     land = str(tmp_path / "land")
@@ -243,7 +243,7 @@ def test_frontier_store_compaction(spark, tmp_path):
     # crash between the two swap renames: live dir gone, .old present
     refs = f"{store}/refs"
     os.rename(refs, refs + ".old")
-    assert recover_compaction(refs) == "restored"
+    assert recover(refs) == "restored"
     assert frontier_set() == before
 
 

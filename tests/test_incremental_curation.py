@@ -2,6 +2,7 @@
 verdicts upsert correctly across snapshots."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from tests.conftest import SF_SMALL
 
@@ -76,11 +77,13 @@ def test_changed_doc_not_dup_of_its_own_stale_signature(spark, tmp_path):
     assert v == {1: "kept"}
 
 
-def test_crash_retry_does_not_duplicate_signatures(spark, tmp_path):
+def test_crash_retry_does_not_duplicate_signatures(spark, tmp_path,
+                                                   monkeypatch):
     # ADVICE r3: a crash after the signature-store append but before
     # the verdict write must not re-append on retry — the retry reuses
     # the same batch id and the store marker skips the append
     from maps_spark.plans import curation as C
+    from maps_spark.sources import commit
     state = str(tmp_path / "state3")
     base = ("the quick brown fox jumps over the lazy dog and keeps "
             "going with plenty of ordinary words to pass quality ")
@@ -88,24 +91,22 @@ def test_crash_retry_does_not_duplicate_signatures(spark, tmp_path):
         [(i, base + str(i)) for i in range(6)],
         "doc_id long, text string")
 
-    orig_swap = C._swap
+    orig_swap = commit.swap
     calls = {"n": 0}
 
-    def crashing_swap(sd):
+    def crashing_swap(pairs):
         calls["n"] += 1
         if calls["n"] == 1:
             raise RuntimeError("simulated crash before finalize")
-        return orig_swap(sd)
+        return orig_swap(pairs)
 
-    C._swap = crashing_swap
-    try:
-        import pytest
-        with pytest.raises(RuntimeError):
-            C.run_incremental_curation(spark, docs, state)
-        # retry the same snapshot — must draw the SAME batch id
-        r = C.run_incremental_curation(spark, docs, state)
-    finally:
-        C._swap = orig_swap
+    monkeypatch.setattr(commit, "swap", crashing_swap)
+    import pytest
+    with pytest.raises(RuntimeError):
+        C.run_incremental_curation(spark, docs, state)
+    # retry the same snapshot — must draw the SAME batch id
+    r = C.run_incremental_curation(spark, docs, state)
+    monkeypatch.undo()
     assert r["batch_id"] == 0  # counter was not advanced by the crash
     hashes = spark.read.parquet(f"{state}/dedup_store/hashes")
     dupes = (hashes.groupBy("doc_id").count().where("count > 1").count())
@@ -119,6 +120,99 @@ def test_crash_retry_does_not_duplicate_signatures(spark, tmp_path):
     # a following snapshot advances the counter normally
     r2 = C.run_incremental_curation(spark, docs, state)
     assert r2["batch_id"] == 1
+
+
+@pytest.fixture(scope="module")
+def two_snapshots(spark, tmp_path_factory):
+    """Snapshots s1 and s2, the state after curating s1, and the
+    verdicts after curating s2 on top of it with no crash."""
+    import shutil
+
+    from maps_spark.plans.curation import (read_verdicts,
+                                           run_incremental_curation)
+    docs = (spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+            .select("doc_id", "text").orderBy("doc_id").limit(8)
+            .localCheckpoint())
+    ids = sorted(r.doc_id for r in docs.collect())
+    s1 = docs.where(F.col("doc_id").isin(ids[:6]))
+    s2 = docs.where(F.col("doc_id").isin(ids[2:])).unionByName(
+        docs.where(F.col("doc_id") == ids[3])  # an exact copy
+        .withColumn("doc_id", F.lit(10 ** 9).cast("long")))
+    base = tmp_path_factory.mktemp("curation")
+    after_s1, twin = str(base / "after_s1"), str(base / "twin")
+    run_incremental_curation(spark, s1, after_s1)
+    shutil.copytree(after_s1, twin)
+    run_incremental_curation(spark, s2, twin)
+    want = sorted(map(tuple, read_verdicts(spark, twin).collect()))
+    assert len(want) == 7 and "exact_dup" in {v for _, v in want}
+    return s2, after_s1, want
+
+
+def test_failed_verdict_write_keeps_state_readable(spark, tmp_path,
+                                                   monkeypatch,
+                                                   two_snapshots):
+    """A failure while the verdicts are written must leave the previous
+    state readable, and the retry must end with the verdicts of a run
+    with no crash. Spark's overwrite deletes the target directory
+    before its job runs, so the injected failure empties the target
+    first — what a job failing mid-write leaves behind."""
+    import os
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from maps_spark.plans.curation import (read_verdicts,
+                                           run_incremental_curation)
+    s2, after_s1, want = two_snapshots
+    state = str(tmp_path / "state")
+    shutil.copytree(after_s1, state)
+    real = DataFrameWriter.parquet
+
+    def failing(self, path, *args, **kwargs):
+        if path.rstrip("/").endswith("verdicts"):
+            shutil.rmtree(path, ignore_errors=True)
+            os.makedirs(path)
+            raise RuntimeError("injected failure mid verdict write")
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_incremental_curation(spark, s2, state)
+    monkeypatch.undo()
+    r = run_incremental_curation(spark, s2, state)  # the retry
+    assert r["batch_id"] == 1
+    assert sorted(map(tuple, read_verdicts(spark, state).collect())) \
+        == want
+
+
+def test_kill_mid_snapshot_swap_rolls_back(spark, tmp_path, two_snapshots):
+    """The store-level crash point of the commit matrix
+    (tests/test_commit.py) for incremental curation: a kill between
+    the renames of the snapshot swap (old snapshot aside, new one not
+    yet in). Recovery rolls the old snapshot back — readers see the
+    s1 verdicts — and the retry re-runs the same batch id and ends
+    with the verdicts of a run with no crash."""
+    import shutil
+
+    from maps_spark.plans.curation import (read_verdicts,
+                                           run_incremental_curation)
+    from tests.test_commit import PUBLISH_STEPS, Kill, _faults
+    s2, after_s1, want = two_snapshots
+    state = str(tmp_path / "state")
+    shutil.copytree(after_s1, state)
+    before = sorted(map(tuple, read_verdicts(spark, state).collect()))
+    # publish steps of a run: dedup-store marker, snapshot aside,
+    # snapshot in, counter — kill before the third
+    with _faults(PUBLISH_STEPS, kill_at=2) as plan:
+        with pytest.raises(Kill):
+            run_incremental_curation(spark, s2, state)
+    assert plan.log == ["replace", "rename", "rename"]
+    assert sorted(map(tuple, read_verdicts(spark, state).collect())) \
+        == before
+    r = run_incremental_curation(spark, s2, state)
+    assert r["batch_id"] == 1
+    assert sorted(map(tuple, read_verdicts(spark, state).collect())) \
+        == want
 
 
 def test_keyed_delta_cdc_semantics(spark):

@@ -135,6 +135,7 @@ class TestFoldL0Segments:
     def test_recover_segments_drops_orphans(self, spark, tmp_path):
         """A segment directory the manifest never names (crash before
         the manifest swap) is dropped; live segments survive."""
+        from maps_spark.sources.commit import staging
         from maps_spark.sources.maintenance import (fold_l0_segments,
                                                     list_segments,
                                                     recover_segments)
@@ -144,7 +145,7 @@ class TestFoldL0Segments:
         live = list_segments(root)
         orphan = os.path.join(root, "seg-99999999")
         os.makedirs(orphan)
-        tmp = os.path.join(root, ".seg-tmp-seg-00000042")
+        tmp = staging(os.path.join(root, "seg-00000042"))
         os.makedirs(tmp)
         assert recover_segments(root) == "cleaned"
         assert not os.path.isdir(orphan) and not os.path.isdir(tmp)

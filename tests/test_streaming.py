@@ -217,6 +217,7 @@ class TestRefresh:
         assert the store equals the uninterrupted result exactly."""
         import os as _os
 
+        from maps_spark.sources.commit import staging
         from maps_spark.streaming import refresh as R
 
         rows = [(f"2:ds-{i}", i, i, 2000 + i, 1) for i in range(50)]
@@ -239,9 +240,9 @@ class TestRefresh:
             calls = {"n": 0}
 
             def boom(src, dst, _real=real_rename, _c=calls,
-                     _k=kill_after):
+                     _k=kill_after, _staged=staging(store)):
                 # count only live-store bucket swaps (src in staging)
-                if ".merge-staging" in src and "/bucket=" in dst:
+                if src.startswith(_staged) and "/bucket=" in dst:
                     if _c["n"] >= _k:
                         # crash AFTER renaming the live dir aside for
                         # kill_after==0: the aside rename (src is the
@@ -416,13 +417,13 @@ class TestIncrementalDedup:
         docs = spark.createDataFrame(
             [(1, "alpha beta gamma " * 5), (2, "delta epsilon zeta " * 5)],
             "doc_id long, text string")
-        from maps_spark.streaming.refresh import _applied_batch, _commit_batch
+        from maps_spark.sources.commit import applied_batch, commit_batch
         marker = store + "/_meta/last_batch.json"
         for replay in range(2):  # same batch id delivered twice
-            if _applied_batch(marker) >= 0:
+            if applied_batch(marker) >= 0:
                 continue
             process_batch(docs, store, batch_id=0)
-            _commit_batch(marker, 0)
+            commit_batch(marker, 0)
         assert accepted_ids(spark, store).count() == 2
 
 
@@ -478,18 +479,18 @@ class TestCompaction:
         staging/.old dirs beside a live store are cleared."""
         import os
 
-        from maps_spark.sources.maintenance import recover_compaction
+        from maps_spark.sources.commit import recover, staging
         p = str(tmp_path / "t")
         spark.range(100).write.parquet(p)
         # crash between the two swap renames: live path is absent
         os.rename(p, p + ".old")
-        assert recover_compaction(p) == "restored"
+        assert recover(p) == "restored"
         assert spark.read.parquet(p).count() == 100
         # stale staging beside a live store is cleaned up
-        os.makedirs(p + ".compact")
-        assert recover_compaction(p) == "cleaned"
-        assert not os.path.isdir(p + ".compact")
-        assert recover_compaction(p) is None
+        os.makedirs(staging(p))
+        assert recover(p) == "cleaned"
+        assert not os.path.isdir(staging(p))
+        assert recover(p) is None
 
     def test_compact_validation_rejects_short_rewrite(self, spark,
                                                       tmp_path,
@@ -501,6 +502,7 @@ class TestCompaction:
         import pytest
 
         import maps_spark.sources.maintenance as M
+        from maps_spark.sources.commit import staging
         p = str(tmp_path / "t")
         spark.range(100).write.parquet(p)
         cls = type(spark.range(1))  # the concrete DataFrame class
@@ -514,7 +516,7 @@ class TestCompaction:
             M.compact_dir(spark, p)
         monkeypatch.undo()
         assert spark.read.parquet(p).count() == 100
-        assert not os.path.isdir(p + ".compact")
+        assert not os.path.isdir(staging(p))
 
 
 def test_streaming_ann_ingest_matches_bulk_upsert(spark, tmp_path):
@@ -819,21 +821,21 @@ def test_applied_batch_reads_legacy_marker_location(tmp_path):
     path fix, or the first restart on an old store double-merges the
     redelivered last batch (ADVICE r6)."""
     import json
-    from maps_spark.streaming.refresh import _applied_batch, _commit_batch
+    from maps_spark.sources.commit import applied_batch, commit_batch
     root = str(tmp_path / "store")
     marker = root + "/_meta/last_batch.json"
     # nothing anywhere -> -1
-    assert _applied_batch(marker) == -1
+    assert applied_batch(marker) == -1
     # legacy location only -> found via fallback
     legacy = root + "_meta/last_batch.json"
     import os
     os.makedirs(os.path.dirname(legacy), exist_ok=True)
     with open(legacy, "w") as f:
         json.dump({"batch_id": 7}, f)
-    assert _applied_batch(marker) == 7
+    assert applied_batch(marker) == 7
     # new location wins once written
-    _commit_batch(marker, 9)
-    assert _applied_batch(marker) == 9
+    commit_batch(marker, 9)
+    assert applied_batch(marker) == 9
 
 
 def test_incremental_dedup_batches_stay_flat(spark, tmp_path):
@@ -883,14 +885,13 @@ class TestAppendModeRefresh:
         pipeline through the shared fold-on-read path; compaction
         folds the per-batch file-sets without changing what reads see,
         preserves the replay-guard marker, and a crash mid-swap is
-        repaired by recover_compaction."""
+        repaired by commit.recover."""
         import pyspark.sql.functions as F
 
         from maps_spark.operators import pyramid as PY
-        from maps_spark.sources.maintenance import recover_compaction
+        from maps_spark.sources.commit import applied_batch, recover
         from maps_spark.sources.occurrence import occurrence_df
-        from maps_spark.streaming.refresh import (_applied_batch,
-                                                  compact_pixel_store,
+        from maps_spark.streaming.refresh import (compact_pixel_store,
                                                   read_pixel_store,
                                                   read_tile_store,
                                                   run_refresh)
@@ -924,27 +925,28 @@ class TestAppendModeRefresh:
         # the fold-mode tile path produced fresh tiles
         assert read_tile_store(spark, tiles).count() > 0
 
-        marker_before = _applied_batch(
+        marker_before = applied_batch(
             store + "/_meta/last_batch.json")
         assert marker_before >= 0
         stats = compact_pixel_store(spark, store)
         assert stats["rows"] == batch.count()
         assert spark.read.parquet(store).count() == batch.count()
         assert pixel_diff() == 0
-        assert _applied_batch(
+        assert applied_batch(
             store + "/_meta/last_batch.json") == marker_before
 
         # crash between the two swap renames -> restore
         os.rename(store, store + ".old")
-        assert recover_compaction(store) == "restored"
+        assert recover(store) == "restored"
         assert pixel_diff() == 0
-        assert _applied_batch(
+        assert applied_batch(
             store + "/_meta/last_batch.json") == marker_before
 
     def test_append_compaction_conserves_and_is_idempotent(
             self, spark, tmp_path):
         """Compaction folds duplicate keys exactly (conserved mass and
         key set) and a second compaction is a no-op rewrite."""
+        from maps_spark.sources import commit
         from maps_spark.streaming import refresh as R
         store = str(tmp_path / "pixels")
         delta = spark.createDataFrame(
@@ -952,7 +954,8 @@ class TestAppendModeRefresh:
              ("1:x", 3, 4, 200, 1)],
             "mapKey string, px int, py int, borYear int, cnt long")
         R.append_pixel_deltas(delta, store, n_buckets=4)
-        R._write_store_mode(store, "append")  # run_refresh writes this
+        # run_refresh writes this marker
+        commit.write_json(R._mode_path(store), {"pixel_mode": "append"})
         before = {tuple(r) for r in
                   R.read_pixel_store(spark, store).collect()}
         assert ("0:0", 1, 2, 100, 12) in before  # fold-on-read works
@@ -975,13 +978,14 @@ def test_refresh_mode_mismatch_is_refused(spark, tmp_path):
     history (ADVICE r7)."""
     import pytest
 
+    from maps_spark.sources import commit
     from maps_spark.streaming import refresh as R
     store = str(tmp_path / "pixels")
     delta = spark.createDataFrame(
         [("0:0", 1, 2, 100, 5)],
         "mapKey string, px int, py int, borYear int, cnt long")
     R.append_pixel_deltas(delta, store, n_buckets=4)
-    R._write_store_mode(store, "append")
+    commit.write_json(R._mode_path(store), {"pixel_mode": "append"})
     with pytest.raises(ValueError, match="pixel_mode"):
         R.run_refresh(spark, str(tmp_path / "nope"),
                       str(tmp_path / "nope2"), store,
@@ -1005,7 +1009,7 @@ def test_legacy_marker_fallback_replaces_last_meta_segment(tmp_path):
     import json
     import os
 
-    from maps_spark.streaming.refresh import _applied_batch
+    from maps_spark.sources.commit import applied_batch
     root = str(tmp_path / "x" / "_meta" / "y" / "store")
     marker = root + "/_meta/last_batch.json"
     # the WRONG (replace-first) location must be ignored
@@ -1014,13 +1018,13 @@ def test_legacy_marker_fallback_replaces_last_meta_segment(tmp_path):
     os.makedirs(os.path.dirname(wrong), exist_ok=True)
     with open(wrong, "w") as f:
         json.dump({"batch_id": 99}, f)
-    assert _applied_batch(marker) == -1
+    assert applied_batch(marker) == -1
     # the correct legacy location (last segment rewritten) is found
     good = root + "_meta/last_batch.json"
     os.makedirs(os.path.dirname(good), exist_ok=True)
     with open(good, "w") as f:
         json.dump({"batch_id": 4}, f)
-    assert _applied_batch(marker) == 4
+    assert applied_batch(marker) == 4
 
 
 def test_streaming_quarantine_blocks_poisoned_batch(spark, tmp_path):
@@ -1035,7 +1039,7 @@ def test_streaming_quarantine_blocks_poisoned_batch(spark, tmp_path):
 
     from maps_spark.streaming.dedup import (accepted_ids,
                                             run_incremental_dedup)
-    from maps_spark.streaming.refresh import _applied_batch
+    from maps_spark.sources.commit import applied_batch
 
     landing = str(tmp_path / "landing")
     os.makedirs(landing)
@@ -1068,7 +1072,7 @@ def test_streaming_quarantine_blocks_poisoned_batch(spark, tmp_path):
         q.awaitTermination(300)
     # batch 0 landed, batch 1 quarantined: marker at 0, no bad rows
     marker = store + "/_meta/last_batch.json"
-    assert _applied_batch(marker) == 0
+    assert applied_batch(marker) == 0
     acc = {r.doc_id for r in accepted_ids(spark, store).collect()}
     assert acc == {0, 1, 2, 3, 4}
     qreports = os.listdir(f"{store}/_meta/quarantine")
@@ -1085,7 +1089,7 @@ def test_streaming_quarantine_blocks_poisoned_batch(spark, tmp_path):
                                expectations=contract)
     q2.awaitTermination(300)
     assert q2.exception() is None
-    assert _applied_batch(marker) == 1
+    assert applied_batch(marker) == 1
     acc2 = {r.doc_id for r in accepted_ids(spark, store).collect()}
     assert acc2 == {0, 1, 2, 3, 4, 100, 101}
 

@@ -36,6 +36,11 @@ def main() -> None:
         f"{n_hash} hash-checked** against DuckDB twins, "
         f"{len(rows) - n_hash} rows-only.",
         "",
+        "Deployment: every store publishes through "
+        "`maps_spark/sources/commit.py`, whose crash contract needs "
+        "POSIX-atomic rename (local disk, HDFS); a port to an object "
+        "store (S3, GCS) must replace that module (see its docstring).",
+        "",
         "| Gate query | Oracle | Drives |",
         "|---|---|---|",
     ]
