@@ -58,10 +58,6 @@ def _tag(field: int, wire: int) -> bytes:
     return _varint((field << 3) | wire)
 
 
-def _len_delim(field: int, payload: bytes) -> bytes:
-    return _tag(field, 2) + _varint(len(payload)) + payload
-
-
 def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
     result = 0
     shift = 0
@@ -161,54 +157,102 @@ def encode_polygon_layer(name: str,
     ``ring`` an exterior vertex list (closing vertex optional — MVT
     closes with ClosePath). The binned-tile wire shape
     (HexBin.java:154-161 / SquareBin.java:97-99: one polygon per cell,
-    attrs ``{"total": n}``, layer "occurrence")."""
+    attrs ``{"total": n}``, layer "occurrence"). Vertices are integers;
+    the geometry of every ring is encoded at once with numpy
+    (:func:`_ring_geometries`), so coordinate differences must fit in
+    62 bits."""
     keys: list[str] = []
     key_idx: dict[str, int] = {}
     vals: list[bytes] = []
     val_idx: dict[bytes, int] = {}
-
-    body = bytearray()
-    body += _tag(15, 0) + _varint(2)
-    nm = name.encode("utf-8")
-    body += _tag(1, 2) + _varint(len(nm)) + nm
+    rings, tags = [], []
     for ring, attrs in features:
         pts = list(ring)
         if len(pts) > 1 and pts[0] == pts[-1]:
             pts = pts[:-1]  # ClosePath supplies the closing edge
         if len(pts) < 3:
             continue
-        tags = bytearray()
+        t = bytearray()
         for k, v in attrs.items():
-            if k not in key_idx:
-                key_idx[k] = len(keys)
+            ki = key_idx.get(k)
+            if ki is None:
+                ki = key_idx[k] = len(keys)
                 keys.append(k)
             enc = _encode_value(v)
-            if enc not in val_idx:
-                val_idx[enc] = len(vals)
+            vi = val_idx.get(enc)
+            if vi is None:
+                vi = val_idx[enc] = len(vals)
                 vals.append(enc)
-            tags += _varint(key_idx[k]) + _varint(val_idx[enc])
-        geom = bytearray()
-        x0, y0 = pts[0]
-        geom += _varint((1 << 3) | 1)                      # MoveTo x1
-        geom += _varint(_zigzag(x0)) + _varint(_zigzag(y0))
-        geom += _varint((len(pts) - 1) << 3 | 2)           # LineTo n-1
-        cx, cy = x0, y0
-        for x, y in pts[1:]:
-            geom += _varint(_zigzag(x - cx)) + _varint(_zigzag(y - cy))
-            cx, cy = x, y
-        geom += _varint((1 << 3) | 7)                      # ClosePath
-        f = bytearray()
-        f += _tag(2, 2) + _varint(len(tags)) + bytes(tags)
-        f += _tag(3, 0) + _varint(3)                       # type = POLYGON
-        f += _tag(4, 2) + _varint(len(geom)) + bytes(geom)
-        body += _len_delim(2, bytes(f))
+            t += _v(ki) + _v(vi)
+        rings.append(pts)
+        tags.append(t)
+
+    body = bytearray(b"\x78\x02")                     # version = 2 (tag 15)
+    nm = name.encode("utf-8")
+    body += b"\x0a" + _v(len(nm)) + nm                # name (tag 1)
+    for t, geom in zip(tags, _ring_geometries(rings)):
+        f = (b"\x12" + _v(len(t)) + t                 # tags packed (tag 2)
+             + b"\x18\x03"                            # type = POLYGON (tag 3)
+             + b"\x22" + _v(len(geom)) + geom)        # geometry (tag 4)
+        body += b"\x12" + _v(len(f)) + f              # feature (tag 2)
     for k in keys:
         kb = k.encode("utf-8")
-        body += _tag(3, 2) + _varint(len(kb)) + kb
+        body += b"\x1a" + _v(len(kb)) + kb            # key (tag 3)
     for v in vals:
-        body += _len_delim(4, v)
-    body += _tag(5, 0) + _varint(extent)
-    return _len_delim(3, bytes(body))
+        body += b"\x22" + _v(len(v)) + v              # value (tag 4)
+    body += b"\x28" + _v(extent)                      # extent (tag 5)
+    return b"\x1a" + _v(len(body)) + bytes(body)      # layer (tag 3)
+
+
+def _ring_geometries(rings: list[list[tuple[int, int]]]) -> list[bytes]:
+    """The packed geometry field of each open ring: MoveTo its first
+    vertex, LineTo the others, ClosePath; coordinates as zigzag deltas
+    from the previous vertex (the first from the origin). All rings'
+    command integers are laid out and varint-encoded in one pass."""
+    if not rings:
+        return []
+    n = np.fromiter(map(len, rings), np.int64, len(rings))
+    xy = np.fromiter(chain.from_iterable(chain.from_iterable(rings)),
+                     np.int64, 2 * int(n.sum())).reshape(-1, 2)
+    first = np.cumsum(n) - n                   # each ring's first vertex
+    d = xy.copy()
+    d[1:] -= xy[:-1]
+    d[first] = xy[first]
+    zz = ((d << 1) ^ (d >> 63)).view(np.uint64)
+    # per ring: MoveTo, x0, y0, LineTo, (dx, dy) * (n - 1), ClosePath
+    m = 2 * n + 3
+    start = np.cumsum(m) - m
+    ints = np.empty(int(m.sum()), np.uint64)
+    ints[start] = 1 << 3 | 1
+    ints[start + 3] = ((n - 1) << 3 | 2).astype(np.uint64)
+    ints[start + m - 1] = 1 << 3 | 7
+    j = np.arange(len(xy)) - np.repeat(first, n)   # vertex within ring
+    at = np.repeat(start, n) + 1 + 2 * j + (j > 0)
+    ints[at] = zz[:, 0]
+    ints[at + 1] = zz[:, 1]
+    buf, lens = _varints(ints)
+    ends = np.cumsum(np.add.reduceat(lens, start)).tolist()
+    data = buf.tobytes()
+    return [data[a:b] for a, b in zip([0] + ends[:-1], ends)]
+
+
+def _varints(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Protobuf varints of uint64 values, concatenated as one uint8
+    array, and each value's byte count."""
+    lens = np.ones(len(v), np.int64)
+    rest = v >> 7
+    while rest.any():
+        lens += rest > 0
+        rest >>= 7
+    out = np.empty(int(lens.sum()), np.uint8)
+    at = np.cumsum(lens) - lens
+    rest = v.copy()
+    for k in range(int(lens.max())):
+        live = lens > k
+        more = (lens[live] > k + 1).astype(np.uint8) << 7
+        out[at[live] + k] = (rest[live] & 0x7F).astype(np.uint8) | more
+        rest >>= 7
+    return out, lens
 
 
 # -- decode ------------------------------------------------------------------
@@ -357,8 +401,11 @@ class TileColumns:
     the year attributes the serve filter reads (``int(key)`` parses;
     "0" is the unknown year) and ``year`` holds that int; ``total``,
     which the renderers prefer over the year sum, is an ordinary key.
+    ``data`` is the MVT bytes the columns were decoded from: the
+    content the PNG memo (:mod:`maps_spark.functions.png`) keys on.
     """
 
+    data: bytes
     names: tuple[str, ...]
     layer: np.ndarray
     x: np.ndarray
@@ -495,6 +542,7 @@ def decode_columns(data: bytes) -> TileColumns:
     """MVT point-tile bytes -> :class:`TileColumns`. Features must be
     single points with integer attribute values, as :func:`encode_tile`
     writes them; anything else raises ValueError."""
+    data = bytes(data)
     keys: dict[str, int] = {}
     groups: dict[str, tuple] = {}
     pos = 0
@@ -511,7 +559,7 @@ def decode_columns(data: bytes) -> TileColumns:
                     np.int64) for i in range(5))
     years = [_year(k) for k in keys]
     return TileColumns(
-        names=tuple(groups),
+        data=data, names=tuple(groups),
         layer=np.repeat(np.arange(len(groups), dtype=_code_dtype(groups)),
                         [len(g[0]) for g in groups.values()]),
         x=_narrow(x), y=_narrow(y),

@@ -8,12 +8,28 @@ This renderer decodes an MVT tile, sums per-pixel totals across layers,
 and writes an RGBA PNG with a hand-rolled encoder (zlib + struct — no
 imaging dependency). Density scaling ``@1x..@4x,@Hx`` maps to the
 ``scale`` parameter (renderer.js:12-17).
+
+The served tile PNGs are memoised, standing in for the HTTP cache in
+front of the reference's mapnik-server: :func:`render_density_png` and
+:func:`render_heat_png` each render a given input once and answer
+repeats from a process-wide LRU. The key is the full input: the tile's
+MVT bytes (for heat, the four children's; a child given as
+:class:`~maps_spark.functions.mvt.TileColumns` is keyed on the bytes it
+was decoded from, never on the object), ``style``, ``tile_size``,
+``dot_width`` and ``scale``. An absent tile is a key too, so a blank
+canvas is deflated once per size. The memo holds at most
+``_MEMO_BUDGET`` bytes (32 MiB), counting each entry's PNG, the MVT
+bytes its key holds and a fixed charge per entry, and evicts the least
+recently used entries beyond that. A memoised PNG is byte-identical to
+a fresh render: a miss renders exactly as without the memo.
 """
 
 from __future__ import annotations
 
 import struct
+import threading
 import zlib
+from collections import OrderedDict
 
 import numpy as np
 
@@ -171,10 +187,60 @@ def is_hard_pixel_style(style: str) -> bool:
     return style in HARD_POINT_STYLES
 
 
+#: byte budget of the rendered-PNG memo (see the module docstring)
+_MEMO_BUDGET = 32 << 20
+#: what one memo entry is charged beyond its bytes: key tuple, dict slot
+_ENTRY_BYTES = 256
+
+
+class _Memo:
+    """Content-keyed LRU of rendered PNGs within ``_MEMO_BUDGET`` bytes,
+    shared by every thread of the process."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self._entries: OrderedDict = OrderedDict()   # key -> (png, charge)
+        self.nbytes = 0
+
+    def render(self, key: tuple, key_bytes: int, render) -> bytes:
+        """The memoised PNG of ``key``, else ``render()``'s, kept when
+        its charge fits the budget."""
+        with self._lock:
+            hit = self._entries.get(key)
+            if hit is not None:
+                self._entries.move_to_end(key)
+                return hit[0]
+        data = render()
+        charge = len(data) + key_bytes + _ENTRY_BYTES
+        with self._lock:
+            if key not in self._entries and charge <= _MEMO_BUDGET:
+                self._entries[key] = (data, charge)
+                self.nbytes += charge
+                while self.nbytes > _MEMO_BUDGET:
+                    self.nbytes -= self._entries.popitem(last=False)[1][1]
+        return data
+
+    def clear(self) -> None:
+        with self._lock:
+            self._entries.clear()
+            self.nbytes = 0
+
+
+_MEMO = _Memo()
+
+
+def _content(tile) -> bytes | None:
+    """The memo-key form of a tile: its MVT bytes, None when absent."""
+    if isinstance(tile, mvt.TileColumns):
+        return tile.data
+    return bytes(tile) if tile else None
+
+
 def write_png(rgba: np.ndarray) -> bytes:
     """Minimal RGBA PNG encoder (8-bit, filter 0 per scanline)."""
     h, w = rgba.shape[:2]
-    raw = np.zeros((h, w * 4 + 1), dtype=np.uint8)
+    raw = np.empty((h, w * 4 + 1), dtype=np.uint8)
+    raw[:, 0] = 0                                   # filter type: None
     raw[:, 1:] = rgba.reshape(h, w * 4)
 
     def chunk(tag: bytes, data: bytes) -> bytes:
@@ -184,7 +250,7 @@ def write_png(rgba: np.ndarray) -> bytes:
 
     ihdr = struct.pack(">IIBBBBB", w, h, 8, 6, 0, 0, 0)
     return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr) +
-            chunk(b"IDAT", zlib.compress(raw.tobytes(), 6)) +
+            chunk(b"IDAT", zlib.compress(raw, 6)) +
             chunk(b"IEND", b""))
 
 
@@ -197,7 +263,17 @@ def render_density_png(tile_bytes: bytes | None, style: str = "classic.point",
     visible region); ``scale`` renders @0.5x..@4x sizes by scaling both
     the canvas and the dot. Dots are painted in the order their pixels
     first appear in the tile; where dots overlap, the later one wins.
+    Memoised on the full input (see the module docstring).
     """
+    data = _content(tile_bytes)
+    return _MEMO.render(
+        ("density", data, style, tile_size, dot_width, scale),
+        len(data or b""),
+        lambda: _render_density(data, style, tile_size, dot_width, scale))
+
+
+def _render_density(tile_bytes: bytes | None, style: str, tile_size: int,
+                    dot_width: int, scale: float) -> bytes:
     size = int(tile_size * scale)
     canvas = np.zeros((size, size, 4), dtype=np.uint8)
     if tile_bytes:
@@ -397,13 +473,25 @@ def render_heat_png(children: list, style: str = "purpleHeat.point",
     screen-blend steps of its dots one by one, in dot order (children
     in order, then each child's pixels in first-appearance order).
     ``scale=0.5`` yields the 256 px ``@Hx`` tile (routes.js:63).
+    Memoised on the full input (see the module docstring); a miss
+    renders from the children as given, decoded columns included.
     """
+    children = list(children[:4])
+    data = tuple(_content(c) for c in children)
+    return _MEMO.render(
+        ("heat", data, style, tile_size, dot_width, scale),
+        sum(len(d) for d in data if d),
+        lambda: _render_heat(children, style, tile_size, dot_width, scale))
+
+
+def _render_heat(children: list, style: str, tile_size: int,
+                 dot_width: int, scale: float) -> bytes:
     size = int(tile_size * scale)
     half = size // 2
     canvas = np.zeros((size, size, 4), dtype=np.uint8)
     d = max(1, int(round(dot_width * scale)))
     sx, sy, total = [], [], []
-    for qi, tile in enumerate(children[:4]):
+    for qi, tile in enumerate(children):
         if not tile:
             continue
         if not isinstance(tile, mvt.TileColumns):

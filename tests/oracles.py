@@ -1,9 +1,11 @@
 """Loop implementations the vectorized serve path replaced, kept as
-test oracles: the dict-walking tile filter and the dot-by-dot PNG
-renderers. They read :func:`maps_spark.functions.mvt.decode_tile`'s
-dict form and must agree exactly with
+test oracles: the dict-walking tile filter, the dot-by-dot PNG
+renderers and the vertex-by-vertex polygon-layer encoder. The first
+three read :func:`maps_spark.functions.mvt.decode_tile`'s dict form and
+must agree exactly with
 :func:`maps_spark.operators.serving.filter_decoded_tile` and
-:mod:`maps_spark.functions.png`'s renderers."""
+:mod:`maps_spark.functions.png`'s renderers; the encoder must write the
+bytes :func:`maps_spark.functions.mvt.encode_polygon_layer` writes."""
 
 from collections import defaultdict
 
@@ -12,6 +14,7 @@ import numpy as np
 from maps_spark.functions import mvt
 from maps_spark.functions import projections as P
 from maps_spark.functions import tiles as T
+from maps_spark.functions.mvt import _encode_value, _tag, _varint, _zigzag
 from maps_spark.functions.png import STYLES, write_png
 from maps_spark.operators.serving import TOTAL_KEY, _contains, _in_range
 
@@ -133,3 +136,60 @@ def render_heat_png_loop(children: list, style: str = "purpleHeat.point",
     canvas[:, :, :3] = np.clip(np.rint(acc), 0, 255).astype(np.uint8)
     canvas[:, :, 3] = np.where(acc.sum(axis=2) > 0, 255, 0).astype(np.uint8)
     return write_png(canvas)
+
+
+def _len_delim(field: int, payload: bytes) -> bytes:
+    return _tag(field, 2) + _varint(len(payload)) + payload
+
+
+def encode_polygon_layer_loop(name: str,
+                              features: list, extent: int = 512) -> bytes:
+    """:func:`maps_spark.functions.mvt.encode_polygon_layer`, one
+    varint at a time."""
+    keys: list[str] = []
+    key_idx: dict[str, int] = {}
+    vals: list[bytes] = []
+    val_idx: dict[bytes, int] = {}
+
+    body = bytearray()
+    body += _tag(15, 0) + _varint(2)
+    nm = name.encode("utf-8")
+    body += _tag(1, 2) + _varint(len(nm)) + nm
+    for ring, attrs in features:
+        pts = list(ring)
+        if len(pts) > 1 and pts[0] == pts[-1]:
+            pts = pts[:-1]  # ClosePath supplies the closing edge
+        if len(pts) < 3:
+            continue
+        tags = bytearray()
+        for k, v in attrs.items():
+            if k not in key_idx:
+                key_idx[k] = len(keys)
+                keys.append(k)
+            enc = _encode_value(v)
+            if enc not in val_idx:
+                val_idx[enc] = len(vals)
+                vals.append(enc)
+            tags += _varint(key_idx[k]) + _varint(val_idx[enc])
+        geom = bytearray()
+        x0, y0 = pts[0]
+        geom += _varint((1 << 3) | 1)                      # MoveTo x1
+        geom += _varint(_zigzag(x0)) + _varint(_zigzag(y0))
+        geom += _varint((len(pts) - 1) << 3 | 2)           # LineTo n-1
+        cx, cy = x0, y0
+        for x, y in pts[1:]:
+            geom += _varint(_zigzag(x - cx)) + _varint(_zigzag(y - cy))
+            cx, cy = x, y
+        geom += _varint((1 << 3) | 7)                      # ClosePath
+        f = bytearray()
+        f += _tag(2, 2) + _varint(len(tags)) + bytes(tags)
+        f += _tag(3, 0) + _varint(3)                       # type = POLYGON
+        f += _tag(4, 2) + _varint(len(geom)) + bytes(geom)
+        body += _len_delim(2, bytes(f))
+    for k in keys:
+        kb = k.encode("utf-8")
+        body += _tag(3, 2) + _varint(len(kb)) + kb
+    for v in vals:
+        body += _len_delim(4, v)
+    body += _tag(5, 0) + _varint(extent)
+    return _len_delim(3, bytes(body))

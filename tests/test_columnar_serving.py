@@ -1,6 +1,7 @@
 """The vectorized serve path against the loop oracles it replaced
-(``tests/oracles.py``): the columnar tile filter and the numpy PNG
-renderers must return exactly what the loops return."""
+(``tests/oracles.py``): the columnar tile filter, the numpy PNG
+renderers and the polygon-layer encoder must return exactly what the
+loops return."""
 
 import numpy as np
 import pytest
@@ -10,8 +11,8 @@ from hypothesis import strategies as st
 from maps_spark.functions import mvt, png
 from maps_spark.functions import projections as P
 from maps_spark.operators.serving import filter_decoded_tile
-from tests.oracles import (filter_dict_tile, render_density_png_loop,
-                           render_heat_png_loop)
+from tests.oracles import (encode_polygon_layer_loop, filter_dict_tile,
+                           render_density_png_loop, render_heat_png_loop)
 
 TS, BUF = 512, 64
 LAYERS = ["OBSERVATION", "HUMAN_OBSERVATION", "PRESERVED_SPECIMEN",
@@ -96,3 +97,26 @@ def test_numpy_renderers_match_loop_oracles(style, scale):
         assert png.render_heat_png(children, style, scale=scale) == want
         cols = [mvt.decode_columns(c) if c else None for c in children]
         assert png.render_heat_png(cols, style, scale=scale) == want
+
+
+def test_polygon_encoder_matches_loop_oracle():
+    """Seeded random layers: rings of 0-9 vertices (some closed, some
+    degenerate) with coordinates from tile pixels to 2^40, whose varints
+    run from one byte to several, and totals of every value type."""
+    rng = np.random.default_rng(17)
+    values = [0, 1, 127, 128, 16383, 16384, 2**35, -1, -300, 2.5, True,
+              "n"]
+    for _ in range(1500):
+        feats = []
+        for _ in range(int(rng.integers(0, 10))):
+            span = int(rng.choice([8, TS + BUF, 20000, 2**40]))
+            n = int(rng.integers(0, 10))
+            ring = [(int(x), int(y))
+                    for x, y in rng.integers(-span, span + 1, (n, 2))]
+            if ring and rng.random() < 0.3:
+                ring.append(ring[0])
+            key = str(rng.choice(["total", "total", "extra"]))
+            feats.append((ring, {key: values[rng.integers(len(values))]}))
+        extent = int(rng.choice([TS, 4096]))
+        assert mvt.encode_polygon_layer("occurrence", feats, extent) == \
+            encode_polygon_layer_loop("occurrence", feats, extent)

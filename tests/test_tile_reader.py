@@ -1,6 +1,7 @@
 """Cached serving reader: correctness vs the per-lookup Spark path and
 the warm-latency envelope (the cache2k-equivalent, HBaseMaps.java:109-144)."""
 
+import itertools
 import time
 
 import pytest
@@ -189,3 +190,90 @@ def test_pyramid_invariant_detects_lost_tile(spark, tmp_path):
         shutil.rmtree(v)
     broken = pyramid_invariant(spark, root).collect()
     assert all(r.n_zooms == 3 for r in broken)  # z=2 gone everywhere
+
+
+def _load_perfbench(monkeypatch):
+    """perfbench's ``inputs`` and ``workloads`` modules, read-only."""
+    import importlib
+    from pathlib import Path
+    monkeypatch.syspath_prepend(
+        str(Path(__file__).resolve().parent.parent / "perfbench"))
+    return importlib.import_module("inputs"), \
+        importlib.import_module("workloads")
+
+
+def test_png_memo_does_not_change_a_request_stream(spark, store,
+                                                   monkeypatch):
+    """A seeded mixed-kind stream (``perfbench``'s request kinds and
+    dispatch) through one reader answers the same with the PNG memo warm
+    as with the memo cleared before every request."""
+    from types import SimpleNamespace
+
+    from maps_spark.functions import png
+    from maps_spark.sources.tile_store import TileReader, read_points
+    inputs, W = _load_perfbench(monkeypatch)
+    small = [r.mapKey for r in read_points(spark, store)
+             .select("mapKey").orderBy("mapKey").limit(2).collect()]
+    args = dict(large=["0:0"], small=small, srs_list=("EPSG:3857",),
+                zooms=(1, 2), zipf=1.0, missing=["2:ds-missing"])
+    wl = W.ServeHot.__new__(W.ServeHot)
+    wl.ctx, wl.root = SimpleNamespace(spark=spark), store
+    wl.reader = TileReader(spark, store)
+
+    def replay(cold: bool) -> list:
+        out = []
+        for req in itertools.islice(inputs.RequestStream(5, **args), 70):
+            if cold:
+                png._MEMO.clear()
+            out.append((req["kind"], wl.request(req)))
+        return out
+
+    png._MEMO.clear()
+    warm = replay(cold=False)
+    pngs = sum(kind.endswith("_png") for kind, _ in warm)
+    assert 0 < len(png._MEMO._entries) < pngs      # repeats were hits
+    assert replay(cold=True) == warm
+    png._MEMO.clear()
+
+
+def test_reader_pngs_follow_build_swap(spark, tmp_path):
+    """After a ``finalise_build`` swap, one reader serves the new
+    build's density and heat PNGs; the memoised old ones never answer."""
+    from maps_spark.functions import mvt, png
+    from maps_spark.sources import tile_store as TS
+    root = str(tmp_path / "swap")
+    schema = "mapKey string, srs string, z int, x long, y long, tile binary"
+    addresses = [(0, 0, 0)] + [(1, x, y) for y in (0, 1) for x in (0, 1)]
+
+    def build(bid: str, y: int, count: int) -> dict:
+        tiles = {a: mvt.encode_tile({"OBSERVATION": [
+            (10 * (i + 1), y, {"2000": count})]}) for i, a in
+            enumerate(addresses)}
+        TS.write_tiles(spark.createDataFrame(
+            [("0:0", "EPSG_3857", *a, bytearray(t))
+             for a, t in tiles.items()], schema),
+            f"{root}/builds/{bid}", "EPSG:3857")
+        TS.finalise_build(root, bid)
+        return tiles
+
+    def served(reader) -> tuple[bytes, bytes]:
+        return (png.render_density_png(
+                    reader.get_tile_bytes("0:0", "EPSG:3857", 0, 0, 0)),
+                TS.get_heat_png(spark, root, "0:0", "EPSG:3857", 0, 0, 0,
+                                reader=reader))
+
+    def fresh(tiles: dict) -> tuple[bytes, bytes]:
+        return (png._render_density(tiles[0, 0, 0], "classic.point", 512,
+                                    2, 1.0),
+                png._render_heat([tiles[a] for a in addresses[1:]],
+                                 "purpleHeat.point", 512, 2, 1.0))
+
+    png._MEMO.clear()
+    old = build("20240101_000000_000", 20, 5)
+    reader = TS.TileReader(spark, root)
+    assert served(reader) == fresh(old)
+    new = build("20240102_000000_000", 300, 50000)
+    want = fresh(new)
+    assert all(a != b for a, b in zip(want, fresh(old)))  # the swap shows
+    assert served(reader) == want
+    png._MEMO.clear()
