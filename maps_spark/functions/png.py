@@ -195,12 +195,14 @@ _ENTRY_BYTES = 256
 
 class _Memo:
     """Content-keyed LRU of rendered PNGs within ``_MEMO_BUDGET`` bytes,
-    shared by every thread of the process."""
+    shared by every thread of the process. ``hits`` and ``evicted``
+    count since the last :meth:`clear` (``tools/serve_digest.py``
+    reports them)."""
 
     def __init__(self):
         self._lock = threading.Lock()
         self._entries: OrderedDict = OrderedDict()   # key -> (png, charge)
-        self.nbytes = 0
+        self.nbytes = self.hits = self.evicted = 0
 
     def render(self, key: tuple, key_bytes: int, render) -> bytes:
         """The memoised PNG of ``key``, else ``render()``'s, kept when
@@ -209,6 +211,7 @@ class _Memo:
             hit = self._entries.get(key)
             if hit is not None:
                 self._entries.move_to_end(key)
+                self.hits += 1
                 return hit[0]
         data = render()
         charge = len(data) + key_bytes + _ENTRY_BYTES
@@ -218,12 +221,13 @@ class _Memo:
                 self.nbytes += charge
                 while self.nbytes > _MEMO_BUDGET:
                     self.nbytes -= self._entries.popitem(last=False)[1][1]
+                    self.evicted += 1
         return data
 
     def clear(self) -> None:
         with self._lock:
             self._entries.clear()
-            self.nbytes = 0
+            self.nbytes = self.hits = self.evicted = 0
 
 
 _MEMO = _Memo()

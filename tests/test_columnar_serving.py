@@ -82,6 +82,15 @@ def _dense_tile(rng, n: int, with_total: bool) -> bytes:
     return mvt.encode_tile(layers, extent=TS)
 
 
+@pytest.fixture(autouse=True)
+def cold_memo():
+    """The PNG memo is process-wide and content-keyed: cleared, so that
+    every render here is a fresh render."""
+    png._MEMO.clear()
+    yield
+    png._MEMO.clear()
+
+
 @pytest.mark.parametrize("scale", [0.5, 1.0, 2.0])
 @pytest.mark.parametrize("style", sorted(png.STYLES))
 def test_numpy_renderers_match_loop_oracles(style, scale):
@@ -96,7 +105,11 @@ def test_numpy_renderers_match_loop_oracles(style, scale):
         want = render_heat_png_loop(children, style, scale=scale)
         assert png.render_heat_png(children, style, scale=scale) == want
         cols = [mvt.decode_columns(c) if c else None for c in children]
+        # the columns are keyed on their bytes: clear, or this would
+        # hit the entry the bytes render above just stored
+        png._MEMO.clear()
         assert png.render_heat_png(cols, style, scale=scale) == want
+        assert png._MEMO.hits == 0
 
 
 def test_polygon_encoder_matches_loop_oracle():

@@ -56,6 +56,7 @@ def test_memoised_renders_equal_fresh_renders():
         assert density == png._render_density(tile, style, 512, 2, scale)
         assert heat == png._render_heat(children, style, 512, 2, scale)
     assert len(png._MEMO._entries) == 2 * len(cases)
+    assert png._MEMO.hits == 2 * len(cases)
 
 
 def test_memo_stays_within_byte_budget(monkeypatch):
@@ -71,6 +72,7 @@ def test_memo_stays_within_byte_budget(monkeypatch):
         assert memo.nbytes == sum(c for _, c in memo._entries.values())
     # evicted least recently used first; the newest entry is held
     assert 0 < len(memo._entries) < 300
+    assert memo.evicted == 300 - len(memo._entries) and memo.hits == 0
     newest = next(reversed(memo._entries))
     assert newest[3:] == (16 + 299 % 7, 1 + 299, 1.0)
     for key, (data, charge) in memo._entries.items():

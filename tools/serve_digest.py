@@ -14,8 +14,13 @@ output, so a change to the serve path is checked with
 
 PNGs and binned tiles are hashed as bytes; a served tile dict as its
 sorted items; a miss as ``None``. The mean latency per request kind
-goes to standard error. ``perfbench/`` is only read: the workload,
-stream and session set-up are its own.
+goes to standard error, and so does the PNG memo's account after the
+replay (hits over the replayed PNG requests, entries and bytes held,
+entries evicted; set-up's warm-up requests fill the memo too).
+``--cold-png`` clears the PNG memo before every request, so that every
+PNG request renders: its latencies are the miss path's, comparable
+with a checkout that has no memo. ``perfbench/`` is only read: the
+workload, stream and session set-up are its own.
 """
 
 from __future__ import annotations
@@ -47,10 +52,14 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--seed", type=int, default=7)
     ap.add_argument("--requests", type=int, default=2100)
+    ap.add_argument("--cold-png", action="store_true",
+                    help="clear the PNG memo before every request")
     args = ap.parse_args()
 
     import run
     import workloads as W
+
+    from maps_spark.functions import png
 
     work = tempfile.mkdtemp(prefix="serve-digest-")
     os.makedirs(f"{work}/tmp")
@@ -64,9 +73,14 @@ def main() -> int:
         wl = W.ServeHot(W.Context(spark, args.seed, work))
         wl.build()
         wl.setup()
+        # a checkout without the PNG memo has no account to report
+        memo = getattr(png, "_MEMO", None)
+        hits0 = memo.hits if memo else 0
         ms: dict[str, list[float]] = defaultdict(list)
         for i in range(args.requests):
             req = next(wl.stream)
+            if args.cold_png and memo:
+                memo.clear()
             t = time.perf_counter()
             res = wl.request(req)
             ms[req["kind"]].append((time.perf_counter() - t) * 1e3)
@@ -74,6 +88,12 @@ def main() -> int:
         for kind, xs in sorted(ms.items()):
             print(f"{kind:12s} n={len(xs):4d} mean={sum(xs) / len(xs):7.3f} "
                   "ms", file=sys.stderr)
+        if memo and not args.cold_png:
+            pngs = sum(len(xs) for k, xs in ms.items() if k.endswith("_png"))
+            print(f"png memo: {memo.hits - hits0} hits of {pngs} PNG "
+                  f"requests, {len(memo._entries)} entries, {memo.nbytes} B "
+                  f"of {png._MEMO_BUDGET} B, {memo.evicted} evicted",
+                  file=sys.stderr)
     finally:
         run.stop_spark(spark)
         shutil.rmtree(work, ignore_errors=True)
