@@ -407,7 +407,7 @@ def render_poly_png(cells: list[tuple[list[tuple[float, float]], int]],
     ``total`` breakpoints with the sheet's opacity; bordered styles
     stroke a 1-px edge (the CartoCSS line widths are sub-pixel).
     ``outline.poly`` strokes only. Cell rings come from the binning
-    operators (``binning.hex_polygon`` / square cell corners)."""
+    operators (``binning.hex_rings`` / square cell corners)."""
     spec = POLY_STYLES[style]
     size = int(tile_size * scale)
     canvas = np.zeros((size, size, 4), dtype=np.uint8)

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -57,16 +58,23 @@ def hex_assign_sql(px: str, py: str, z: int, x: int, y: int,
     Alignment: offset the pixel by the per-tile grid offset
     (HexBin.java:113-118) so ids are consistent across tiles; then
     flat-top axial conversion + cube rounding.
+
+    Every operand is cast to DOUBLE, so both engines evaluate the text
+    in IEEE double with :func:`hex_bin_dict`'s operation order. Spark
+    reads a literal such as ``2.0`` as a DECIMAL and would otherwise
+    run ``qf`` in ``decimal(38,6)``, which breaks the cube-rounding
+    ties on hexagon edges differently from DuckDB.
     """
     p = hex_params(tile_size, min_hex_per_tile)
-    r = p["radius"]
+    r = f"CAST({p['radius']!r} AS DOUBLE)"
     # per-tile grid offsets use the global tile address
     off_x = (x * tile_size) % (1.5 * p["hex_width"])
     off_y = (y * tile_size) % p["hex_height"]
-    xs = f"(({px}) + {off_x!r})"
-    ys = f"(({py}) + {off_y!r})"
-    qf = f"((2.0/3.0) * {xs} / {r!r})"
-    rf = f"((-1.0/3.0) * {xs} + (sqrt(3.0)/3.0) * {ys}) / {r!r}"
+    xs = f"(CAST({px} AS DOUBLE) + CAST({off_x!r} AS DOUBLE))"
+    ys = f"(CAST({py} AS DOUBLE) + CAST({off_y!r} AS DOUBLE))"
+    qf = f"((CAST(2 AS DOUBLE) / 3) * {xs} / {r})"
+    rf = (f"((CAST(-1 AS DOUBLE) / 3) * {xs}"
+          f" + (sqrt(CAST(3 AS DOUBLE)) / 3) * {ys}) / {r}")
     return cube_round_sql(qf, rf)
 
 
@@ -143,20 +151,27 @@ def _total(v) -> int:
     return v["total"] if isinstance(v, dict) else v
 
 
-def hex_polygon(q: int, r: int, z: int, x: int, y: int, tile_size: int = 512,
-                min_hex_per_tile: int = DEFAULT_HEX_PER_TILE
-                ) -> list[tuple[float, float]]:
-    """Tile-local vertex ring for a hex id (for MVT polygon output)."""
+def hex_rings(cells, z: int, x: int, y: int, tile_size: int = 512,
+              min_hex_per_tile: int = DEFAULT_HEX_PER_TILE) -> list:
+    """Tile-local closed vertex rings (7 integer vertices, the first
+    repeated) for hex ids ``cells`` = [(q, r), ...], for MVT polygon
+    output. One numpy pass over all cells: centre plus the six fixed
+    vertex offsets, each computed with the scalar operation order of a
+    per-vertex loop, then round half to even."""
     p = hex_params(tile_size, min_hex_per_tile)
     radius, h = p["radius"], p["hex_height"]
     off_x = (x * tile_size) % (1.5 * p["hex_width"])
     off_y = (y * tile_size) % p["hex_height"]
+    angles = [math.radians(60 * i) for i in range(6)]
+    dx = np.array([radius * math.cos(a) for a in angles])
+    dy = np.array([radius * math.sin(a) for a in angles])
+    qr = np.array(cells, np.float64).reshape(-1, 2)
+    q, r = qr[:, :1], qr[:, 1:]
     cx = radius * 1.5 * q - off_x
     cy = h * (r + q / 2.0) - off_y
-    pts = [(cx + radius * math.cos(a), cy + radius * math.sin(a))
-           for a in (math.radians(60 * i) for i in range(6))]
-    pts.append(pts[0])
-    return pts
+    ring = np.stack([np.round(cx + dx), np.round(cy + dy)], axis=2)
+    return np.concatenate([ring, ring[:, :1]], axis=1) \
+        .astype(np.int64).tolist()
 
 
 def radius_pairs(points: DataFrame, radius_deg: float,

@@ -17,6 +17,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from maps_spark.session import sql_over
+
 MIN_YEAR = 1600  # Capabilities year floor
 
 
@@ -121,10 +123,12 @@ def lng_spread_df(spark, keyed: DataFrame, view: str = "0:0",
     """centredSpread as a distributed window query — the same
     dual-dialect SQL text the oracle replays (one row:
     minLng, maxLng; minLng > maxLng means antimeridian crossing). The
-    keyed frame is bound as a ``spark.sql`` argument."""
+    keyed frame is bound as a ``spark.sql`` argument
+    (:func:`maps_spark.session.sql_over`)."""
     from maps_spark.sql.oracle import lng_spread_body
-    return spark.sql(lng_spread_body(view, keyed="{keyed}", lng="lng",
-                                     multiplier=multiplier), keyed=keyed)
+    return sql_over(spark, lng_spread_body(view, keyed="{keyed}", lng="lng",
+                                           multiplier=multiplier),
+                    keyed=keyed)
 
 
 def lng_spread(keyed_view: DataFrame, multiplier: int = 100

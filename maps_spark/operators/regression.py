@@ -6,8 +6,10 @@ tile endpoint, or for the whole query area.
 
 Implementation notes:
 
-- the species-vs-group join (J2) is a plain inner join on (cell, year);
-  both sides are pre-aggregated and small, so AQE broadcasts.
+- the species-vs-group pairing (J2) is one scan of the keyed frame
+  with a conditional count per side, grouped on (cell, year); a
+  (cell, year) pairs when both counts are positive — the inner join of
+  the two per-side aggregates without a second scan or the join.
 - slope/intercept/r2 come from *integer* sufficient statistics
   (n, Sx, Sy, Sxx, Sxy computed over exact ints/decimals) so results
   are bit-deterministic and oracle-checkable — the closed forms match
@@ -19,6 +21,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from maps_spark.session import sql_over
+
 
 def trend_sql(species_pred: str, group_pred: str, keyed_table: str) -> str:
     """Dual-dialect OLS trend SQL (RegressionResource.java:204-220,
@@ -26,6 +30,11 @@ def trend_sql(species_pred: str, group_pred: str, keyed_table: str) -> str:
     on year, returning the full SimpleRegression surface — slope,
     intercept, r2, n, SSE, slope/intercept standard errors, and the
     two-sided slope significance.
+
+    One scan: the species and group counts are two conditional counts
+    of one per-year aggregate over rows matching either predicate, and
+    the years where both are positive are the pairs (the inner join of
+    two per-year aggregates, without a second scan or the join).
 
     Bit-determinism: the ratio is quantized to an exact integer
     ``floor(speciesCnt * 1e9 / groupCnt)`` (identical double division +
@@ -46,16 +55,16 @@ def trend_sql(species_pred: str, group_pred: str, keyed_table: str) -> str:
     1-CDF) to avoid cancellation.
     """
     return f"""
-WITH sc AS (SELECT CAST(year AS BIGINT) AS year, count(*) AS speciesCnt
-            FROM {keyed_table} WHERE {species_pred} AND year IS NOT NULL
+WITH yc AS (SELECT CAST(year AS BIGINT) AS year,
+                   count(CASE WHEN {species_pred} THEN 1 END) AS speciesCnt,
+                   count(CASE WHEN {group_pred} THEN 1 END) AS groupCnt
+            FROM {keyed_table}
+            WHERE ({species_pred} OR {group_pred}) AND year IS NOT NULL
             GROUP BY 1),
-gc AS (SELECT CAST(year AS BIGINT) AS year, count(*) AS groupCnt
-       FROM {keyed_table} WHERE {group_pred} AND year IS NOT NULL
-       GROUP BY 1),
-pairs AS (SELECT sc.year,
-                 CAST(floor(CAST(sc.speciesCnt AS DOUBLE) * 1000000000.0
-                            / CAST(gc.groupCnt AS DOUBLE)) AS BIGINT) AS rs
-          FROM sc JOIN gc ON sc.year = gc.year WHERE gc.groupCnt > 0),
+pairs AS (SELECT year,
+                 CAST(floor(CAST(speciesCnt AS DOUBLE) * 1000000000.0
+                            / CAST(groupCnt AS DOUBLE)) AS BIGINT) AS rs
+          FROM yc WHERE speciesCnt > 0 AND groupCnt > 0),
 sums AS (SELECT CAST(count(*) AS BIGINT) AS n,
                 CAST(sum(year) AS BIGINT) AS sx,
                 CAST(sum(rs) AS BIGINT) AS sy,
@@ -123,14 +132,15 @@ FROM ex6"""
 def species_trend(spark, keyed: DataFrame, species_view: str,
                   group_view: str) -> DataFrame:
     """Engine entry: runs the dual-dialect trend SQL over the keyed
-    frame, bound as a ``spark.sql`` argument (a per-call view, so
-    concurrent requests never share a name); the oracle runs the
+    frame, bound as a ``spark.sql`` argument through
+    :func:`maps_spark.session.sql_over` (a per-call view, so concurrent
+    requests never share a name); the oracle runs the
     identical text over its own CTE. borYear's null-year encoding (0)
     maps back to NULL year."""
     year = F.floor(F.col("borYear") / 100).cast("bigint")
     sql = trend_sql(f"mapKey = '{species_view}'", f"mapKey = '{group_view}'",
                     "{keyed}")
-    return spark.sql(sql, keyed=keyed.select(
+    return sql_over(spark, sql, keyed=keyed.select(
         "mapKey", F.when(year > 0, year).alias("year")))
 
 
@@ -163,7 +173,7 @@ def hex_trend(spark, keyed: DataFrame, species_view: str, group_view: str,
     (RegressionResource.java:258-342), with the keyed frame bound as a
     ``spark.sql`` argument."""
     from maps_spark.sql.oracle import hex_trend_body
-    return spark.sql(hex_trend_body(
+    return sql_over(spark, hex_trend_body(
         srs, z, x, y, species_view, group_view,
         keyed="{keyed}", lat="lat", lng="lng", bor_year="borYear"),
         keyed=keyed)

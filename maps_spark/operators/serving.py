@@ -82,17 +82,15 @@ def local_px_cols(srs: str, z: int, x: int, y: int, px: Column, py: Column,
     return lx, py - F.lit(y * tile_size)
 
 
-def density_tile(keyed: DataFrame, map_key: str, srs: str, z: int, x: int,
-                 y: int, year_range: tuple[int | None, int | None] = (None, None),
-                 bors: list[str] | None = None, verbose: bool = False,
-                 tile_size: int = P.TILE_SIZE,
-                 buffer: int = T.DEFAULT_BUFFER) -> DataFrame:
-    """Feature rows of the served tile, straight from the keyed
-    occurrence table. Columns: (px, py, total) or verbose
-    (px, py, year, cnt)."""
+def _tile_rows(keyed: DataFrame, keys: Column, srs: str, z: int, x: int,
+               y: int, year_range: tuple[int | None, int | None],
+               bors: list[str] | None, tile_size: int,
+               buffer: int) -> DataFrame:
+    """The keyed rows matching ``keys`` that fall in the served tile:
+    (mapKey, px, py, year), tile-local and ungrouped."""
     pxc, pyc = P.pixel_cols(srs, "lat", "lng", z, tile_size)
-    df = (keyed.where(F.col("mapKey") == map_key)
-          .select(F.col("borYear"),
+    df = (keyed.where(keys)
+          .select("mapKey", F.col("borYear"),
                   pxc.alias("gpx"), pyc.alias("gpy"))
           .where(F.col("gpx").isNotNull()))
     if bors:
@@ -104,8 +102,21 @@ def density_tile(keyed: DataFrame, map_key: str, srs: str, z: int, x: int,
                                      tile_size, buffer))
     lx, ly = local_px_cols(srs, z, x, y, F.col("gpx"), F.col("gpy"),
                            tile_size, buffer)
-    df = df.select(lx.alias("px"), ly.alias("py"),
-                   F.floor(F.col("borYear") / 100).cast("long").alias("year"))
+    return df.select("mapKey", lx.alias("px"), ly.alias("py"),
+                     F.floor(F.col("borYear") / 100).cast("long")
+                     .alias("year"))
+
+
+def density_tile(keyed: DataFrame, map_key: str, srs: str, z: int, x: int,
+                 y: int, year_range: tuple[int | None, int | None] = (None, None),
+                 bors: list[str] | None = None, verbose: bool = False,
+                 tile_size: int = P.TILE_SIZE,
+                 buffer: int = T.DEFAULT_BUFFER) -> DataFrame:
+    """Feature rows of the served tile, straight from the keyed
+    occurrence table. Columns: (px, py, total) or verbose
+    (px, py, year, cnt)."""
+    df = _tile_rows(keyed, F.col("mapKey") == map_key, srs, z, x, y,
+                    year_range, bors, tile_size, buffer)
     if verbose:
         return (df.groupBy("px", "py", "year")
                 .agg(F.count("*").alias("cnt")))
@@ -121,14 +132,18 @@ def country_masked_tile(keyed: DataFrame, map_key: str, mask_key: str,
     TileResource.java:576-583): keep the served tile's pixels that also
     carry features of the mask view (``4:<ISO>``).
 
-    The mask side is one view's single-tile pixel set — small — so it
-    broadcasts; the semi-join never shuffles the source."""
-    src = density_tile(keyed, map_key, srs, z, x, y,
-                       tile_size=tile_size, buffer=buffer)
-    mask = density_tile(keyed, mask_key, srs, z, x, y,
-                        tile_size=tile_size, buffer=buffer
-                        ).select("px", "py")
-    return src.join(F.broadcast(mask), ["px", "py"], "left_semi")
+    One scan of both views, grouped on the tile-local pixel with a
+    conditional count per side; a pixel is kept when both counts are
+    positive — the semi-join of the view's pixels on the mask's,
+    without a second scan or the join."""
+    rows = _tile_rows(keyed, F.col("mapKey").isin(map_key, mask_key), srs,
+                      z, x, y, (None, None), None, tile_size, buffer)
+    side = F.col("mapKey")
+    return (rows.groupBy("px", "py")
+            .agg(F.count(F.when(side == map_key, 1)).alias("total"),
+                 F.count(F.when(side == mask_key, 1)).alias("mask"))
+            .where((F.col("total") > 0) & (F.col("mask") > 0))
+            .drop("mask"))
 
 
 # -- single-tile in-memory path (tile-store serve flow) ----------------------
@@ -348,13 +363,12 @@ def serve_binned_tile(spark, root: str, map_key: str, srs: str, z: int,
             feats.append((ring, {TOTAL_KEY: int(total)}))
     elif bin == "hex":
         per_tile = hex_per_tile or binning.DEFAULT_HEX_PER_TILE
-        cells = binning.hex_bin_dict(tile, z, x, y, tile_size, per_tile)
-        feats = []
-        for (q, r), total in sorted(cells.items()):
-            ring = [(int(round(vx)), int(round(vy))) for vx, vy in
-                    binning.hex_polygon(q, r, z, x, y, tile_size,
-                                        per_tile)]
-            feats.append((ring, {TOTAL_KEY: int(total)}))
+        cells = sorted(binning.hex_bin_dict(tile, z, x, y, tile_size,
+                                            per_tile).items())
+        rings = binning.hex_rings([c for c, _ in cells], z, x, y,
+                                  tile_size, per_tile)
+        feats = [(ring, {TOTAL_KEY: int(total)})
+                 for ring, (_, total) in zip(rings, cells)]
     else:
         raise ValueError(f"unknown bin mode: {bin}")
     return mvt.encode_polygon_layer("occurrence", feats, extent=tile_size)

@@ -177,18 +177,19 @@ pixloc AS (
 SELECT * FROM ({union})"""
 
 
-def tile_ctes(srs: str, z: int, x: int, y: int, view: str,
+def tile_ctes(srs: str, z: int, x: int, y: int, view: str | tuple[str, ...],
               year_lo: int | None = None, year_hi: int | None = None,
               bors: list[str] | None = None, prefix: str = "",
               keyed: str = "keyed",
               lat: str = "decimalLatitude",
               lng: str = "decimalLongitude",
               bor_year: str | None = None) -> str:
-    """The served tile's feature CTEs for one view, dual-dialect:
-    ``{prefix}pix`` (global pixel + borYear) and ``{prefix}intile``
-    (tile-local px/py after containment + dateline wrap + year/BOR
-    filters). Composable — a prefix lets one statement carry several
-    views (country mask J1, hex regression J2)."""
+    """The served tile's feature CTEs, dual-dialect: ``{prefix}pix``
+    (mapKey, global pixel + borYear) and ``{prefix}intile`` (mapKey,
+    tile-local px/py after containment + dateline wrap + year/BOR
+    filters). ``view`` is one view or a tuple of views read in the same
+    scan (hex regression J2); a prefix lets one statement carry several
+    (country mask J1)."""
     zz_h, zz_v, wrap = SCHEMA_SHAPE[srs]
     num_x = zz_h * (1 << z)
     world = num_x * TILE
@@ -225,13 +226,14 @@ def tile_ctes(srs: str, z: int, x: int, y: int, view: str,
     where = " AND ".join(filters)
 
     bye = bor_year or dual.encode_bor_year('basisOfRecord', 'year')
+    keys = f"mapKey = '{view}'" if isinstance(view, str) else _views_in(view)
     return f"""{prefix}pix AS (
-  SELECT {pxe} AS px, {pye} AS py,
+  SELECT mapKey, {pxe} AS px, {pye} AS py,
          {bye} AS borYear
-  FROM {keyed} WHERE {plot} AND mapKey = '{view}'),
+  FROM {keyed} WHERE {plot} AND {keys}),
 {prefix}intile AS (
-  SELECT CAST({lx} AS BIGINT) AS px, CAST(py - {y * TILE} AS BIGINT) AS py,
-         borYear
+  SELECT mapKey, CAST({lx} AS BIGINT) AS px,
+         CAST(py - {y * TILE} AS BIGINT) AS py, borYear
   FROM {prefix}pix WHERE {where})"""
 
 
@@ -313,18 +315,21 @@ def hex_trend_body(srs: str, z: int, x: int, y: int, species_view: str,
                    bor_year: str | None = None,
                    min_hex_per_tile: int = 51) -> str:
     """J2 + A14 per-hexagon species trend: hex-binned per-year species
-    and higher-taxon counts joined on hexagon id, then a per-hex OLS of
+    and higher-taxon counts paired on hexagon id, then a per-hex OLS of
     the quantized ratio (RegressionResource.java:258-355 semantics).
 
-    Same bit-determinism scheme as :func:`trend_sql`: exact integer
+    One scan: the tile CTEs read both views at once, and the species
+    and group counts are conditional counts of one (hex, year)
+    aggregate; a (hex, year) pairs when both are positive — the inner
+    join of the two per-view aggregates, without the second scan or
+    the join. Same bit-determinism scheme as
+    :func:`maps_spark.operators.regression.trend_sql`: exact integer
     sufficient statistics, double division only in the closed forms —
     the full statement is one shared text for Spark and DuckDB.
     """
     from maps_spark.operators.binning import hex_assign_sql
     qe, re = hex_assign_sql("px", "py", z, x, y, TILE, min_hex_per_tile)
-    s = tile_ctes(srs, z, x, y, species_view, prefix="s", keyed=keyed,
-                  lat=lat, lng=lng, bor_year=bor_year)
-    g = tile_ctes(srs, z, x, y, group_view, prefix="g", keyed=keyed,
+    t = tile_ctes(srs, z, x, y, (species_view, group_view), keyed=keyed,
                   lat=lat, lng=lng, bor_year=bor_year)
     # Two Spark-codegen guards, both also strictly-less-work rewrites:
     # (1) the (px, py, year) pre-aggregation between `intile` and the
@@ -333,30 +338,24 @@ def hex_trend_body(srs: str, z: int, x: int, y: int, species_view: str,
     # generated processNext() otherwise overflows the JVM's 64 KB
     # method limit and the stage silently loses whole-stage codegen);
     # the hex id is also computed once per distinct pixel, not per
-    # record. (2) coalesce(...) makes hexQ/hexR non-nullable so the
-    # join's inferred isnotnull constraints cannot push back through
-    # both aggregates as a 30 KB hex-of-Mercator scan filter (same
-    # overflow; the ids are never null — containment already filtered).
-    return f"""WITH {s},
-{g},
-scp AS (SELECT px, py, CAST(floor(borYear / 100) AS BIGINT) AS year,
-               count(*) AS c
-        FROM sintile WHERE borYear >= 100 GROUP BY 1, 2, 3),
-gcp AS (SELECT px, py, CAST(floor(borYear / 100) AS BIGINT) AS year,
-               count(*) AS c
-        FROM gintile WHERE borYear >= 100 GROUP BY 1, 2, 3),
-sc AS (SELECT coalesce({qe}, 0) AS hexQ, coalesce({re}, 0) AS hexR, year,
-              CAST(sum(c) AS BIGINT) AS speciesCnt
-       FROM scp GROUP BY 1, 2, 3),
-gc AS (SELECT coalesce({qe}, 0) AS hexQ, coalesce({re}, 0) AS hexR, year,
-              CAST(sum(c) AS BIGINT) AS groupCnt
-       FROM gcp GROUP BY 1, 2, 3),
-pairs AS (SELECT sc.hexQ, sc.hexR, sc.year,
-                 CAST(floor(CAST(sc.speciesCnt AS DOUBLE) * 1000000000.0
-                            / CAST(gc.groupCnt AS DOUBLE)) AS BIGINT) AS rs
-          FROM sc JOIN gc ON sc.hexQ = gc.hexQ AND sc.hexR = gc.hexR
-                         AND sc.year = gc.year
-          WHERE gc.groupCnt > 0),
+    # record. (2) coalesce(...) makes hexQ/hexR non-nullable, so no
+    # isnotnull constraint on the ids can be inferred and pushed back
+    # through the aggregates as a 30 KB hex-of-Mercator scan filter
+    # (same overflow; the ids are never null — containment already
+    # filtered).
+    return f"""WITH {t},
+pcp AS (SELECT px, py, CAST(floor(borYear / 100) AS BIGINT) AS year,
+               count(CASE WHEN mapKey = '{species_view}' THEN 1 END) AS sc,
+               count(CASE WHEN mapKey = '{group_view}' THEN 1 END) AS gc
+        FROM intile WHERE borYear >= 100 GROUP BY 1, 2, 3),
+hc AS (SELECT coalesce({qe}, 0) AS hexQ, coalesce({re}, 0) AS hexR, year,
+              CAST(sum(sc) AS BIGINT) AS speciesCnt,
+              CAST(sum(gc) AS BIGINT) AS groupCnt
+       FROM pcp GROUP BY 1, 2, 3),
+pairs AS (SELECT hexQ, hexR, year,
+                 CAST(floor(CAST(speciesCnt AS DOUBLE) * 1000000000.0
+                            / CAST(groupCnt AS DOUBLE)) AS BIGINT) AS rs
+          FROM hc WHERE speciesCnt > 0 AND groupCnt > 0),
 sums AS (SELECT hexQ, hexR, CAST(count(*) AS BIGINT) AS n,
                 CAST(sum(year) AS BIGINT) AS sx,
                 CAST(sum(rs) AS BIGINT) AS sy,

@@ -1,12 +1,19 @@
-"""Loop implementations the vectorized serve path replaced, kept as
-test oracles: the dict-walking tile filter, the dot-by-dot PNG
-renderers and the vertex-by-vertex polygon-layer encoder. The first
-three read :func:`maps_spark.functions.mvt.decode_tile`'s dict form and
-must agree exactly with
-:func:`maps_spark.operators.serving.filter_decoded_tile` and
-:mod:`maps_spark.functions.png`'s renderers; the encoder must write the
-bytes :func:`maps_spark.functions.mvt.encode_polygon_layer` writes."""
+"""Implementations the engine replaced, kept as test oracles.
 
+- Loops the vectorized serve path replaced: the dict-walking tile
+  filter, the dot-by-dot PNG renderers, the vertex-by-vertex
+  polygon-layer encoder and the per-cell hexagon ring. The first three
+  read :func:`maps_spark.functions.mvt.decode_tile`'s dict form and
+  must agree exactly with
+  :func:`maps_spark.operators.serving.filter_decoded_tile` and
+  :mod:`maps_spark.functions.png`'s renderers; the encoder must write
+  the bytes :func:`maps_spark.functions.mvt.encode_polygon_layer`
+  writes, and the rounded rings must equal
+  :func:`maps_spark.operators.binning.hex_rings`.
+- The two-scan trend texts the one-scan SQL replaced: one aggregate per
+  view, joined on (cell, year)."""
+
+import math
 from collections import defaultdict
 
 import numpy as np
@@ -16,6 +23,7 @@ from maps_spark.functions import projections as P
 from maps_spark.functions import tiles as T
 from maps_spark.functions.mvt import _encode_value, _tag, _varint, _zigzag
 from maps_spark.functions.png import STYLES, write_png
+from maps_spark.operators.binning import DEFAULT_HEX_PER_TILE, hex_params
 from maps_spark.operators.serving import TOTAL_KEY, _contains, _in_range
 
 
@@ -193,3 +201,75 @@ def encode_polygon_layer_loop(name: str,
         body += _len_delim(4, v)
     body += _tag(5, 0) + _varint(extent)
     return _len_delim(3, bytes(body))
+
+
+def hex_polygon(q: int, r: int, z: int, x: int, y: int, tile_size: int = 512,
+                min_hex_per_tile: int = DEFAULT_HEX_PER_TILE
+                ) -> list[tuple[float, float]]:
+    """Tile-local vertex ring for a hex id, one vertex at a time."""
+    p = hex_params(tile_size, min_hex_per_tile)
+    radius, h = p["radius"], p["hex_height"]
+    off_x = (x * tile_size) % (1.5 * p["hex_width"])
+    off_y = (y * tile_size) % p["hex_height"]
+    cx = radius * 1.5 * q - off_x
+    cy = h * (r + q / 2.0) - off_y
+    pts = [(cx + radius * math.cos(a), cy + radius * math.sin(a))
+           for a in (math.radians(60 * i) for i in range(6))]
+    pts.append(pts[0])
+    return pts
+
+
+def trend_sql_two_scan(species_pred: str, group_pred: str,
+                       keyed_table: str) -> str:
+    """:func:`maps_spark.operators.regression.trend_sql` with one
+    per-year aggregate per predicate, joined on year."""
+    from maps_spark.operators.regression import trend_sql
+    tail = trend_sql(species_pred, group_pred, keyed_table) \
+        .split("\nsums AS ", 1)[1]
+    return f"""
+WITH sc AS (SELECT CAST(year AS BIGINT) AS year, count(*) AS speciesCnt
+            FROM {keyed_table} WHERE {species_pred} AND year IS NOT NULL
+            GROUP BY 1),
+gc AS (SELECT CAST(year AS BIGINT) AS year, count(*) AS groupCnt
+       FROM {keyed_table} WHERE {group_pred} AND year IS NOT NULL
+       GROUP BY 1),
+pairs AS (SELECT sc.year,
+                 CAST(floor(CAST(sc.speciesCnt AS DOUBLE) * 1000000000.0
+                            / CAST(gc.groupCnt AS DOUBLE)) AS BIGINT) AS rs
+          FROM sc JOIN gc ON sc.year = gc.year WHERE gc.groupCnt > 0),
+sums AS {tail}"""
+
+
+def hex_trend_body_two_scan(srs: str, z: int, x: int, y: int,
+                            species_view: str, group_view: str,
+                            **kw) -> str:
+    """:func:`maps_spark.sql.oracle.hex_trend_body` with one tile scan
+    and one hex aggregate per view, joined on (hexQ, hexR, year)."""
+    from maps_spark.operators.binning import hex_assign_sql
+    from maps_spark.sql.oracle import TILE, hex_trend_body, tile_ctes
+    tail = hex_trend_body(srs, z, x, y, species_view, group_view, **kw) \
+        .split("\nsums AS ", 1)[1]
+    qe, re = hex_assign_sql("px", "py", z, x, y, TILE)
+    s = tile_ctes(srs, z, x, y, species_view, prefix="s", **kw)
+    g = tile_ctes(srs, z, x, y, group_view, prefix="g", **kw)
+    return f"""WITH {s},
+{g},
+scp AS (SELECT px, py, CAST(floor(borYear / 100) AS BIGINT) AS year,
+               count(*) AS c
+        FROM sintile WHERE borYear >= 100 GROUP BY 1, 2, 3),
+gcp AS (SELECT px, py, CAST(floor(borYear / 100) AS BIGINT) AS year,
+               count(*) AS c
+        FROM gintile WHERE borYear >= 100 GROUP BY 1, 2, 3),
+sc AS (SELECT coalesce({qe}, 0) AS hexQ, coalesce({re}, 0) AS hexR, year,
+              CAST(sum(c) AS BIGINT) AS speciesCnt
+       FROM scp GROUP BY 1, 2, 3),
+gc AS (SELECT coalesce({qe}, 0) AS hexQ, coalesce({re}, 0) AS hexR, year,
+              CAST(sum(c) AS BIGINT) AS groupCnt
+       FROM gcp GROUP BY 1, 2, 3),
+pairs AS (SELECT sc.hexQ, sc.hexR, sc.year,
+                 CAST(floor(CAST(sc.speciesCnt AS DOUBLE) * 1000000000.0
+                            / CAST(gc.groupCnt AS DOUBLE)) AS BIGINT) AS rs
+          FROM sc JOIN gc ON sc.hexQ = gc.hexQ AND sc.hexR = gc.hexR
+                         AND sc.year = gc.year
+          WHERE gc.groupCnt > 0),
+sums AS {tail}"""

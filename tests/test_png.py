@@ -176,7 +176,7 @@ class TestPolyRender:
         assert img[0, 32, 3] > 0            # border stroked
 
     def test_hex_cells_render(self):
-        from maps_spark.operators.binning import hex_polygon
+        from tests.oracles import hex_polygon
         ring = hex_polygon(3, 2, 2, 1, 1)
         img = _decode_png(png.render_poly_png(
             [(ring, 20000)], "purpleWhite.poly"))

@@ -2,7 +2,9 @@
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB at sf0.01, compares row count, schema width, and an
-order-insensitive value hash (columns sorted by name, rows sorted).
+order-insensitive value hash (columns sorted by name, rows sorted). Each
+OK/FAIL line ends with the first 12 hex digits of the Spark side's hash,
+so diffing two checkouts' outputs shows whether a change moved a value.
 
 Usage: python tools/check_correctness.py [query ...]
 """
@@ -12,6 +14,7 @@ from __future__ import annotations
 import hashlib
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import pandas as pd
@@ -41,7 +44,7 @@ def _norm(v) -> str:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entrymod
     from maps_spark.session import get_spark
 
@@ -86,7 +89,7 @@ def main() -> int:
             zero_rows.append(name)
         status = "OK " if ok else "FAIL"
         print(f"{name:32s} {status} rows {len(sdf):7d}/{len(odf):7d} "
-              f"hash {'=' if h1 == h2 else '!'}  "
+              f"hash {'=' if h1 == h2 else '!'} {h1[:12]}  "
               f"[spark {t1 - t0:5.1f}s duck {t2 - t1:4.1f}s]")
         if not ok:
             failures += 1
