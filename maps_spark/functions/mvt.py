@@ -150,104 +150,105 @@ def encode_tile(layers: dict[str, list[tuple[int, int, dict]]],
     return b"".join(encode_layer(n, f, extent) for n, f in layers.items())
 
 
-def encode_polygon_layer(name: str,
-                         features: list[tuple[list[tuple[int, int]], dict]],
+def encode_polygon_layer(name: str, rings: np.ndarray, totals: np.ndarray,
                          extent: int = 512) -> bytes:
-    """One POLYGON layer: ``features`` is [(ring, attrs), ...] with
-    ``ring`` an exterior vertex list (closing vertex optional — MVT
-    closes with ClosePath). The binned-tile wire shape
+    """One POLYGON layer of the binned-tile wire shape
     (HexBin.java:154-161 / SquareBin.java:97-99: one polygon per cell,
-    attrs ``{"total": n}``, layer "occurrence"). Vertices are integers;
-    the geometry of every ring is encoded at once with numpy
-    (:func:`_ring_geometries`), so coordinate differences must fit in
-    62 bits."""
-    keys: list[str] = []
-    key_idx: dict[str, int] = {}
-    vals: list[bytes] = []
-    val_idx: dict[bytes, int] = {}
-    rings, tags = [], []
-    for ring, attrs in features:
-        pts = list(ring)
-        if len(pts) > 1 and pts[0] == pts[-1]:
-            pts = pts[:-1]  # ClosePath supplies the closing edge
-        if len(pts) < 3:
-            continue
-        t = bytearray()
-        for k, v in attrs.items():
-            ki = key_idx.get(k)
-            if ki is None:
-                ki = key_idx[k] = len(keys)
-                keys.append(k)
-            enc = _encode_value(v)
-            vi = val_idx.get(enc)
-            if vi is None:
-                vi = val_idx[enc] = len(vals)
-                vals.append(enc)
-            t += _v(ki) + _v(vi)
-        rings.append(pts)
-        tags.append(t)
+    attrs ``{"total": n}``, layer "occurrence"). Feature ``i`` is the
+    exterior ring ``rings[i]`` of an (n, k, 2) integer array — closing
+    vertex optional, MVT closes with ClosePath; a ring with fewer than
+    three other vertices is skipped — with total ``totals[i]``. The
+    values table lists the totals in first-appearance order. Every
+    feature is laid out as one stream of varint fields and encoded at
+    once with numpy, so coordinate differences must fit in 62 bits."""
+    rings = np.asarray(rings, np.int64)
+    totals = np.asarray(totals, np.int64)
+    k = rings.shape[1]
+    closed = np.zeros(len(rings), bool) if k < 2 else \
+        (rings[:, 0] == rings[:, -1]).all(axis=1)
+    n = k - closed
+    live = n >= 3
+    rings, totals, n, closed = rings[live], totals[live], n[live], closed[live]
+    vertex = np.ones(rings.shape[:2], bool)
+    if k:
+        vertex[closed, -1] = False        # ClosePath supplies that edge
+    xy = rings[vertex]
+
+    # values: the distinct totals in first-appearance order
+    uniq, first_at, inverse = np.unique(totals, return_index=True,
+                                        return_inverse=True)
+    order = np.argsort(first_at)
+    rank = np.empty(len(uniq), np.int64)
+    rank[order] = np.arange(len(uniq))
+    vi = rank[inverse]
+    vals = [_encode_value(v) for v in uniq[order].tolist()]
+
+    # geometry per ring: MoveTo, x0, y0, LineTo, (dx, dy) * (n - 1),
+    # ClosePath; zigzag deltas from the previous vertex, the first
+    # from the origin
+    first = np.cumsum(n) - n                   # each ring's first vertex
+    d = xy.copy()
+    d[1:] -= xy[:-1]
+    d[first] = xy[first]
+    zz = ((d << 1) ^ (d >> 63)).view(np.uint64)
+    m = 2 * n + 3
+    g_start = np.cumsum(m) - m
+    geom = np.empty(int(m.sum()), np.uint64)
+    geom[g_start] = 1 << 3 | 1
+    geom[g_start + 3] = ((n - 1) << 3 | 2).astype(np.uint64)
+    geom[g_start + m - 1] = 1 << 3 | 7
+    j = np.arange(len(xy)) - np.repeat(first, n)   # vertex within ring
+    at = np.repeat(g_start, n) + 1 + 2 * j + (j > 0)
+    geom[at] = zz[:, 0]
+    geom[at + 1] = zz[:, 1]
+
+    # feature i: 0x12 len(f) | 0x12 len(tags) 0 vi | 0x18 3 |
+    # 0x22 len(geom) geom..., every byte below 0x80 being its own varint
+    g_len = np.add.reduceat(_varint_lens(geom), g_start) if len(n) else n
+    t_len = 1 + _varint_lens(vi)
+    f_len = (1 + _varint_lens(t_len) + t_len + 2
+             + 1 + _varint_lens(g_len) + g_len)
+    head = np.stack([np.full_like(vi, 0x12), f_len, np.full_like(vi, 0x12),
+                     t_len, np.zeros_like(vi), vi, np.full_like(vi, 0x18),
+                     np.full_like(vi, 3), np.full_like(vi, 0x22), g_len],
+                    axis=1).astype(np.uint64)
+    w = head.shape[1]
+    fields = np.empty(head.size + len(geom), np.uint64)
+    h_at = np.arange(len(n)) * w + g_start
+    fields[h_at[:, None] + np.arange(w)] = head
+    fields[np.arange(len(geom)) + w * np.repeat(np.arange(1, len(n) + 1), m)] \
+        = geom
 
     body = bytearray(b"\x78\x02")                     # version = 2 (tag 15)
     nm = name.encode("utf-8")
     body += b"\x0a" + _v(len(nm)) + nm                # name (tag 1)
-    for t, geom in zip(tags, _ring_geometries(rings)):
-        f = (b"\x12" + _v(len(t)) + t                 # tags packed (tag 2)
-             + b"\x18\x03"                            # type = POLYGON (tag 3)
-             + b"\x22" + _v(len(geom)) + geom)        # geometry (tag 4)
-        body += b"\x12" + _v(len(f)) + f              # feature (tag 2)
-    for k in keys:
-        kb = k.encode("utf-8")
-        body += b"\x1a" + _v(len(kb)) + kb            # key (tag 3)
+    body += _varints(fields)[0].tobytes()             # features (tag 2)
+    if len(n):
+        body += b"\x1a\x05total"                       # key (tag 3)
     for v in vals:
         body += b"\x22" + _v(len(v)) + v              # value (tag 4)
     body += b"\x28" + _v(extent)                      # extent (tag 5)
     return b"\x1a" + _v(len(body)) + bytes(body)      # layer (tag 3)
 
 
-def _ring_geometries(rings: list[list[tuple[int, int]]]) -> list[bytes]:
-    """The packed geometry field of each open ring: MoveTo its first
-    vertex, LineTo the others, ClosePath; coordinates as zigzag deltas
-    from the previous vertex (the first from the origin). All rings'
-    command integers are laid out and varint-encoded in one pass."""
-    if not rings:
-        return []
-    n = np.fromiter(map(len, rings), np.int64, len(rings))
-    xy = np.fromiter(chain.from_iterable(chain.from_iterable(rings)),
-                     np.int64, 2 * int(n.sum())).reshape(-1, 2)
-    first = np.cumsum(n) - n                   # each ring's first vertex
-    d = xy.copy()
-    d[1:] -= xy[:-1]
-    d[first] = xy[first]
-    zz = ((d << 1) ^ (d >> 63)).view(np.uint64)
-    # per ring: MoveTo, x0, y0, LineTo, (dx, dy) * (n - 1), ClosePath
-    m = 2 * n + 3
-    start = np.cumsum(m) - m
-    ints = np.empty(int(m.sum()), np.uint64)
-    ints[start] = 1 << 3 | 1
-    ints[start + 3] = ((n - 1) << 3 | 2).astype(np.uint64)
-    ints[start + m - 1] = 1 << 3 | 7
-    j = np.arange(len(xy)) - np.repeat(first, n)   # vertex within ring
-    at = np.repeat(start, n) + 1 + 2 * j + (j > 0)
-    ints[at] = zz[:, 0]
-    ints[at + 1] = zz[:, 1]
-    buf, lens = _varints(ints)
-    ends = np.cumsum(np.add.reduceat(lens, start)).tolist()
-    data = buf.tobytes()
-    return [data[a:b] for a, b in zip([0] + ends[:-1], ends)]
-
-
-def _varints(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Protobuf varints of uint64 values, concatenated as one uint8
-    array, and each value's byte count."""
+def _varint_lens(v: np.ndarray) -> np.ndarray:
+    """The byte count of each value's protobuf varint."""
     lens = np.ones(len(v), np.int64)
     rest = v >> 7
     while rest.any():
         lens += rest > 0
         rest >>= 7
+    return lens
+
+
+def _varints(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Protobuf varints of uint64 values, concatenated as one uint8
+    array, and each value's byte count."""
+    lens = _varint_lens(v)
     out = np.empty(int(lens.sum()), np.uint8)
     at = np.cumsum(lens) - lens
     rest = v.copy()
-    for k in range(int(lens.max())):
+    for k in range(int(lens.max(initial=0))):
         live = lens > k
         more = (lens[live] > k + 1).astype(np.uint8) << 7
         out[at[live] + k] = (rest[live] & 0x7F).astype(np.uint8) | more

@@ -452,8 +452,9 @@ def render_marker_png(markers: list[tuple[float, float, int]],
 
 def square_cell_polys(cells: dict, square_size: int
                       ) -> list[tuple[list[tuple[float, float]], int]]:
-    """(cellX, cellY) -> total dict (binning.square_bin_dict output) to
-    the cell-corner rings render_poly_png consumes."""
+    """{(cellX, cellY): total} (the cells binning.square_bin_dict
+    returns, as a dict) to the cell-corner rings render_poly_png
+    consumes."""
     out = []
     for (cx, cy), total in cells.items():
         x0, y0 = cx * square_size, cy * square_size

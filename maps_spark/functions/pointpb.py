@@ -14,6 +14,11 @@ multiplicity for co-located records. We encode the real count.
 from __future__ import annotations
 
 import struct
+from dataclasses import dataclass
+
+import numpy as np
+
+_F64 = struct.Struct("<d")
 
 # proto enum numbers (point_feature.proto:12-24) — NOT the same ordering
 # as the borYear dictionary codes (EncodeBorYearUDF.java:34-42).
@@ -70,15 +75,54 @@ def encode_features(rows) -> bytes:
     return bytes(out)
 
 
-def decode_features(data: bytes) -> list[tuple[float, float, str, int, int]]:
-    feats = []
+@dataclass(frozen=True, eq=False)
+class PointColumns:
+    """One decoded point bundle as numpy columns, one row per feature:
+    ``lat``/``lng`` (float64), ``bor`` (the proto enum code; a code the
+    enum does not know reads as ``UNKNOWN``, 0), ``year`` (0 when
+    unset) and ``count`` (int64). The serve path projects and filters
+    these columns per request; a
+    :class:`~maps_spark.sources.tile_store.TileReader` keeps them per
+    cached view."""
+
+    lat: np.ndarray
+    lng: np.ndarray
+    bor: np.ndarray
+    year: np.ndarray
+    count: np.ndarray
+
+    def __post_init__(self):
+        # cached and shared by every request: read-only
+        for a in (self.lat, self.lng, self.bor, self.year, self.count):
+            a.flags.writeable = False
+
+    def __len__(self) -> int:
+        return len(self.lat)
+
+
+def bor_codes(names) -> np.ndarray:
+    """The enum codes of the basis-of-record ``names`` (any case);
+    names the enum does not know select nothing."""
+    upper = {n.upper() for n in names}
+    return np.array([c for n, c in PB_BOR.items() if n in upper],
+                    np.int64)
+
+
+def decode_features(data: bytes) -> PointColumns:
+    """PointFeatures bytes -> :class:`PointColumns`."""
+    lat: list[float] = []
+    lng: list[float] = []
+    bors: list[int] = []
+    years: list[int] = []
+    counts: list[int] = []
+    unpack = _F64.unpack_from
     pos = 0
     while pos < len(data):
         key, pos = _read_varint(data, pos)
         if key >> 3 == 1 and key & 0x7 == 2:
             ln, pos = _read_varint(data, pos)
             end = pos + ln
-            lat = lng = 0.0
+            la = lo = 0.0
             bor = 0
             year = 0
             count = 1
@@ -86,10 +130,10 @@ def decode_features(data: bytes) -> list[tuple[float, float, str, int, int]]:
                 fk, pos = _read_varint(data, pos)
                 fld, wire = fk >> 3, fk & 0x7
                 if fld == 1 and wire == 1:
-                    lat = struct.unpack("<d", data[pos:pos + 8])[0]
+                    la, = unpack(data, pos)
                     pos += 8
                 elif fld == 2 and wire == 1:
-                    lng = struct.unpack("<d", data[pos:pos + 8])[0]
+                    lo, = unpack(data, pos)
                     pos += 8
                 elif fld == 3 and wire == 0:
                     bor, pos = _read_varint(data, pos)
@@ -104,8 +148,11 @@ def decode_features(data: bytes) -> list[tuple[float, float, str, int, int]]:
                 elif wire == 2:
                     ln2, pos = _read_varint(data, pos)
                     pos += ln2
-            feats.append((lat, lng, PB_BOR_REVERSE.get(bor, "UNKNOWN"),
-                          year, count))
+            lat.append(la)
+            lng.append(lo)
+            bors.append(bor if bor in PB_BOR_REVERSE else 0)
+            years.append(year)
+            counts.append(count)
         else:
             wire = key & 0x7
             if wire == 0:
@@ -115,4 +162,8 @@ def decode_features(data: bytes) -> list[tuple[float, float, str, int, int]]:
                 pos += ln
             else:
                 raise ValueError("unexpected wire type")
-    return feats
+    return PointColumns(lat=np.array(lat, np.float64),
+                        lng=np.array(lng, np.float64),
+                        bor=np.array(bors, np.int8),
+                        year=np.array(years, np.int64),
+                        count=np.array(counts, np.int64))

@@ -104,58 +104,86 @@ def hex_bin(features: DataFrame, z: int, x: int, y: int,
             .agg(F.sum("total").alias("total")))
 
 
-def square_bin_dict(tile: dict, square_size: int = DEFAULT_SQUARE_SIZE,
-                    tile_size: int = 512) -> dict:
-    """Serve-time square binning over a filtered tile dict
-    ({(px, py): total}) — TileResource.java:586-609's re-aggregation
-    without going back to Spark (per-request, in-memory)."""
-    out: dict[tuple[int, int], int] = {}
-    for (px, py), total in tile.items():
-        if 0 <= px < tile_size and 0 <= py < tile_size:
-            cell = (px // square_size, py // square_size)
-            out[cell] = out.get(cell, 0) + _total(total)
-    return out
+def square_bin_dict(px: np.ndarray, py: np.ndarray, total: np.ndarray,
+                    square_size: int = DEFAULT_SQUARE_SIZE,
+                    tile_size: int = 512
+                    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Serve-time square binning of a filtered tile's ``(px, py,
+    total)`` arrays — TileResource.java:586-609's re-aggregation
+    without going back to Spark (per-request, in-memory): the visible
+    pixels' totals summed per ``px // square_size, py // square_size``
+    cell. Returns (cellX, cellY, total) sorted by cell."""
+    vis = (px >= 0) & (px < tile_size) & (py >= 0) & (py < tile_size)
+    return cell_sums((px[vis] // square_size, py[vis] // square_size),
+                     total[vis])
 
 
-def hex_bin_dict(tile: dict, z: int, x: int, y: int, tile_size: int = 512,
-                 min_hex_per_tile: int = DEFAULT_HEX_PER_TILE) -> dict:
-    """Serve-time hex binning over a filtered tile dict (buffer pixels
-    included — hexagons straddle edges). Python twin of the dual-dialect
-    assignment SQL: same offsets, same cube rounding."""
+def hex_bin_dict(px: np.ndarray, py: np.ndarray, total: np.ndarray,
+                 z: int, x: int, y: int, tile_size: int = 512,
+                 min_hex_per_tile: int = DEFAULT_HEX_PER_TILE
+                 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Serve-time hex binning of a filtered tile's ``(px, py, total)``
+    arrays (buffer pixels included — hexagons straddle edges). Numpy
+    twin of the dual-dialect assignment SQL: same offsets, same cube
+    rounding, each step in its scalar operation order in IEEE double.
+    Returns (q, r, total) sorted by cell."""
     p = hex_params(tile_size, min_hex_per_tile)
     radius = p["radius"]
     off_x = (x * tile_size) % (1.5 * p["hex_width"])
     off_y = (y * tile_size) % p["hex_height"]
-    out: dict[tuple[int, int], int] = {}
-    for (px, py), total in tile.items():
-        xs = px + off_x
-        ys = py + off_y
-        qf = (2.0 / 3.0) * xs / radius
-        rf = ((-1.0 / 3.0) * xs + (math.sqrt(3.0) / 3.0) * ys) / radius
-        sf = -qf - rf
-        # half-away-from-zero, matching SQL round() (python round is
-        # banker's and would diverge on .5 ties)
-        rnd = lambda v: math.copysign(math.floor(abs(v) + 0.5), v)
-        rq, rr, rs = rnd(qf), rnd(rf), rnd(sf)
-        dq, dr, ds = abs(rq - qf), abs(rr - rf), abs(rs - sf)
-        if dq > dr and dq > ds:
-            rq = -rr - rs
-        elif dr > ds:
-            rr = -rq - rs
-        cell = (int(rq), int(rr))
-        out[cell] = out.get(cell, 0) + _total(total)
-    return out
+    xs = px + off_x
+    ys = py + off_y
+    qf = (2.0 / 3.0) * xs / radius
+    rf = ((-1.0 / 3.0) * xs + (math.sqrt(3.0) / 3.0) * ys) / radius
+    sf = -qf - rf
+    # half-away-from-zero, matching SQL round() (np.round is banker's
+    # and would diverge on .5 ties)
+    rq, rr, rs = (np.copysign(np.floor(np.abs(v) + 0.5), v)
+                  for v in (qf, rf, sf))
+    dq, dr, ds = np.abs(rq - qf), np.abs(rr - rf), np.abs(rs - sf)
+    fix_q = (dq > dr) & (dq > ds)
+    fix_r = ~fix_q & (dr > ds)
+    q = np.where(fix_q, -rr - rs, rq)
+    r = np.where(fix_r, -rq - rs, rr)
+    return cell_sums((q, r), total)
 
 
-def _total(v) -> int:
-    return v["total"] if isinstance(v, dict) else v
+def cell_sums(keys, values: np.ndarray) -> tuple[np.ndarray, ...]:
+    """Sums per distinct row of the integer ``keys`` columns: the
+    distinct rows in sorted order, one int64 column per key, and the
+    int64 sum of ``values`` per row. The product of the keys' spans must
+    fit in int64, as it does for tile pixels, cells and attribute
+    codes."""
+    keys = [np.asarray(k, np.int64) for k in keys]
+    values = np.asarray(values, np.int64)
+    if not len(values):
+        return (*keys, values)
+    code = np.zeros(len(values), np.int64)
+    for k in keys:
+        lo = k.min()
+        code = code * (k.max() - lo + 1) + (k - lo)
+    order = np.argsort(code, kind="stable")
+    code = code[order]
+    at = np.flatnonzero(np.concatenate(([True], code[1:] != code[:-1])))
+    rows = order[at]
+    return (*(k[rows] for k in keys), np.add.reduceat(values[order], at))
 
 
-def hex_rings(cells, z: int, x: int, y: int, tile_size: int = 512,
-              min_hex_per_tile: int = DEFAULT_HEX_PER_TILE) -> list:
-    """Tile-local closed vertex rings (7 integer vertices, the first
-    repeated) for hex ids ``cells`` = [(q, r), ...], for MVT polygon
-    output. One numpy pass over all cells: centre plus the six fixed
+def square_rings(cx: np.ndarray, cy: np.ndarray,
+                 square_size: int) -> np.ndarray:
+    """(n, 4, 2) int64 open rings of square cells (cellX, cellY): the
+    cell's corners from its top-left, clockwise in tile pixels."""
+    corners = np.array([[0, 0], [1, 0], [1, 1], [0, 1]], np.int64)
+    cells = np.stack([cx, cy], axis=-1).astype(np.int64)
+    return (cells[:, None, :] + corners) * square_size
+
+
+def hex_rings(q: np.ndarray, r: np.ndarray, z: int, x: int, y: int,
+              tile_size: int = 512,
+              min_hex_per_tile: int = DEFAULT_HEX_PER_TILE) -> np.ndarray:
+    """Tile-local closed vertex rings of hex ids (q, r), for MVT
+    polygon output: an (n, 7, 2) int64 array, the first vertex
+    repeated. One numpy pass over all cells: centre plus the six fixed
     vertex offsets, each computed with the scalar operation order of a
     per-vertex loop, then round half to even."""
     p = hex_params(tile_size, min_hex_per_tile)
@@ -165,13 +193,12 @@ def hex_rings(cells, z: int, x: int, y: int, tile_size: int = 512,
     angles = [math.radians(60 * i) for i in range(6)]
     dx = np.array([radius * math.cos(a) for a in angles])
     dy = np.array([radius * math.sin(a) for a in angles])
-    qr = np.array(cells, np.float64).reshape(-1, 2)
-    q, r = qr[:, :1], qr[:, 1:]
+    q = np.asarray(q, np.float64)[:, None]
+    r = np.asarray(r, np.float64)[:, None]
     cx = radius * 1.5 * q - off_x
     cy = h * (r + q / 2.0) - off_y
     ring = np.stack([np.round(cx + dx), np.round(cy + dy)], axis=2)
-    return np.concatenate([ring, ring[:, :1]], axis=1) \
-        .astype(np.int64).tolist()
+    return np.concatenate([ring, ring[:, :1]], axis=1).astype(np.int64)
 
 
 def radius_pairs(points: DataFrame, radius_deg: float,

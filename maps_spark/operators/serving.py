@@ -9,9 +9,11 @@ per request (VectorTileFilters.java:102-242, PointFeatureFilters.java:
   y, year-range, BOR-set) they produce exactly the feature set a served
   tile would contain (tile containment incl. dateline buffer, year/BOR
   filtering, per-pixel merge, total).
-- ``filter_decoded_tile``: the single-tile in-memory path over a tile
-  decoded into numpy columns (for the point-lookup serve flow against
-  the tile store), vectorized over the tile's features.
+- ``filter_decoded_tile`` and ``points_to_tile``: the single-tile
+  in-memory path over a tile decoded into numpy columns, or over a
+  view's point bundle as columns (the point-lookup serve flow against
+  the tile store), vectorized over the features. Both hand the binned
+  endpoint ``(px, py, total)`` arrays.
 
 Filter semantics (pinned to the reference):
 
@@ -27,14 +29,13 @@ Filter semantics (pinned to the reference):
 
 from __future__ import annotations
 
-from collections import defaultdict
-
 import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from maps_spark.functions import projections as P
 from maps_spark.functions import tiles as T
+from maps_spark.operators import binning
 from maps_spark.sql import dual
 
 TOTAL_KEY = "total"
@@ -159,8 +160,9 @@ def filter_decoded_tile(cols, srs: str, z: int, x: int, y: int,
     rows. ``source`` is the (x, y) address the tile was stored under
     when serving an adjacent/identical address.
 
-    Returns {(px, py): {year: cnt, 'total': n}} (verbose) or
-    {(px, py): total}.
+    Returns the tile-local ``(px, py, total)`` int64 arrays, one entry
+    per pixel sorted by (px, py) (:func:`pixel_dict` is their dict
+    view), or, verbose, {(px, py): {year: cnt, 'total': n}}.
     """
     sch = P.schema_for(srs)
     sx, sy = source if source else (x, y)
@@ -178,6 +180,77 @@ def filter_decoded_tile(cols, srs: str, z: int, x: int, y: int,
     ent_ok = key_ok[cols.key]
     if lo is not None or hi is not None:
         keep &= cols.row_sums(ent_ok) > 0
+    lx, ly = _local_xy(sch, z, x, y, gx, gy, tile_size, buffer)
+    if verbose:
+        row = np.repeat(np.arange(len(keep)), np.diff(cols.offsets))
+        sel = ent_ok & keep[row]
+        return _verbose_pixels(lx[row[sel]], ly[row[sel]], cols.key[sel],
+                               cols.keys, cols.count[sel])
+    totals = cols.row_sums(np.where(ent_ok, cols.count, 0))
+    return binning.cell_sums((lx[keep], ly[keep]), totals[keep])
+
+
+def points_to_tile(cols, srs: str, z: int, x: int, y: int,
+                   year_range=(None, None), bors=None,
+                   verbose: bool = False, tile_size: int = P.TILE_SIZE,
+                   buffer: int = T.DEFAULT_BUFFER):
+    """A8 point-mode serving (PointFeatureFilters.java:65-114): project
+    a view's bundle at request time, keep the points on the requested
+    tile (+buffer, z0 dateline copy), aggregate per pixel.
+
+    ``cols``: the bundle's
+    :class:`~maps_spark.functions.pointpb.PointColumns`, as
+    :func:`maps_spark.functions.pointpb.decode_features` returns them.
+    In-memory, per request and vectorized over the bundle — the
+    reference quotes sub-5 ms for this path. A point without a year
+    (0) is kept only when no year bound is set.
+
+    Returns the same shapes as :func:`filter_decoded_tile`.
+    """
+    from maps_spark.functions import pointpb
+    sch = P.schema_for(srs)
+    lo, hi = year_range
+    keep = P.is_plottable(srs, cols.lat, cols.lng)
+    if bors:
+        keep &= np.isin(cols.bor, pointpb.bor_codes(bors))
+    if lo is not None or hi is not None:
+        keep &= cols.year != 0
+        if lo is not None:
+            keep &= cols.year >= lo
+        if hi is not None:
+            keep &= cols.year <= hi
+    fgx, fgy = P.global_xy(srs, cols.lat[keep], cols.lng[keep], z,
+                           tile_size)
+    year, count = cols.year[keep], cols.count[keep]
+    if P._norm(srs) in ("EPSG:3575", "EPSG:3031"):
+        # polar SRS: the canvas-bounds filter is part of the pixel
+        # semantics (dual._azimuthal_exprs NULLs overshooting
+        # buffer-band rows) — the point path must drop the same records
+        # or a view served pre-threshold (points) vs post-threshold
+        # (tiles) would return different feature sets
+        on = ((0 <= fgx) & (fgx < sch.num_x_tiles(z) * tile_size)
+              & (0 <= fgy) & (fgy < sch.num_y_tiles(z) * tile_size))
+        fgx, fgy, year, count = fgx[on], fgy[on], year[on], count[on]
+    gx = np.floor(fgx).astype(np.int64)
+    gy = np.floor(fgy).astype(np.int64)
+    on = _contains(sch, z, x, y, gx, gy, tile_size, buffer)
+    lx, ly = _local_xy(sch, z, x, y, gx[on], gy[on], tile_size, buffer)
+    if verbose:
+        years, key = np.unique(year[on], return_inverse=True)
+        return _verbose_pixels(lx, ly, key, [str(v) for v in years.tolist()],
+                               count[on])
+    return binning.cell_sums((lx, ly), count[on])
+
+
+def pixel_dict(tile) -> dict:
+    """{(px, py): total} of a ``(px, py, total)`` tile."""
+    px, py, total = tile
+    return dict(zip(zip(px.tolist(), py.tolist()), total.tolist()))
+
+
+def _local_xy(sch, z, x, y, gx, gy, tile_size, buffer):
+    """Tile-local coordinates, dateline re-addressed (Tiles.java:55-74),
+    of global pixels ``gx``/``gy`` that lie within the buffered tile."""
     lx = gx - x * tile_size
     if sch.wrap_x and (sch.zz_tiles_horizontal > 1 or z > 0):
         world = sch.num_x_tiles(z) * tile_size
@@ -185,110 +258,26 @@ def filter_decoded_tile(cols, srs: str, z: int, x: int, y: int,
             lx = np.where(gx >= world - buffer, gx - world, lx)
         elif x == sch.num_x_tiles(z) - 1:
             lx = np.where(gx < buffer, gx + world - x * tile_size, lx)
-    ly = gy - y * tile_size
-    # kept rows lie within the buffered tile: one int per pixel
-    width = tile_size + 2 * buffer + 1
-    pix = (lx + buffer) * width + (ly + buffer)
-    if verbose:
-        row = np.repeat(np.arange(len(keep)), np.diff(cols.offsets))
-        sel = ent_ok & keep[row]
-        group = pix[row[sel]] * len(cols.keys) + cols.key[sel]
-        groups, sums = _group_sums(group, cols.count[sel])
-        out: dict = {}
-        for g, n in zip(groups.tolist(), sums.tolist()):
-            p, k = divmod(g, len(cols.keys))
-            out.setdefault(_pixel(p, width, buffer), {})[cols.keys[k]] = n
-        for counts in out.values():
-            counts[TOTAL_KEY] = sum(counts.values())
-        return out
-    totals = cols.row_sums(np.where(ent_ok, cols.count, 0))
-    pixels, sums = _group_sums(pix[keep], totals[keep])
-    return {_pixel(p, width, buffer): n
-            for p, n in zip(pixels.tolist(), sums.tolist())}
+    return lx, gy - y * tile_size
 
 
-def _group_sums(group: np.ndarray, values: np.ndarray
-                ) -> tuple[np.ndarray, np.ndarray]:
-    """(distinct groups, int64 sum of ``values`` per group)."""
-    if not len(group):
-        return group, values
-    order = np.argsort(group, kind="stable")
-    group = group[order]
-    first = np.flatnonzero(np.concatenate(([True],
-                                           group[1:] != group[:-1])))
-    return group[first], np.add.reduceat(values[order], first)
-
-
-def _pixel(p: int, width: int, buffer: int) -> tuple[int, int]:
-    px, py = divmod(p, width)
-    return px - buffer, py - buffer
-
-
-def points_to_tile(features, srs: str, z: int, x: int, y: int,
-                   year_range=(None, None), bors=None,
-                   verbose: bool = False, tile_size: int = P.TILE_SIZE,
-                   buffer: int = T.DEFAULT_BUFFER):
-    """A8 point-mode serving (PointFeatureFilters.java:65-114): project
-    each point of a view's bundle at request time, keep those on the
-    requested tile (+buffer, z0 dateline copy), aggregate per pixel.
-
-    ``features``: iterable of (lat, lng, bor, year, count) from
-    :func:`maps_spark.functions.pointpb.decode_features`. In-memory,
-    per-request — the reference quotes sub-5 ms for this path.
-
-    Returns the same shapes as :func:`filter_decoded_tile`.
-    """
-    import math
-
-    sch = P.schema_for(srs)
-    lo, hi = year_range
-    world = sch.num_x_tiles(z) * tile_size
-    world_y = sch.num_y_tiles(z) * tile_size
-    # polar SRS: the canvas-bounds filter is part of the pixel
-    # semantics (dual._azimuthal_exprs NULLs overshooting buffer-band
-    # rows) — the point path must drop the same records or a view
-    # served pre-threshold (points) vs post-threshold (tiles) would
-    # return different feature sets
-    polar = P._norm(srs) in ("EPSG:3575", "EPSG:3031")
-    bors = {b.upper() for b in bors} if bors else None
-    out_verbose: dict = defaultdict(lambda: defaultdict(int))
-    out_simple: dict = defaultdict(int)
-    for lat, lng, bor, year, cnt in features:
-        if bors and bor.upper() not in bors:
-            continue
-        if year and not _in_range(year, lo, hi):
-            continue
-        if (lo is not None or hi is not None) and not year:
-            continue
-        if not bool(P.is_plottable(srs, lat, lng)):
-            continue
-        fgx, fgy = P.global_xy(srs, lat, lng, z, tile_size)
-        if polar and not (0 <= fgx < world and 0 <= fgy < world_y):
-            continue
-        gx, gy = int(math.floor(fgx)), int(math.floor(fgy))
-        if not _contains(sch, z, x, y, gx, gy, tile_size, buffer):
-            continue
-        lx = gx - x * tile_size
-        if sch.wrap_x and (sch.zz_tiles_horizontal > 1 or z > 0):
-            if x == 0 and gx >= world - buffer:
-                lx = gx - world
-            elif x == sch.num_x_tiles(z) - 1 and gx < buffer:
-                lx = gx + world - x * tile_size
-        ly = gy - y * tile_size
-        if verbose:
-            out_verbose[(lx, ly)][str(year)] += cnt
-        else:
-            out_simple[(lx, ly)] += cnt
-    if verbose:
-        return {pix: {**dict(c), TOTAL_KEY: sum(c.values())}
-                for pix, c in out_verbose.items()}
-    return dict(out_simple)
+def _verbose_pixels(lx, ly, key, names, counts) -> dict:
+    """{(px, py): {names[key]: cnt, ..., 'total': n}} of ``counts``
+    summed per pixel and key code."""
+    out: dict = {}
+    px, py, k, sums = binning.cell_sums((lx, ly, key), counts)
+    for pixel, ki, n in zip(zip(px.tolist(), py.tolist()), k.tolist(),
+                            sums.tolist()):
+        out.setdefault(pixel, {})[names[ki]] = n
+    for c in out.values():
+        c[TOTAL_KEY] = sum(c.values())
+    return out
 
 
 def apply_country_mask(tile: dict, mask: dict) -> dict:
     """J1 at serve time (VectorTileFilters.java:83-99 maskTileByTile):
     keep the served tile's pixels present in the mask view's pixel set.
-    Works on either output shape of :func:`filter_decoded_tile`."""
+    Works on either dict shape of :func:`serve_tile`."""
     return {pix: v for pix, v in tile.items() if pix in mask}
 
 
@@ -298,14 +287,24 @@ def serve_tile(spark, root: str, map_key: str, srs: str, z: int, x: int,
                buffer: int = T.DEFAULT_BUFFER, reader=None):
     """The getTile router (TileResource.java:552-610): pre-built tile
     hit -> decode + re-filter; miss -> point-bundle fallback projected
-    at request time. Returns the filtered per-pixel dict (see
-    :func:`filter_decoded_tile`) or None when the view has no data.
+    at request time. Returns the filtered per-pixel dict,
+    {(px, py): total} (see :func:`pixel_dict`) or the verbose shape of
+    :func:`filter_decoded_tile`, or None when the view has no data.
 
     Pass a :class:`maps_spark.sources.tile_store.TileReader` as
     ``reader`` for cached serving: warm lookups skip Spark entirely and
-    reuse the tile's decoded columns and the view's decoded point
-    bundle. Without one, each lookup is a partition-pruned Spark job
+    reuse the tile's decoded columns and the view's point-bundle
+    columns. Without one, each lookup is a partition-pruned Spark job
     and its bytes are decoded per request."""
+    tile = _served_pixels(spark, root, map_key, srs, z, x, y, year_range,
+                          bors, verbose, tile_size, buffer, reader)
+    return pixel_dict(tile) if tile is not None and not verbose else tile
+
+
+def _served_pixels(spark, root, map_key, srs, z, x, y, year_range, bors,
+                   verbose, tile_size, buffer, reader):
+    """:func:`serve_tile`'s answer in the shapes of
+    :func:`filter_decoded_tile`, or None."""
     from maps_spark.functions import mvt, pointpb
     from maps_spark.sources import tile_store
     if reader is not None:
@@ -319,13 +318,13 @@ def serve_tile(spark, root: str, map_key: str, srs: str, z: int, x: int,
                                    verbose=verbose, tile_size=tile_size,
                                    buffer=buffer)
     if reader is not None:
-        feats = reader.get_point_features(map_key)
+        points = reader.get_point_columns(map_key)
     else:
         blob = tile_store.get_point_bytes(spark, root, map_key)
-        feats = None if blob is None else pointpb.decode_features(blob)
-    if feats is None:
+        points = None if blob is None else pointpb.decode_features(blob)
+    if points is None:
         return None
-    return points_to_tile(feats, srs, z, x, y,
+    return points_to_tile(points, srs, z, x, y,
                           year_range=year_range, bors=bors, verbose=verbose,
                           tile_size=tile_size, buffer=buffer)
 
@@ -343,35 +342,27 @@ def serve_binned_tile(spark, root: str, map_key: str, srs: str, z: int,
     filtered tile, re-bin it at request time, and return ONE MVT
     POLYGON layer "occurrence" with a ``total`` attribute per cell —
     hexagon rings from the aligned grid (HexBin.java:154-161), square
-    cell footprints for ``bin="square"`` (SquareBin.java:97-121).
-    Returns None when the view has no data on this tile."""
+    cell footprints for ``bin="square"`` (SquareBin.java:97-121), cells
+    in (q, r) / (cellX, cellY) order. Returns None when the view has no
+    data on this tile."""
     from maps_spark.functions import mvt
-    from maps_spark.operators import binning
-    tile = serve_tile(spark, root, map_key, srs, z, x, y,
-                      year_range=year_range, bors=bors, verbose=False,
-                      tile_size=tile_size, buffer=buffer, reader=reader)
+    tile = _served_pixels(spark, root, map_key, srs, z, x, y, year_range,
+                          bors, False, tile_size, buffer, reader)
     if tile is None:
         return None
     if bin == "square":
         size = square_size or binning.DEFAULT_SQUARE_SIZE
-        cells = binning.square_bin_dict(tile, size, tile_size)
-        feats = []
-        for (cx, cy), total in sorted(cells.items()):
-            x0, y0 = cx * size, cy * size
-            ring = [(x0, y0), (x0 + size, y0), (x0 + size, y0 + size),
-                    (x0, y0 + size)]
-            feats.append((ring, {TOTAL_KEY: int(total)}))
+        cx, cy, totals = binning.square_bin_dict(*tile, size, tile_size)
+        rings = binning.square_rings(cx, cy, size)
     elif bin == "hex":
         per_tile = hex_per_tile or binning.DEFAULT_HEX_PER_TILE
-        cells = sorted(binning.hex_bin_dict(tile, z, x, y, tile_size,
-                                            per_tile).items())
-        rings = binning.hex_rings([c for c, _ in cells], z, x, y,
-                                  tile_size, per_tile)
-        feats = [(ring, {TOTAL_KEY: int(total)})
-                 for ring, (_, total) in zip(rings, cells)]
+        q, r, totals = binning.hex_bin_dict(*tile, z, x, y, tile_size,
+                                            per_tile)
+        rings = binning.hex_rings(q, r, z, x, y, tile_size, per_tile)
     else:
         raise ValueError(f"unknown bin mode: {bin}")
-    return mvt.encode_polygon_layer("occurrence", feats, extent=tile_size)
+    return mvt.encode_polygon_layer("occurrence", rings, totals,
+                                    extent=tile_size)
 
 
 def serve_binned_png(spark, root: str, map_key: str, srs: str, z: int,
@@ -408,7 +399,3 @@ def _contains(sch, z, x, y, gx, gy, tile_size, buffer):
         if x == sch.num_x_tiles(z) - 1:
             inside = inside | (vert & (gx < buffer))
     return inside
-
-
-def _in_range(year: int, lo, hi) -> bool:
-    return (lo is None or year >= lo) and (hi is None or year <= hi)

@@ -313,11 +313,17 @@ class TileReader:
     :class:`~maps_spark.functions.mvt.TileColumns`, kept in the slice
     entry beside the tile's bytes (which stay for the MVT endpoint,
     :meth:`get_tile_bytes`) and evicted with the slice. A point
-    bundle's decoded features (:meth:`get_point_features`) are kept
-    beside its bytes in the point cache the same way.
+    bundle is decoded into
+    :class:`~maps_spark.functions.pointpb.PointColumns` when it is
+    loaded, and the columns (:meth:`get_point_columns`) are kept beside
+    its bytes in the point cache.
 
     Cache keys embed the active build id, so a ``finalise_build``
-    manifest swap invalidates stale entries naturally; an LRU bound
+    manifest swap invalidates stale entries naturally. The build id is
+    re-read from ``manifest.json`` only when the file's (inode, mtime,
+    size) changes: every publish renames a new file into place
+    (:func:`maps_spark.sources.commit.write_json`), so a lookup costs
+    one ``stat``, not a JSON parse. An LRU bound
     (``max_slices``/``max_points``) caps memory. Serving deployments
     shard views across reader processes, so per-slice granularity is
     the right unit: a slice at low/mid zooms is a few MB; the z16
@@ -331,12 +337,21 @@ class TileReader:
         self.max_slices, self.max_points = max_slices, max_points
         self._slices: dict = OrderedDict()
         self._points: dict = OrderedDict()
+        self._manifest: tuple | None = None   # (stat signature, build id)
 
     def _build_id(self):
         try:
-            return read_manifest(self.root).get("build_id")
+            st = os.stat(f"{self.root}/manifest.json")
         except FileNotFoundError:
             return None
+        sig = (st.st_ino, st.st_mtime_ns, st.st_size)
+        if self._manifest is None or self._manifest[0] != sig:
+            try:
+                build = read_manifest(self.root).get("build_id")
+            except FileNotFoundError:
+                return None
+            self._manifest = (sig, build)
+        return self._manifest[1]
 
     @staticmethod
     def _lru_put(cache, key, value, cap):
@@ -385,13 +400,15 @@ class TileReader:
             entry[1] = mvt.decode_columns(entry[0])
         return entry[1]
 
-    def _point_entry(self, map_key: str) -> list:
-        """The cached ``[bytes or None, features or None]`` of a view."""
+    def _point_entry(self, map_key: str) -> tuple:
+        """The cached ``(bytes, columns)`` of a view's point bundle,
+        both None when it has none; decoded when loaded."""
+        from maps_spark.functions import pointpb
         key = (self._build_id(), map_key)
         if key not in self._points:
-            self._lru_put(self._points, key,
-                          [get_point_bytes(self.spark, self.root, map_key),
-                           None], self.max_points)
+            blob = get_point_bytes(self.spark, self.root, map_key)
+            cols = None if blob is None else pointpb.decode_features(blob)
+            self._lru_put(self._points, key, (blob, cols), self.max_points)
         else:
             self._points.move_to_end(key)
         return self._points[key]
@@ -399,15 +416,10 @@ class TileReader:
     def get_point_bytes(self, map_key: str) -> bytes | None:
         return self._point_entry(map_key)[0]
 
-    def get_point_features(self, map_key: str) -> list | None:
+    def get_point_columns(self, map_key: str):
         """The view's point bundle as
-        :func:`~maps_spark.functions.pointpb.decode_features` rows,
-        decoded on its first request, or None."""
-        from maps_spark.functions import pointpb
-        entry = self._point_entry(map_key)
-        if entry[0] is not None and entry[1] is None:
-            entry[1] = pointpb.decode_features(entry[0])
-        return entry[1]
+        :class:`~maps_spark.functions.pointpb.PointColumns`, or None."""
+        return self._point_entry(map_key)[1]
 
 
 def pyramid_invariant(spark: SparkSession, root: str,
@@ -479,10 +491,10 @@ def points_invariant(spark: SparkSession, root: str) -> DataFrame:
         for pdf in batches:
             out = {"mapKey": [], "n_locations": [], "total": []}
             for mk, blob in zip(pdf["mapKey"], pdf["features"]):
-                feats = decode_features(bytes(blob))
+                cols = decode_features(bytes(blob))
                 out["mapKey"].append(mk)
-                out["n_locations"].append(len(feats))
-                out["total"].append(int(sum(f[4] for f in feats)))
+                out["n_locations"].append(len(cols))
+                out["total"].append(int(cols.count.sum()))
             yield pd.DataFrame(out)
 
     return pts.mapInPandas(

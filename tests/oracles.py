@@ -1,13 +1,19 @@
 """Implementations the engine replaced, kept as test oracles.
 
 - Loops the vectorized serve path replaced: the dict-walking tile
-  filter, the dot-by-dot PNG renderers, the vertex-by-vertex
-  polygon-layer encoder and the per-cell hexagon ring. The first three
-  read :func:`maps_spark.functions.mvt.decode_tile`'s dict form and
-  must agree exactly with
+  filter, the point-by-point bundle projection, the per-pixel square
+  and hex binners, the dot-by-dot PNG renderers, the vertex-by-vertex
+  polygon-layer encoder and the per-cell hexagon ring. The tile filter
+  and the renderers read :func:`maps_spark.functions.mvt.decode_tile`'s
+  dict form and must agree exactly with
   :func:`maps_spark.operators.serving.filter_decoded_tile` and
-  :mod:`maps_spark.functions.png`'s renderers; the encoder must write
-  the bytes :func:`maps_spark.functions.mvt.encode_polygon_layer`
+  :mod:`maps_spark.functions.png`'s renderers; the point loop reads
+  the bundle's rows (:func:`point_rows`) and must agree with
+  :func:`maps_spark.operators.serving.points_to_tile`; the binners
+  read a ``{(px, py): total}`` dict and must agree with
+  :func:`maps_spark.operators.binning.square_bin_dict` and
+  :func:`~maps_spark.operators.binning.hex_bin_dict`; the encoder must
+  write the bytes :func:`maps_spark.functions.mvt.encode_polygon_layer`
   writes, and the rounded rings must equal
   :func:`maps_spark.operators.binning.hex_rings`.
 - The two-scan trend texts the one-scan SQL replaced: one aggregate per
@@ -24,7 +30,12 @@ from maps_spark.functions import tiles as T
 from maps_spark.functions.mvt import _encode_value, _tag, _varint, _zigzag
 from maps_spark.functions.png import STYLES, write_png
 from maps_spark.operators.binning import DEFAULT_HEX_PER_TILE, hex_params
-from maps_spark.operators.serving import TOTAL_KEY, _contains, _in_range
+from maps_spark.functions.pointpb import PB_BOR_REVERSE
+from maps_spark.operators.serving import TOTAL_KEY, _contains
+
+
+def _in_range(year: int, lo, hi) -> bool:
+    return (lo is None or year >= lo) and (hi is None or year <= hi)
 
 
 def _is_year(k) -> bool:
@@ -79,6 +90,102 @@ def filter_dict_tile(layers: dict, srs: str, z: int, x: int, y: int,
             final[pix] = d
         return final
     return dict(out_simple)
+
+
+def point_rows(cols) -> list[tuple[float, float, str, int, int]]:
+    """A bundle's :class:`~maps_spark.functions.pointpb.PointColumns`
+    as (lat, lng, basis-of-record name, year, count) rows."""
+    return list(zip(cols.lat.tolist(), cols.lng.tolist(),
+                    [PB_BOR_REVERSE[c] for c in cols.bor.tolist()],
+                    cols.year.tolist(), cols.count.tolist()))
+
+
+def points_to_tile_loop(features, srs: str, z: int, x: int, y: int,
+                        year_range=(None, None), bors=None,
+                        verbose: bool = False, tile_size: int = P.TILE_SIZE,
+                        buffer: int = T.DEFAULT_BUFFER):
+    """:func:`maps_spark.operators.serving.points_to_tile` one point at
+    a time over (lat, lng, bor, year, count) rows; returns
+    {(px, py): total} or the verbose dict."""
+    sch = P.schema_for(srs)
+    lo, hi = year_range
+    world = sch.num_x_tiles(z) * tile_size
+    world_y = sch.num_y_tiles(z) * tile_size
+    polar = P._norm(srs) in ("EPSG:3575", "EPSG:3031")
+    bors = {b.upper() for b in bors} if bors else None
+    out_verbose: dict = defaultdict(lambda: defaultdict(int))
+    out_simple: dict = defaultdict(int)
+    for lat, lng, bor, year, cnt in features:
+        if bors and bor.upper() not in bors:
+            continue
+        if year and not _in_range(year, lo, hi):
+            continue
+        if (lo is not None or hi is not None) and not year:
+            continue
+        if not bool(P.is_plottable(srs, lat, lng)):
+            continue
+        fgx, fgy = P.global_xy(srs, lat, lng, z, tile_size)
+        if polar and not (0 <= fgx < world and 0 <= fgy < world_y):
+            continue
+        gx, gy = int(math.floor(fgx)), int(math.floor(fgy))
+        if not _contains(sch, z, x, y, gx, gy, tile_size, buffer):
+            continue
+        lx = gx - x * tile_size
+        if sch.wrap_x and (sch.zz_tiles_horizontal > 1 or z > 0):
+            if x == 0 and gx >= world - buffer:
+                lx = gx - world
+            elif x == sch.num_x_tiles(z) - 1 and gx < buffer:
+                lx = gx + world - x * tile_size
+        ly = gy - y * tile_size
+        if verbose:
+            out_verbose[(lx, ly)][str(year)] += cnt
+        else:
+            out_simple[(lx, ly)] += cnt
+    if verbose:
+        return {pix: {**dict(c), TOTAL_KEY: sum(c.values())}
+                for pix, c in out_verbose.items()}
+    return dict(out_simple)
+
+
+def square_bin_loop(tile: dict, square_size: int = 16,
+                    tile_size: int = 512) -> dict:
+    """:func:`maps_spark.operators.binning.square_bin_dict` over a
+    {(px, py): total} dict, one pixel at a time."""
+    out: dict[tuple[int, int], int] = {}
+    for (px, py), total in tile.items():
+        if 0 <= px < tile_size and 0 <= py < tile_size:
+            cell = (px // square_size, py // square_size)
+            out[cell] = out.get(cell, 0) + total
+    return out
+
+
+def hex_bin_loop(tile: dict, z: int, x: int, y: int, tile_size: int = 512,
+                 min_hex_per_tile: int = DEFAULT_HEX_PER_TILE) -> dict:
+    """:func:`maps_spark.operators.binning.hex_bin_dict` over a
+    {(px, py): total} dict, one pixel at a time."""
+    p = hex_params(tile_size, min_hex_per_tile)
+    radius = p["radius"]
+    off_x = (x * tile_size) % (1.5 * p["hex_width"])
+    off_y = (y * tile_size) % p["hex_height"]
+    out: dict[tuple[int, int], int] = {}
+    for (px, py), total in tile.items():
+        xs = px + off_x
+        ys = py + off_y
+        qf = (2.0 / 3.0) * xs / radius
+        rf = ((-1.0 / 3.0) * xs + (math.sqrt(3.0) / 3.0) * ys) / radius
+        sf = -qf - rf
+        # half-away-from-zero, matching SQL round() (python round is
+        # banker's and would diverge on .5 ties)
+        rnd = lambda v: math.copysign(math.floor(abs(v) + 0.5), v)
+        rq, rr, rs = rnd(qf), rnd(rf), rnd(sf)
+        dq, dr, ds = abs(rq - qf), abs(rr - rf), abs(rs - sf)
+        if dq > dr and dq > ds:
+            rq = -rr - rs
+        elif dr > ds:
+            rr = -rq - rs
+        cell = (int(rq), int(rr))
+        out[cell] = out.get(cell, 0) + total
+    return out
 
 
 def _tile_totals(tile_bytes: bytes, tile_size: int) -> dict:

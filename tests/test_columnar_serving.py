@@ -1,18 +1,25 @@
 """The vectorized serve path against the loop oracles it replaced
-(``tests/oracles.py``): the columnar tile filter, the numpy PNG
-renderers and the polygon-layer encoder must return exactly what the
-loops return."""
+(``tests/oracles.py``): the columnar tile filter, the point-bundle
+projection, the square and hex binners, the numpy PNG renderers and
+the polygon-layer encoder must return exactly what the loops return.
+The point, binning and encoder cases are seeded and need no Spark."""
+
+import struct
 
 import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from maps_spark.functions import mvt, png
+from maps_spark.functions import mvt, png, pointpb
 from maps_spark.functions import projections as P
-from maps_spark.operators.serving import filter_decoded_tile
+from maps_spark.operators import binning
+from maps_spark.operators.serving import (filter_decoded_tile, pixel_dict,
+                                          points_to_tile)
 from tests.oracles import (encode_polygon_layer_loop, filter_dict_tile,
-                           render_density_png_loop, render_heat_png_loop)
+                           hex_bin_loop, point_rows, points_to_tile_loop,
+                           render_density_png_loop, render_heat_png_loop,
+                           square_bin_loop)
 
 TS, BUF = 512, 64
 LAYERS = ["OBSERVATION", "HUMAN_OBSERVATION", "PRESERVED_SPECIMEN",
@@ -59,8 +66,21 @@ def test_columnar_filter_matches_dict_oracle(layers, req):
     args = (req["srs"], req["z"], req["x"], req["y"])
     kw = dict(source=req["source"], year_range=req["year_range"],
               bors=req["bors"], verbose=req["verbose"])
-    assert filter_decoded_tile(cols, *args, **kw) == \
-        filter_dict_tile(layers, *args, **kw)
+    got = filter_decoded_tile(cols, *args, **kw)
+    if not req["verbose"]:
+        _check_pixel_arrays(got)
+        got = pixel_dict(got)
+    assert got == filter_dict_tile(layers, *args, **kw)
+
+
+def _check_pixel_arrays(tile) -> None:
+    """A (px, py, total) tile: int64 arrays, one entry per pixel in
+    (px, py) order."""
+    px, py, total = tile
+    assert all(a.dtype == np.int64 for a in tile)
+    assert len(px) == len(py) == len(total)
+    assert np.all(np.lexsort((py, px)) == np.arange(len(px)))
+    assert len(set(zip(px.tolist(), py.tolist()))) == len(px)
 
 
 def _dense_tile(rng, n: int, with_total: bool) -> bytes:
@@ -112,24 +132,156 @@ def test_numpy_renderers_match_loop_oracles(style, scale):
         assert png._MEMO.hits == 0
 
 
+def _bundle(features) -> bytes:
+    """PointFeatures bytes of (lat, lng, enum code, year, count) rows;
+    unlike ``pointpb.encode_features`` it writes any enum code."""
+    out = bytearray()
+    for lat, lng, code, year, count in features:
+        f = (b"\x09" + struct.pack("<d", lat) + b"\x11"
+             + struct.pack("<d", lng) + b"\x18" + pointpb._varint(code)
+             + b"\x20" + pointpb._varint(year)
+             + b"\x28" + pointpb._varint(count))
+        out += b"\x0a" + pointpb._varint(len(f)) + f
+    return bytes(out)
+
+
+def _random_bundle(rng, srs: str, n: int) -> bytes:
+    """Points spread over the world, bunched on the dateline, on the
+    polar canvas edge and past each projection's domain; years 0 and
+    1990-2020; every enum code and two codes the enum lacks."""
+    lat = rng.uniform(-90, 90, n)
+    lng = rng.uniform(-180, 180, n)
+    edge = rng.random(n) < 0.3
+    lng[edge] = np.clip(rng.choice([-180.0, 180.0], edge.sum())
+                        + rng.uniform(-2, 2, edge.sum()), -181.0, 181.0)
+    polar = rng.random(n) < 0.2
+    lat[polar] = {"EPSG:3575": rng.uniform(-1.5, 0.5, polar.sum()),
+                  "EPSG:3031": rng.uniform(-0.5, 1.5, polar.sum())}.get(
+        srs, rng.choice([-85.06, 85.05, 90.0, -90.0], polar.sum()))
+    codes = rng.choice(list(pointpb.PB_BOR.values()) + [11, 42], n)
+    years = rng.choice([0, 0, 1990, 2000, 2013, 2020], n)
+    counts = rng.choice([1, 2, 7, 10**6], n)
+    return _bundle(zip(lat.tolist(), lng.tolist(), codes.tolist(),
+                       years.tolist(), counts.tolist()))
+
+
+def test_points_to_tile_matches_point_loop():
+    """All four SRS, the tiles at x = 0 and x = max (the dateline wrap)
+    and a random one, year ranges with and without points of year 0,
+    mixed-case, unknown and empty basis-of-record filters, both output
+    shapes, and an empty bundle."""
+    rng = np.random.default_rng(2024)
+    bor_filters = [None, [], ["observation"], ["Human_Observation",
+                   "PRESERVED_SPECIMEN"], ["unknown"], ["NOT_A_BOR"],
+                   ["unknown", "FOSSIL_specimen", "bogus"]]
+    years = [(None, None), (2000, None), (None, 2000), (1990, 2013),
+             (0, 2020), (2021, None)]
+    for case in range(160):
+        srs = P.SRS_ALL[case % 4]
+        sch = P.schema_for(srs)
+        z = int(rng.integers(0, 4))
+        nx, ny = sch.num_x_tiles(z), sch.num_y_tiles(z)
+        x = [0, nx - 1, int(rng.integers(nx))][case // 4 % 3]
+        y = int(rng.integers(ny))
+        blob = b"" if case % 23 == 0 else \
+            _random_bundle(rng, srs, int(rng.integers(1, 120)))
+        cols = pointpb.decode_features(blob)
+        kw = dict(year_range=years[case % len(years)],
+                  bors=bor_filters[case % len(bor_filters)])
+        rows = point_rows(cols)
+        got = points_to_tile(cols, srs, z, x, y, **kw)
+        _check_pixel_arrays(got)
+        assert pixel_dict(got) == \
+            points_to_tile_loop(rows, srs, z, x, y, **kw), (case, srs)
+        assert points_to_tile(cols, srs, z, x, y, verbose=True, **kw) == \
+            points_to_tile_loop(rows, srs, z, x, y, verbose=True, **kw)
+
+
+def test_unknown_bor_code_reads_as_unknown():
+    cols = pointpb.decode_features(_bundle([(10.0, 20.0, 42, 2000, 3),
+                                            (10.0, 20.0, 4, 2000, 5)]))
+    assert cols.bor.tolist() == [0, 4]
+    for bors, want in ((["Unknown"], 3), (["OBSERVATION"], 5),
+                       (["bogus"], 0), (None, 8)):
+        _, _, total = points_to_tile(cols, "EPSG:3857", 0, 0, 0, bors=bors)
+        assert total.sum() == want, bors
+
+
+def _binning_tile(rng, tile_size: int = 512, buffer: int = 64):
+    """A served (px, py, total) tile: the buffer-edge pixels, random
+    pixels of the buffered tile, and pixels where the cube rounding of
+    tile 0/0/0 or 3/5/2 meets a tie (a .5 fraction, or two equal
+    rounding distances)."""
+    lo, hi = -buffer, tile_size + buffer
+    edges = [lo, lo + 1, -1, 0, 1, tile_size - 1, tile_size,
+             tile_size + 1, hi - 1, hi]
+    px, py = np.meshgrid(np.arange(lo, hi + 1), np.arange(lo, hi + 1))
+    px, py = px.ravel(), py.ravel()
+    ties = np.zeros(len(px), bool)
+    for x, y in ((0, 0), (5, 2)):
+        p = binning.hex_params(tile_size)
+        xs = px + (x * tile_size) % (1.5 * p["hex_width"])
+        ys = py + (y * tile_size) % p["hex_height"]
+        qf = (2.0 / 3.0) * xs / p["radius"]
+        rf = ((-1.0 / 3.0) * xs + (np.sqrt(3.0) / 3.0) * ys) / p["radius"]
+        sf = -qf - rf
+        d = [np.abs(np.round(v) - v) for v in (qf, rf, sf)]
+        ties |= np.isclose(d[0], 0.5) | np.isclose(d[1], 0.5) \
+            | np.isclose(d[0], d[1]) | np.isclose(d[1], d[2]) \
+            | np.isclose(d[0], d[2])
+    pick = np.flatnonzero(ties)
+    pick = rng.choice(pick, min(len(pick), 1500), replace=False)
+    cells = set(zip(px[pick].tolist(), py[pick].tolist()))
+    cells |= {(a, b) for a in edges for b in edges}
+    cells |= set(zip(rng.integers(lo, hi + 1, 300).tolist(),
+                     rng.integers(lo, hi + 1, 300).tolist()))
+    tile = {c: int(rng.choice([1, 3, 2**20, 2**40])) for c in cells}
+    px, py = np.array(sorted(tile), np.int64).T
+    total = np.array([tile[c] for c in sorted(tile)], np.int64)
+    return tile, (px, py, total)
+
+
+def test_binning_matches_dict_binners():
+    """Square and hex cells and totals of the array binners equal the
+    per-pixel loops, in sorted cell order, on buffer-edge pixels and
+    cube-rounding ties; an empty tile bins to no cells."""
+    rng = np.random.default_rng(11)
+
+    def cells(a, b, total):
+        assert np.all(np.lexsort((b, a)) == np.arange(len(a)))
+        return dict(zip(zip(a.tolist(), b.tolist()), total.tolist()))
+
+    for z, x, y, per_tile, size in ((0, 0, 0, 51, 16), (3, 5, 2, 51, 64),
+                                    (6, 63, 17, 17, 7), (2, 1, 3, 100, 16)):
+        tile, arrays = _binning_tile(rng)
+        got = binning.hex_bin_dict(*arrays, z, x, y, 512, per_tile)
+        assert cells(*got) == hex_bin_loop(tile, z, x, y, 512, per_tile)
+        got = binning.square_bin_dict(*arrays, size, 512)
+        assert cells(*got) == square_bin_loop(tile, size, 512)
+    empty = tuple(np.zeros(0, np.int64) for _ in range(3))
+    assert all(len(a) == 0 for a in binning.hex_bin_dict(*empty, 0, 0, 0))
+    assert all(len(a) == 0 for a in binning.square_bin_dict(*empty))
+
+
 def test_polygon_encoder_matches_loop_oracle():
-    """Seeded random layers: rings of 0-9 vertices (some closed, some
-    degenerate) with coordinates from tile pixels to 2^40, whose varints
-    run from one byte to several, and totals of every value type."""
+    """Seeded random layers: 0-9 rings of 0-9 vertices (some closed,
+    some degenerate) with coordinates from tile pixels to 2^40, whose
+    varints run from one byte to several, and totals that repeat, are
+    negative or reach 2^14 and beyond (multi-byte varints)."""
     rng = np.random.default_rng(17)
-    values = [0, 1, 127, 128, 16383, 16384, 2**35, -1, -300, 2.5, True,
-              "n"]
+    values = [0, 1, 5, 5, 127, 128, 16383, 16384, 2**20, 2**35, -1, -300]
     for _ in range(1500):
-        feats = []
-        for _ in range(int(rng.integers(0, 10))):
-            span = int(rng.choice([8, TS + BUF, 20000, 2**40]))
-            n = int(rng.integers(0, 10))
-            ring = [(int(x), int(y))
-                    for x, y in rng.integers(-span, span + 1, (n, 2))]
-            if ring and rng.random() < 0.3:
-                ring.append(ring[0])
-            key = str(rng.choice(["total", "total", "extra"]))
-            feats.append((ring, {key: values[rng.integers(len(values))]}))
+        n, k = int(rng.integers(0, 10)), int(rng.integers(0, 10))
+        span = int(rng.choice([8, TS + BUF, 20000, 2**40]))
+        rings = rng.integers(-span, span + 1, (n, k, 2))
+        if k > 1:
+            shut = rng.random(n) < 0.3
+            rings[shut, -1] = rings[shut, 0]
+        totals = rng.choice(values, n)
         extent = int(rng.choice([TS, 4096]))
-        assert mvt.encode_polygon_layer("occurrence", feats, extent) == \
+        feats = [(ring, {"total": t}) for ring, t in
+                 zip([list(map(tuple, r)) for r in rings.tolist()],
+                     totals.tolist())]
+        assert mvt.encode_polygon_layer("occurrence", rings, totals,
+                                        extent) == \
             encode_polygon_layer_loop("occurrence", feats, extent)

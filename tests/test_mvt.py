@@ -47,12 +47,15 @@ def test_empty_tile():
 
 class TestPolygonCodec:
     def test_polygon_roundtrip(self):
+        import numpy as np
+
         from maps_spark.functions import mvt
         hexagon = [(10, 0), (5, 8), (-5, 8), (-10, 0), (-5, -8), (5, -8)]
         square = [(0, 0), (16, 0), (16, 16), (0, 16)]
-        data = mvt.encode_polygon_layer(
-            "occurrence", [(hexagon, {"total": 42}),
-                           (square, {"total": 7})])
+        data = mvt.encode_polygon_layer("occurrence", np.array([hexagon]),
+                                        [42])
+        data += mvt.encode_polygon_layer("occurrence", np.array([square]),
+                                         [7])
         out = mvt.decode_polygon_tile(data)
         assert set(out) == {"occurrence"}
         polys = out["occurrence"]
@@ -61,14 +64,18 @@ class TestPolygonCodec:
         assert polys[1] == (square, {"total": 7})
 
     def test_closed_ring_input_normalized(self):
+        import numpy as np
+
         from maps_spark.functions import mvt
         ring = [(0, 0), (8, 0), (8, 8), (0, 8), (0, 0)]  # pre-closed
-        data = mvt.encode_polygon_layer("occurrence", [(ring, {"total": 1})])
+        data = mvt.encode_polygon_layer("occurrence", np.array([ring]), [1])
         (got, attrs), = mvt.decode_polygon_tile(data)["occurrence"]
         assert got == ring[:-1]
 
     def test_degenerate_rings_skipped(self):
+        import numpy as np
+
         from maps_spark.functions import mvt
         data = mvt.encode_polygon_layer(
-            "occurrence", [([(0, 0), (1, 1)], {"total": 1})])
+            "occurrence", np.array([[(0, 0), (1, 1)]]), [1])
         assert mvt.decode_polygon_tile(data).get("occurrence", []) == []

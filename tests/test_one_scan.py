@@ -15,8 +15,8 @@ from maps_spark.functions import mvt
 from maps_spark.operators import binning
 from maps_spark.operators.regression import trend_sql
 from maps_spark.sql.oracle import hex_trend_body
-from tests.oracles import (hex_polygon, hex_trend_body_two_scan,
-                           trend_sql_two_scan)
+from tests.oracles import (encode_polygon_layer_loop, hex_polygon,
+                           hex_trend_body_two_scan, trend_sql_two_scan)
 
 HEX_TILES = ((0, 0, 0), (2, 1, 3), (5, 17, 9))   # (z, x, y)
 SPAN = 640                                        # pixels -64 .. 575
@@ -31,7 +31,7 @@ def _grid_ids(con, z, x, y) -> dict:
 
 def test_hex_assign_agrees_on_every_pixel(spark, monkeypatch):
     """Every pixel of three buffered tiles gets the same hex id from
-    Spark, DuckDB and the Python twin ``hex_bin_dict``; Spark computes
+    Spark, DuckDB and the numpy twin ``hex_bin_dict``; Spark computes
     the fractional coordinates in double, not decimal."""
     import pyspark.sql.functions as F
     con = duckdb.connect()
@@ -49,8 +49,7 @@ def test_hex_assign_agrees_on_every_pixel(spark, monkeypatch):
     # cell's sum carries its pixel count and the sum of its pixel indices
     k = np.arange(SPAN * SPAN, dtype=np.int64)
     weight = (k << 32) | 1
-    tile = dict(zip(zip((k // SPAN - 64).tolist(), (k % SPAN - 64).tolist()),
-                    weight.tolist()))
+    tile = (k // SPAN - 64, k % SPAN - 64, weight)
     for i, (z, x, y) in enumerate(HEX_TILES):
         dq, dr = _grid_ids(con, z, x, y).values()
         assert np.array_equal(got[f"q{i}"].to_numpy(), dq), (z, x, y)
@@ -61,9 +60,10 @@ def test_hex_assign_agrees_on_every_pixel(spark, monkeypatch):
         sums = np.zeros(len(codes), np.int64)
         np.add.at(sums, at, weight)
         cq, cr = np.divmod(codes, SPAN)
-        want = dict(zip(zip(cq.tolist(), (cr - SPAN // 2).tolist()),
-                        sums.tolist()))
-        assert binning.hex_bin_dict(tile, z, x, y) == want, (z, x, y)
+        q, r, total = binning.hex_bin_dict(*tile, z, x, y)
+        assert np.array_equal(q, cq), (z, x, y)
+        assert np.array_equal(r, cr - SPAN // 2), (z, x, y)
+        assert np.array_equal(total, sums), (z, x, y)
 
     # the analysed type, which is what typeof() reports (no job needed)
     monkeypatch.setattr(binning, "cube_round_sql", lambda qf, rf: (qf, rf))
@@ -205,10 +205,13 @@ def test_hex_rings_match_vertex_loop():
         want = [[(int(round(vx)), int(round(vy))) for vx, vy in
                  hex_polygon(q, r, z, x, y, 512, per_tile)]
                 for q, r in cells]
-        got = binning.hex_rings(cells, z, x, y, 512, per_tile)
-        assert [[tuple(v) for v in ring] for ring in got] == want
-        feats = [(ring, {"total": i + 1}) for i, ring in enumerate(got)]
-        assert mvt.encode_polygon_layer("occurrence", feats) == \
-            mvt.encode_polygon_layer(
+        q, r = (np.array(c, np.int64) for c in zip(*cells)) if cells \
+            else (np.zeros(0, np.int64),) * 2
+        got = binning.hex_rings(q, r, z, x, y, 512, per_tile)
+        assert got.dtype == np.int64 and got.shape == (len(cells), 7, 2)
+        assert [[tuple(v) for v in ring] for ring in got.tolist()] == want
+        totals = np.arange(1, len(cells) + 1)
+        assert mvt.encode_polygon_layer("occurrence", got, totals) == \
+            encode_polygon_layer_loop(
                 "occurrence",
                 [(ring, {"total": i + 1}) for i, ring in enumerate(want)])

@@ -75,9 +75,10 @@ point_rows = st.lists(
 @given(point_rows)
 def test_pointpb_roundtrip(rows):
     from maps_spark.functions import pointpb
+    from tests.oracles import point_rows
 
     data = pointpb.encode_features(rows)
-    decoded = pointpb.decode_features(data)
+    decoded = point_rows(pointpb.decode_features(data))
     assert sorted(decoded) == sorted(rows)
 
 

@@ -270,11 +270,11 @@ def test_point_pyramid_equivalence(keyed):
     the same (borYear -> count) totals as the pyramid path."""
     view = keyed.where("mapKey = '0:0'")
     blob = PY.point_blobs(view).collect()[0].features
-    feats = pointpb.decode_features(blob)
     from collections import Counter
     from maps_spark.sql.dual import BOR_CODE
+    from tests.oracles import point_rows
     point_totals = Counter()
-    for lat, lng, bor, year, cnt in feats:
+    for lat, lng, bor, year, cnt in point_rows(pointpb.decode_features(blob)):
         point_totals[year * 100 + BOR_CODE[bor]] += cnt
     pix = PY.pixel_table(view, "EPSG:4326", 0)
     pyr_totals = {r.borYear: r.c for r in

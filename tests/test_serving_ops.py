@@ -73,8 +73,8 @@ class TestPointModeServing:
         view = "3:org-3"
         small = keyed.where(F.col("mapKey") == view)
         blob = PY.point_blobs(small).collect()[0].features
-        got = SV.points_to_tile(pointpb.decode_features(bytes(blob)),
-                                "EPSG:3857", 1, 0, 0)
+        got = SV.pixel_dict(SV.points_to_tile(
+            pointpb.decode_features(bytes(blob)), "EPSG:3857", 1, 0, 0))
         expect = {(r.px, r.py): r.total
                   for r in SV.density_tile(keyed, view, "EPSG:3857",
                                            1, 0, 0).collect()}
@@ -157,21 +157,27 @@ class TestSearchPredicate:
 
 class TestServeTimeBinning:
     def test_dict_binning_matches_spark_binning(self, spark, keyed):
-        """Serve-time (dict) hex/square binning must equal the
-        Spark-side binning of the same served tile."""
+        """Serve-time hex/square binning (numpy, in memory) must equal
+        the Spark-side binning of the same served tile."""
+        import numpy as np
+
         from maps_spark.operators import binning as B
         from maps_spark.operators import serving as SV
 
         tile_df = SV.density_tile(keyed, "0:0", "EPSG:3857", 2, 1, 1)
-        tile = {(r.px, r.py): r.total for r in tile_df.collect()}
+        tile = tuple(np.array(c, np.int64) for c in
+                     zip(*[(r.px, r.py, r.total) for r in tile_df.collect()]))
+
+        def cells(a, b, total):
+            return dict(zip(zip(a.tolist(), b.tolist()), total.tolist()))
 
         sq_spark = {(r.cellX, r.cellY): r.total
                     for r in B.square_bin(tile_df).collect()}
-        assert B.square_bin_dict(tile) == sq_spark
+        assert cells(*B.square_bin_dict(*tile)) == sq_spark
 
         hx_spark = {(r.hexQ, r.hexR): r.total
                     for r in B.hex_bin(tile_df, 2, 1, 1).collect()}
-        assert B.hex_bin_dict(tile, 2, 1, 1) == hx_spark
+        assert cells(*B.hex_bin_dict(*tile, 2, 1, 1)) == hx_spark
 
 
 class TestPolarAdhoc:
@@ -239,6 +245,8 @@ class TestPolarPointTileParity:
         import numpy as np
 
         from maps_spark.functions import projections as P
+        from maps_spark.functions.pointpb import (decode_features,
+                                                  encode_features)
         from maps_spark.operators.serving import points_to_tile
 
         z, ts = 0, 512
@@ -255,15 +263,19 @@ class TestPolarPointTileParity:
 
         feats = [(off[0], off[1], "OBSERVATION", 2000, 3),
                  (on[0], on[1], "OBSERVATION", 2000, 5)]
-        out = points_to_tile(feats, "EPSG:3575", z, 0, 0)
-        assert sum(out.values()) == 5  # only the on-canvas record
+        _, _, total = points_to_tile(
+            decode_features(encode_features(feats)), "EPSG:3575", z, 0, 0)
+        assert total.sum() == 5  # only the on-canvas record
 
     def test_mercator_point_path_unaffected(self):
+        from maps_spark.functions.pointpb import (decode_features,
+                                                  encode_features)
         from maps_spark.operators.serving import points_to_tile
 
         feats = [(45.0, 10.0, "OBSERVATION", 2000, 2)]
-        out = points_to_tile(feats, "EPSG:3857", 0, 0, 0)
-        assert sum(out.values()) == 2
+        _, _, total = points_to_tile(
+            decode_features(encode_features(feats)), "EPSG:3857", 0, 0, 0)
+        assert total.sum() == 2
 
 
 class TestBinnedServing:

@@ -3,11 +3,16 @@ YearFilteringTest.java:40-67 analogs) — pure Python, no Spark session."""
 
 from maps_spark.functions import mvt
 from maps_spark.operators.serving import (apply_country_mask,
-                                          filter_decoded_tile)
+                                          filter_decoded_tile, pixel_dict)
 
 
 def _decoded(features_by_layer):
     return mvt.decode_columns(mvt.encode_tile(features_by_layer, extent=512))
+
+
+def _served(*args, **kw) -> dict:
+    """:func:`filter_decoded_tile`'s (px, py, total) as a dict."""
+    return pixel_dict(filter_decoded_tile(*args, **kw))
 
 
 class TestYearFiltering:
@@ -21,18 +26,18 @@ class TestYearFiltering:
         unfiltered.verbose[y]."""
         dec = _decoded(self.LAYERS)
         full = filter_decoded_tile(dec, "EPSG:3857", 0, 0, 0, verbose=True)
-        only_2013 = filter_decoded_tile(dec, "EPSG:3857", 0, 0, 0,
-                                        year_range=(2013, 2013))
+        only_2013 = _served(dec, "EPSG:3857", 0, 0, 0,
+                            year_range=(2013, 2013))
         for pix, total in only_2013.items():
             assert total == full[pix]["2013"]
 
     def test_unbounded_sides(self):
         dec = _decoded(self.LAYERS)
-        le_2012 = filter_decoded_tile(dec, "EPSG:3857", 0, 0, 0,
-                                      year_range=(None, 2012))
+        le_2012 = _served(dec, "EPSG:3857", 0, 0, 0,
+                          year_range=(None, 2012))
         assert le_2012 == {(10, 10): 3}
-        ge_2013 = filter_decoded_tile(dec, "EPSG:3857", 0, 0, 0,
-                                      year_range=(2013, None))
+        ge_2013 = _served(dec, "EPSG:3857", 0, 0, 0,
+                          year_range=(2013, None))
         assert ge_2013 == {(10, 10): 5, (20, 20): 7}
 
     def test_verbose_total_is_sum_of_years(self):
@@ -50,13 +55,13 @@ class TestBorFiltering:
     }
 
     def test_layer_filter(self):
-        got = filter_decoded_tile(_decoded(self.LAYERS), "EPSG:3857",
-                                  0, 0, 0, bors=["PRESERVED_SPECIMEN"])
+        got = _served(_decoded(self.LAYERS), "EPSG:3857",
+                      0, 0, 0, bors=["PRESERVED_SPECIMEN"])
         assert got == {(10, 10): 11}
 
     def test_layers_merge_per_pixel(self):
-        got = filter_decoded_tile(_decoded(self.LAYERS), "EPSG:3857",
-                                  0, 0, 0)
+        got = _served(_decoded(self.LAYERS), "EPSG:3857",
+                      0, 0, 0)
         assert got == {(10, 10): 13}
 
 
@@ -65,15 +70,15 @@ class TestDatelineAndBuffer:
         """A feature near the east world edge (stored on the last tile)
         must serve on tile x=0 at negative local x (Tiles.java:55-74)."""
         dec = _decoded({"OBSERVATION": [(510, 100, {"2000": 1})]})
-        got = filter_decoded_tile(dec, "EPSG:3857", 1, 0, 0,
-                                  source=(1, 0))  # stored tile x=1, z=1
+        got = _served(dec, "EPSG:3857", 1, 0, 0,
+                      source=(1, 0))  # stored tile x=1, z=1
         # global x = 1*512+510 = 1022 >= world(1024)-64 -> lx = -2
         assert got == {(-2, 100): 1}
 
     def test_west_edge_feature_wraps_into_east_tile_buffer(self):
         dec = _decoded({"OBSERVATION": [(2, 100, {"2000": 1})]})
-        got = filter_decoded_tile(dec, "EPSG:3857", 1, 1, 0,
-                                  source=(0, 0))
+        got = _served(dec, "EPSG:3857", 1, 1, 0,
+                      source=(0, 0))
         # global x=2 < buffer -> lx = 2 + 1024 - 512 = 514
         assert got == {(514, 100): 1}
 
@@ -81,8 +86,8 @@ class TestDatelineAndBuffer:
         dec = _decoded({"OBSERVATION": [(200, 200, {"2000": 1})]})
         # feature is on tile (0,0); requesting (1,0) at z1: global x=200
         # is 312px west of tile 1's buffered range -> dropped
-        got = filter_decoded_tile(dec, "EPSG:3857", 1, 1, 0,
-                                  source=(0, 0))
+        got = _served(dec, "EPSG:3857", 1, 1, 0,
+                      source=(0, 0))
         assert got == {}
 
 

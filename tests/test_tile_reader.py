@@ -143,6 +143,38 @@ class TestTileReader:
         reader.get_tile_bytes("0:0", "EPSG:3857", 0, 0, 0)
         assert len(reader._slices) == 1  # same key, no reload
 
+    def test_swap_to_another_build_reloads(self, spark, store):
+        """A manifest swap to a different build reloads the slice and
+        the point bundle under the new build id; without a swap the
+        manifest is not parsed again."""
+        import shutil
+        from unittest import mock
+
+        from maps_spark.sources import commit
+        from maps_spark.sources import tile_store as TS
+        reader = TS.TileReader(spark, store)
+        small_key = TS.read_points(spark, store).select("mapKey").first()[0]
+        first = reader.get_tile_bytes("0:0", "EPSG:3857", 0, 0, 0)
+        points = reader.get_point_columns(small_key)
+        with mock.patch.object(TS, "read_manifest",
+                               side_effect=AssertionError("parsed")):
+            assert reader.get_tile_bytes("0:0", "EPSG:3857", 0, 0, 0) \
+                == first
+        manifest = TS.read_manifest(store)
+        old = manifest["build_id"]
+        new = old[:-3] + f"{(int(old[-3:]) + 1) % 1000:03d}"
+        shutil.copytree(f"{store}/builds/{old}", f"{store}/builds/{new}")
+        try:
+            TS.pin_build(store, new)
+            assert reader.get_tile_bytes("0:0", "EPSG:3857", 0, 0, 0) \
+                == first
+            assert {k[0] for k in reader._slices} == {old, new}
+            assert reader.get_point_columns(small_key) is not points
+            assert {k[0] for k in reader._points} == {old, new}
+        finally:
+            commit.write_json(f"{store}/manifest.json", manifest)
+            shutil.rmtree(f"{store}/builds/{new}")
+
 
 def test_tile_diff_between_builds(spark, tmp_path):
     from maps_spark.sources import tile_store as TS
